@@ -2,9 +2,18 @@
 
 North-star extension (SURVEY.md §7.4). Images/audio/video ride through
 the engine as ``binary`` columns with a struct of metadata; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas
-functions over ``mapInPandas`` so the heavy per-item work happens
-executor-side in columnar batches, never row-at-a-time.
+feature-extract / resize run executor-side in Arrow columnar batches.
+
+:func:`_payload_map` is the one JVM↔pandas crossing for every
+one-row-per-payload kernel: a kernel supplies only ``fn(payload)``,
+returning a tuple of its non-id fields or None for an all-null row (a
+NULL payload is an all-null row without calling ``fn``). The adapter
+passes ``media_id`` and row order through and derives each column's
+nullable pandas dtype from the output StructType (Int→Int32,
+Long→Int64, Double→Float64, String/Binary→object), so a missing value
+reaches SQL as NULL, never NaN. Only :func:`video_frame_stats_batch`,
+which emits several rows per payload, keeps its own ``mapInPandas``.
+Test corpora are planted through :func:`_plant` the same way.
 
 Codecs available in this container (no PIL/ffmpeg):
 
@@ -27,6 +36,7 @@ stub-scan form for header-parse corpora.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import struct
 import zlib
@@ -38,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import spread_partitions
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -85,6 +97,84 @@ HEADER_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType(), True),
     ]
 )
+
+
+# --------------------------------------------------------------------------
+# the one JVM↔pandas crossing: payload kernels and corpus planters
+# --------------------------------------------------------------------------
+
+_PANDAS_DTYPES = {T.IntegerType: "Int32", T.LongType: "Int64", T.DoubleType: "Float64"}
+
+
+def _payload_map(
+    df: DataFrame, schema: T.StructType, fn: Callable[[bytes], tuple | None]
+) -> DataFrame:
+    """Run a one-row-per-payload kernel over ``(media_id, payload)``.
+
+    ``schema`` is ``media_id`` followed by the kernel's fields. Arrow
+    hands each partition to Python in columnar batches; ``fn(payload)``
+    runs once per non-NULL payload and returns a tuple of the non-id
+    fields, or None for an all-null row. ``media_id`` and row order pass
+    through, and each field's nullable pandas dtype comes from its
+    StructType (see the module docstring), so None crosses as NULL."""
+    fields = schema.fields[1:]
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType)) for f in fields]
+    null = (None,) * len(fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [null if p is None else (fn(p) or null) for p in pdf["payload"]]
+            cols = list(zip(*rows)) if rows else [()] * len(fields)
+            out = {"media_id": pdf["media_id"]}
+            for f, dt, col in zip(fields, dtypes, cols):
+                out[f.name] = pd.array(col, dtype=dt) if dt else list(col)
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(run, schema)
+
+
+def _media_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """The planters' id list: ``id_col`` cast to ``media_id`` long."""
+    return df.select(F.col(id_col).cast("long").alias("media_id"))
+
+
+def _with_copies(ids: DataFrame, every: int, *offsets: int) -> DataFrame:
+    """``ids`` plus, for every ``every``-th id, one copy ``id + offset``
+    per offset — the planted near-duplicate convention."""
+    dup = ids.filter(F.col("media_id") % every == 0)
+    for off in offsets:
+        ids = ids.unionByName(dup.select((F.col("media_id") + off).alias("media_id")))
+    return ids
+
+
+def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """Hash-repartition a tiny id column into ``spread_partitions``
+    partitions before payload generation, so the expensive codec work —
+    and every decode stage pipelined on top of it — spreads across all
+    cores instead of inheriting the source's single row-group task."""
+    return df.repartition(spread_partitions(df.sparkSession), F.col(id_col))
+
+
+def _plant(ids: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``(media_id)`` → ``(media_id, payload)`` with payload =
+    ``make(media_id)``, generated executor-side by an Arrow-batched
+    pandas UDF."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("binary")
+    def _gen(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda i: make(int(i)))
+
+    return ids.select("media_id", _gen(F.col("media_id")).alias("payload"))
+
+
+def _mix31(data) -> int:
+    """Order-sensitive checksum ``acc = (acc*31 + b) mod 2^31`` over a
+    byte sequence."""
+    acc = 0
+    for b in data:
+        acc = (acc * 31 + b) % 2147483648
+    return acc
 
 
 # --------------------------------------------------------------------------
@@ -535,13 +625,6 @@ def encode_jpeg_gray(width: int, height: int, pixels: bytes) -> bytes:
     )
     sos = seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
     return b"\xff\xd8" + dqt + sof0 + dht + sos + scan + b"\xff\xd9"
-
-
-def _extend(amp: int, size: int) -> int:
-    """Inverse of JPEG magnitude coding."""
-    if size == 0:
-        return 0
-    return amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
 
 
 _HUFF_LUT_CACHE: dict[bytes, "object"] = {}
@@ -1162,15 +1245,11 @@ def _stub_decode(payload: bytes | None) -> tuple[int | None, int | None]:
     return (n % 640) + 1, ((n * 7) % 480) + 1
 
 
-def decode_image_batch(
-    df: DataFrame, *, codec: str = "stub", batch_hint_mb: int = 64
-) -> DataFrame:
-    """Decode payloads to per-item metadata via ``mapInPandas``.
-
-    Arrow moves each partition to Python in columnar batches; the udf
-    iterates batches, never rows. ``repartition`` upstream controls
-    batch memory (payloads are large — size partitions so a batch of
-    them fits executor memory; see SURVEY.md §7.5.3).
+def decode_image_batch(df: DataFrame, *, codec: str = "stub") -> DataFrame:
+    """Decode payloads to per-item metadata, one row per payload
+    (:func:`_payload_map`). ``repartition`` upstream controls batch
+    memory (payloads are large — size partitions so a batch of them
+    fits executor memory; see SURVEY.md §7.5.3).
 
     ``codec="headers"`` parses REAL PNG/JPEG/GIF container bytes
     (format + dimensions, see :func:`parse_image_header`) and returns
@@ -1182,52 +1261,15 @@ def decode_image_batch(
     """
     if codec == "raster":
 
-        def raster_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import hashlib
+        def raster(p: bytes) -> tuple:
+            w, h, pix = decode_raster(p)
+            return w, h, len(p), hashlib.md5(pix).hexdigest()
 
-            for pdf in batches:
-                ws, hs, cks = [], [], []
-                for p in pdf["payload"]:
-                    decoded = decode_raster(p)
-                    if decoded is None:
-                        ws.append(None); hs.append(None); cks.append(None)
-                    else:
-                        w, h, pix = decoded
-                        ws.append(w); hs.append(h)
-                        cks.append(hashlib.md5(pix).hexdigest())
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "width": pd.array(ws, dtype="Int32"),
-                        "height": pd.array(hs, dtype="Int32"),
-                        "n_bytes": [
-                            len(p) if p is not None else None
-                            for p in pdf["payload"]
-                        ],
-                        "checksum": cks,
-                    }
-                )
-
-        return df.mapInPandas(raster_fn, DECODED_SCHEMA)
+        return _payload_map(df, DECODED_SCHEMA, raster)
     if codec == "headers":
-
-        def parse_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                parsed = [parse_image_header(p) for p in pdf["payload"]]
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "fmt": [p[0] for p in parsed],
-                        "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                        "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                        "n_bytes": [
-                            len(p) if p is not None else None
-                            for p in pdf["payload"]
-                        ],
-                    }
-                )
-
-        return df.mapInPandas(parse_fn, HEADER_SCHEMA)
+        return _payload_map(
+            df, HEADER_SCHEMA, lambda p: (*parse_image_header(p), len(p))
+        )
     if codec != "stub":
         raise NotImplementedError(
             f"codec {codec!r}: available codecs are 'raster' (true "
@@ -1235,55 +1277,17 @@ def decode_image_batch(
             "(PNG/JPEG/GIF header parse), and 'stub'; other formats "
             "need an image library not present in this container"
         )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            dims = [_stub_decode(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(
-                        [d[0] for d in dims], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [d[1] for d in dims], dtype="Int32"
-                    ),
-                    "n_bytes": [
-                        len(p) if p is not None else None for p in pdf["payload"]
-                    ],
-                    "checksum": [
-                        hashlib.md5(p).hexdigest() if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(fn, DECODED_SCHEMA)
+    return _payload_map(
+        df,
+        DECODED_SCHEMA,
+        lambda p: (*_stub_decode(p), len(p), hashlib.md5(p).hexdigest()),
+    )
 
 
 def decode_media_batch(df: DataFrame) -> DataFrame:
-    """Full-spectrum header decode (images + WAV + MP4) via
-    ``mapInPandas`` — same batch shape as :func:`decode_image_batch`,
-    wider metadata schema."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_media_header(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "fmt": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.array([p[3] for p in parsed], dtype="Int32"),
-                    "channels": pd.array([p[4] for p in parsed], dtype="Int32"),
-                    "duration_ms": pd.array([p[5] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(fn, MEDIA_HEADER_SCHEMA)
+    """Full-spectrum header decode (images + WAV + MP4) — same one row
+    per payload as :func:`decode_image_batch`, wider metadata schema."""
+    return _payload_map(df, MEDIA_HEADER_SCHEMA, parse_media_header)
 
 
 def plant_media_payloads(df: DataFrame, id_col: str) -> DataFrame:
@@ -1296,27 +1300,19 @@ def plant_media_payloads(df: DataFrame, id_col: str) -> DataFrame:
                 duration_ms = (id % 10 + 1) * 100
         mp4:    duration_ms = (id % 20 + 1) * 500
     """
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            m = i % 5
-            if m < 3:
-                enc = (encode_png, encode_jpeg, encode_gif)[m]
-                return enc(i % 64 + 1, (i * 7) % 48 + 1)
-            if m == 3:
-                sr = 8000 + (i % 4) * 4000
-                dur_ms = (i % 10 + 1) * 100
-                return encode_wav(sr, sr * dur_ms // 1000)
-            return encode_mp4((i % 20 + 1) * 500)
+    def make(i: int) -> bytes:
+        m = i % 5
+        if m < 3:
+            enc = (encode_png, encode_jpeg, encode_gif)[m]
+            return enc(i % 64 + 1, (i * 7) % 48 + 1)
+        if m == 3:
+            sr = 8000 + (i % 4) * 4000
+            dur_ms = (i % 10 + 1) * 100
+            return encode_wav(sr, sr * dur_ms // 1000)
+        return encode_mp4((i % 20 + 1) * 500)
 
-        return ids.map(lambda i: make(int(i)))
-
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _gen(F.col(id_col)).alias("payload"),
-    )
+    return _plant(_media_ids(df, id_col), make)
 
 
 def plant_image_payloads(df: DataFrame, id_col: str) -> DataFrame:
@@ -1329,18 +1325,10 @@ def plant_image_payloads(df: DataFrame, id_col: str) -> DataFrame:
 
     Generation runs executor-side as an Arrow-batched pandas UDF.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        encoders = (encode_png, encode_jpeg, encode_gif)
-        return ids.map(
-            lambda i: encoders[int(i) % 3](int(i) % 64 + 1, (int(i) * 7) % 48 + 1)
-        )
-
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _gen(F.col(id_col)).alias("payload"),
+    encoders = (encode_png, encode_jpeg, encode_gif)
+    return _plant(
+        _media_ids(df, id_col),
+        lambda i: encoders[i % 3](i % 64 + 1, (i * 7) % 48 + 1),
     )
 
 
@@ -1412,41 +1400,19 @@ def plant_phash_corpus(
     ``PHASH_COPY_EVERY``-th id, a perturbed copy under id +
     ``PHASH_COPY_OFFSET`` whose raster differs in ``id % 3`` sampled
     pixels. Payload generation is an Arrow-batched pandas UDF."""
-    from pyspark.sql.functions import pandas_udf
-
     if codec not in ("png", "jpeg"):
         raise ValueError(f"codec {codec!r}: png or jpeg")
     enc = encode_png_gray if codec == "png" else encode_jpeg_gray
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            is_copy = i >= PHASH_COPY_OFFSET
-            bid = i - PHASH_COPY_OFFSET if is_copy else i
-            w, h = bid % 48 + 16, (bid * 7) % 32 + 16
-            nflip = bid % 3 if is_copy else 0
-            return enc(w, h, _phash_raster(bid, w, h, nflip))
+    def make(i: int) -> bytes:
+        is_copy = i >= PHASH_COPY_OFFSET
+        bid = i - PHASH_COPY_OFFSET if is_copy else i
+        w, h = bid % 48 + 16, (bid * 7) % 32 + 16
+        nflip = bid % 3 if is_copy else 0
+        return enc(w, h, _phash_raster(bid, w, h, nflip))
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    copies = ids.filter(F.col("media_id") % PHASH_COPY_EVERY == 0).select(
-        (F.col("media_id") + PHASH_COPY_OFFSET).alias("media_id")
-    )
-    # the id list inherits the source table's (few) input partitions;
-    # hash-repartition the tiny long column BEFORE generating payloads
-    # so the expensive encode — and every decode stage pipelined on top
-    # of it — spreads across all cores. The partition count must be
-    # EXPLICIT: the ids are ~KBs, so AQE's size-based coalescing would
-    # fold an unnumbered repartition back to one task and serialize
-    # the whole codec stage (measured 24 s at sf0.1 vs ~2 s spread).
-    spark = df.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
-    corpus = ids.unionByName(copies).repartition(n_parts, F.col("media_id"))
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    corpus = _with_copies(_media_ids(df, id_col), PHASH_COPY_EVERY, PHASH_COPY_OFFSET)
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 CROSS_CODEC_OFFSET = 1_000_000
@@ -1461,26 +1427,16 @@ def plant_cross_codec_corpus(df: DataFrame, id_col: str) -> DataFrame:
     The pHash pipeline must match them across codecs (JPEG loss on this
     raster never flips a dHash bit — adjacent-pixel gaps are ~31 vs
     <=2-LSB quantization noise)."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            is_jpeg = i >= CROSS_CODEC_OFFSET
-            bid = i - CROSS_CODEC_OFFSET if is_jpeg else i
-            w, h = bid % 48 + 16, (bid * 7) % 32 + 16
-            pix = _phash_raster(bid, w, h, 0)
-            enc = encode_jpeg_gray if is_jpeg else encode_png_gray
-            return enc(w, h, pix)
+    def make(i: int) -> bytes:
+        is_jpeg = i >= CROSS_CODEC_OFFSET
+        bid = i - CROSS_CODEC_OFFSET if is_jpeg else i
+        w, h = bid % 48 + 16, (bid * 7) % 32 + 16
+        enc = encode_jpeg_gray if is_jpeg else encode_png_gray
+        return enc(w, h, _phash_raster(bid, w, h, 0))
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    copies = ids.filter(F.col("media_id") % CROSS_CODEC_EVERY == 0).select(
-        (F.col("media_id") + CROSS_CODEC_OFFSET).alias("media_id")
-    )
-    corpus = _spread_ids(ids.unionByName(copies), "media_id")
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    corpus = _with_copies(_media_ids(df, id_col), CROSS_CODEC_EVERY, CROSS_CODEC_OFFSET)
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 def plant_tri_codec_corpus(df: DataFrame, id_col: str) -> DataFrame:
@@ -1490,33 +1446,21 @@ def plant_tri_codec_corpus(df: DataFrame, id_col: str) -> DataFrame:
     2*CROSS_CODEC_OFFSET) — the asset-dedup scenario where one image
     circulates re-encoded through whatever pipeline touched it last.
     The pHash path must collapse all three."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            codec, bid = i // CROSS_CODEC_OFFSET, i % CROSS_CODEC_OFFSET
-            w, h = bid % 48 + 16, (bid * 7) % 32 + 16
-            pix = _phash_raster(bid, w, h, 0)
-            if codec == 0:
-                return encode_png_gray(w, h, pix)
-            if codec == 1:
-                return encode_jpeg_gray(w, h, pix)
-            return encode_gif_gray(w, h, pix)
+    def make(i: int) -> bytes:
+        codec, bid = i // CROSS_CODEC_OFFSET, i % CROSS_CODEC_OFFSET
+        w, h = bid % 48 + 16, (bid * 7) % 32 + 16
+        pix = _phash_raster(bid, w, h, 0)
+        if codec == 0:
+            return encode_png_gray(w, h, pix)
+        if codec == 1:
+            return encode_jpeg_gray(w, h, pix)
+        return encode_gif_gray(w, h, pix)
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    dup = ids.filter(F.col("media_id") % CROSS_CODEC_EVERY == 0)
-    corpus = ids.unionByName(
-        dup.select((F.col("media_id") + CROSS_CODEC_OFFSET).alias("media_id"))
-    ).unionByName(
-        dup.select(
-            (F.col("media_id") + 2 * CROSS_CODEC_OFFSET).alias("media_id")
-        )
+    corpus = _with_copies(
+        _media_ids(df, id_col), CROSS_CODEC_EVERY, CROSS_CODEC_OFFSET, 2 * CROSS_CODEC_OFFSET
     )
-    corpus = _spread_ids(corpus, "media_id")
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 PHASH_SCHEMA = T.StructType(
@@ -1534,33 +1478,14 @@ def phash_batch(df: DataFrame) -> DataFrame:
     """media (media_id, payload) → perceptual hash via REAL pixel
     decode, dispatched by signature (decode_raster): PNG zlib-inflate
     + unfilter, or baseline-JPEG Huffman + IDCT. dHash the raster.
-    Arrow-batched mapInPandas — the decode loop runs executor-side
-    over columnar batches."""
+    One row per payload through :func:`_payload_map` — the decode loop
+    runs executor-side over columnar batches."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, his, los = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_raster(payload)
-                ids.append(mid)
-                if decoded is None:
-                    ws.append(None); hs.append(None)
-                    his.append(None); los.append(None)
-                    continue
-                w, h, pix = decoded
-                hi, lo = dhash64(pix, w, h)
-                ws.append(w); hs.append(h); his.append(hi); los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": pd.array(ws, dtype="Int64"),
-                    "height": pd.array(hs, dtype="Int64"),
-                    "h_hi": pd.array(his, dtype="Int64"),
-                    "h_lo": pd.array(los, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple:
+        w, h, pix = decode_raster(p)
+        return (w, h, *dhash64(pix, w, h))
 
-    return df.mapInPandas(fn, PHASH_SCHEMA)
+    return _payload_map(df, PHASH_SCHEMA, fn)
 
 
 # Row-block budget for the Arrow Hamming verify (float-free: n x n
@@ -1656,6 +1581,31 @@ def _hamming_pair_kernel(max_distance: int, blocked: bool):
 _HAM_PAIR_SCHEMA = "id_a long, id_b long, hamming long"
 
 
+def _phash_banded(hashes: DataFrame, *carry) -> DataFrame:
+    """(media_id, h_hi, h_lo) → 4 rows per hash of (*carry, band, key):
+    the 16-bit band explosion shared by every banded-Hamming join (the
+    self-join and its Arrow twin, the incremental versus-join, the
+    cross-set join). ``carry`` defaults to (media_id AS doc,
+    struct(h_hi, h_lo) AS ph). Banding is arithmetic, so a persisted
+    store stays plain hashes and bands on read — a narrow projection."""
+    if not carry:
+        carry = (F.col("media_id").alias("doc"), F.struct("h_hi", "h_lo").alias("ph"))
+    mask = F.lit(0xFFFF)
+    bandvals = [
+        F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
+        F.col("h_hi").bitwiseAND(mask),
+        F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
+        F.col("h_lo").bitwiseAND(mask),
+    ]
+    bands = F.array(
+        *[F.struct(F.lit(b).alias("band"), v.alias("key")) for b, v in enumerate(bandvals)]
+    )
+    out = hashes.select(*carry, F.explode(bands).alias("bk"))
+    return out.select(
+        *out.columns[:-1], F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
 def phash_hamming_pairs(
     hashes: DataFrame,
     *,
@@ -1688,32 +1638,12 @@ def phash_hamming_pairs(
     """
     if impl not in ("arrow", "join"):
         raise ValueError(f"impl {impl!r}: arrow or join")
-    mask = F.lit(0xFFFF)
-    bandvals = [
-        F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
-        F.col("h_hi").bitwiseAND(mask),
-        F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
-        F.col("h_lo").bitwiseAND(mask),
-    ]
-    band_struct = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), v.alias("key"))
-                for b, v in enumerate(bandvals)
-            ]
-        )
-    ).alias("bk")
     if impl == "join":
         from .dedup import banded_pairs
 
-        exploded = hashes.select(
-            F.col("media_id").alias("doc"),
-            F.struct("h_hi", "h_lo").alias("ph"),
-            band_struct,
-        ).select(
-            "doc", "ph", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+        pairs = banded_pairs(
+            _phash_banded(hashes), payload_col="ph", cache_into=cache_into
         )
-        pairs = banded_pairs(exploded, payload_col="ph", cache_into=cache_into)
         ham = (
             F.bit_count(F.col("ph_a.h_hi").bitwiseXOR(F.col("ph_b.h_hi")))
             + F.bit_count(F.col("ph_a.h_lo").bitwiseXOR(F.col("ph_b.h_lo")))
@@ -1724,26 +1654,17 @@ def phash_hamming_pairs(
             .distinct()  # a close pair can share several bands
         )
 
-    exploded = hashes.select(
-        F.col("media_id").alias("doc"), "h_hi", "h_lo", band_struct
-    ).select(
-        "doc", "h_hi", "h_lo",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
+    exploded = _phash_banded(hashes, F.col("media_id").alias("doc"), "h_hi", "h_lo")
+    # EXPLICIT partition count (session.spread_partitions): the banded
+    # table is only ~8 MB at sf0.1, so an unnumbered groupBy exchange
+    # would coalesce to ONE partition and serialize the kernel. One
+    # keyed repartition serves the window, the cold grouping, AND the
+    # hot grouping (hash on (band, key) satisfies the superset
+    # clustering (band, key, b1, b2)), so the arrow path pays exactly
+    # one exchange of the banded rows.
+    exploded = exploded.repartition(
+        spread_partitions(hashes.sparkSession), "band", "key"
     )
-    # EXPLICIT partition count (the plant_phash_corpus lesson): the
-    # banded table is only ~8 MB at sf0.1, so AQE's size-based
-    # coalescing folds the groupBy exchange to ONE post-shuffle
-    # partition and the entire kernel serializes on one core (measured
-    # 6 s vs ~1.5 s spread). One keyed repartition serves the window,
-    # the cold grouping, AND the hot grouping (hash on (band, key)
-    # satisfies the superset clustering (band, key, b1, b2)), so the
-    # arrow path pays exactly one exchange of the banded rows.
-    spark = hashes.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
-    exploded = exploded.repartition(n_parts, "band", "key")
     # same persist rationale as banded_pairs: the cold/hot split makes
     # two consumers of the expensive hash stage feeding ``exploded``
     w = Window.partitionBy("band", "key")
@@ -2254,60 +2175,13 @@ def rgb_phash_batch(df: DataFrame) -> DataFrame:
     LUMA of a color-aware decode (decode_raster_luma): truecolor
     PNG/JPEG corpora hash on luminance exactly like the grayscale
     path, so gray and color re-encodes of the same content collide.
-    Arrow-batched mapInPandas."""
+    One row per payload through :func:`_payload_map`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, ncs, his, los = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_raster_luma(payload)
-                ids.append(mid)
-                if decoded is None:
-                    ws.append(None); hs.append(None); ncs.append(None)
-                    his.append(None); los.append(None)
-                    continue
-                w, h, nc, pix = decoded
-                hi, lo = dhash64(pix, w, h)
-                ws.append(w); hs.append(h); ncs.append(nc)
-                his.append(hi); los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": pd.array(ws, dtype="Int64"),
-                    "height": pd.array(hs, dtype="Int64"),
-                    "n_channels": pd.array(ncs, dtype="Int64"),
-                    "h_hi": pd.array(his, dtype="Int64"),
-                    "h_lo": pd.array(los, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple:
+        w, h, nc, pix = decode_raster_luma(p)
+        return (w, h, nc, *dhash64(pix, w, h))
 
-    return df.mapInPandas(fn, RGB_PHASH_SCHEMA)
-
-
-def _phash_banded(hashes: DataFrame) -> DataFrame:
-    """(media_id, h_hi, h_lo) → 4 rows of (doc, ph, band, key): the
-    16-bit band explosion shared by the self-join and the incremental
-    versus-join (banding is arithmetic, so the persisted store stays
-    plain hashes and bands on read — a narrow projection)."""
-    mask = F.lit(0xFFFF)
-    bandvals = [
-        F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
-        F.col("h_hi").bitwiseAND(mask),
-        F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
-        F.col("h_lo").bitwiseAND(mask),
-    ]
-    return hashes.select(
-        F.col("media_id").alias("doc"),
-        F.struct("h_hi", "h_lo").alias("ph"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), v.alias("key"))
-                    for b, v in enumerate(bandvals)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "ph", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    return _payload_map(df, RGB_PHASH_SCHEMA, fn)
 
 
 def incremental_phash_near_duplicates(
@@ -2452,34 +2326,21 @@ def plant_rgb_phash_corpus(
     base image per id plus, when ``with_copies``, a perturbed copy for
     every PHASH_COPY_EVERY-th id under id + PHASH_COPY_OFFSET (same
     planted-pair convention as the grayscale corpus)."""
-    from pyspark.sql.functions import pandas_udf
-
     if codec not in ("png", "jpeg"):
         raise ValueError(f"codec {codec!r}: png or jpeg")
+    enc = encode_png_rgb if codec == "png" else encode_jpeg_color
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            is_copy = i >= PHASH_COPY_OFFSET
-            bid = i - PHASH_COPY_OFFSET if is_copy else i
-            w, h = bid % 48 + 16, (bid * 7) % 32 + 16
-            nflip = bid % 3 if is_copy else 0
-            rgb = _rgb_plant_raster(bid, w, h, nflip).tobytes()
-            if codec == "png":
-                return encode_png_rgb(w, h, rgb)
-            return encode_jpeg_color(w, h, rgb)
+    def make(i: int) -> bytes:
+        is_copy = i >= PHASH_COPY_OFFSET
+        bid = i - PHASH_COPY_OFFSET if is_copy else i
+        w, h = bid % 48 + 16, (bid * 7) % 32 + 16
+        nflip = bid % 3 if is_copy else 0
+        return enc(w, h, _rgb_plant_raster(bid, w, h, nflip).tobytes())
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    corpus = ids
+    corpus = _media_ids(df, id_col)
     if with_copies:
-        copies = ids.filter(F.col("media_id") % PHASH_COPY_EVERY == 0).select(
-            (F.col("media_id") + PHASH_COPY_OFFSET).alias("media_id")
-        )
-        corpus = ids.unionByName(copies)
-    corpus = _spread_ids(corpus, "media_id")
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+        corpus = _with_copies(corpus, PHASH_COPY_EVERY, PHASH_COPY_OFFSET)
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 RGB_STATS_SCHEMA = T.StructType(
@@ -2502,48 +2363,19 @@ def rgb_stats_batch(df: DataFrame) -> DataFrame:
     dominant channel (ties break r > g > b). All-integer so a
     lossless-codec corpus is bit-exact reproducible by an arithmetic
     oracle — the end-to-end proof of the RGB PNG decode path.
-    Arrow-batched mapInPandas; numpy per payload, no per-pixel
-    Python."""
+    One row per payload through :func:`_payload_map`; numpy per
+    payload, no per-pixel Python."""
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in RGB_STATS_SCHEMA.fieldNames()}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(mid)
-                if payload is None:
-                    for k in RGB_STATS_SCHEMA.fieldNames()[1:]:
-                        rows[k].append(None)
-                    continue
-                w, h, rgb = decode_png_rgb(bytes(payload))
-                a = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
-                r, g, b = a[0::3], a[1::3], a[2::3]
-                rs, gs, bs = int(r.sum()), int(g.sum()), int(b.sum())
-                luma = int((((77 * r + 150 * g + 29 * b + 128) >> 8)).sum())
-                dom = (
-                    "r"
-                    if rs >= gs and rs >= bs
-                    else ("g" if gs >= bs else "b")
-                )
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["r_sum"].append(rs)
-                rows["g_sum"].append(gs)
-                rows["b_sum"].append(bs)
-                rows["luma_sum"].append(luma)
-                rows["dominant"].append(dom)
-            yield pd.DataFrame(
-                {
-                    k: (
-                        pd.array(v, dtype="Int64")
-                        if k not in ("media_id", "dominant")
-                        else v
-                    )
-                    for k, v in rows.items()
-                }
-            )
+    def fn(p: bytes) -> tuple:
+        w, h, rgb = decode_png_rgb(p)
+        a = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
+        rs, gs, bs = int(a[0::3].sum()), int(a[1::3].sum()), int(a[2::3].sum())
+        luma = sum(rgb_luma(rgb, np))
+        dom = "r" if rs >= gs and rs >= bs else ("g" if gs >= bs else "b")
+        return w, h, rs, gs, bs, luma, dom
 
-    return df.mapInPandas(fn, RGB_STATS_SCHEMA)
+    return _payload_map(df, RGB_STATS_SCHEMA, fn)
 
 
 def frame_sample(
@@ -2574,21 +2406,6 @@ def with_feature(
         return feature_fn(payload)
 
     return df.withColumn(out_col, _udf(F.col("payload")))
-
-
-def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition a tiny id column with an EXPLICIT partition
-    count before payload generation, so the expensive codec work — and
-    every decode stage pipelined on top of it — spreads across all
-    cores instead of inheriting the source's single row-group task
-    (AQE's size-based coalescing would fold an unnumbered repartition
-    of a KB-sized id list back to one task; see plant_phash_corpus)."""
-    spark = df.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
-    return df.repartition(n_parts, F.col(id_col))
 
 
 # --------------------------------------------------------------------------
@@ -2630,25 +2447,16 @@ def plant_audio_payloads(df: DataFrame, id_col: str) -> DataFrame:
     recompute what a genuine decode must hear. Arrow-batched UDF."""
     import numpy as np
 
-    from pyspark.sql.functions import pandas_udf
+    def make(i: int) -> bytes:
+        # numpy evaluation of the audio_pcm_samples formula (same
+        # values — the scalar reference stays for tests/oracle)
+        sr = 8000 + (i % 4) * 2000
+        n = (i % 8 + 2) * 250
+        step = i % 7 + 3
+        s = (np.arange(n, dtype=np.int64) * step + i * 11) % 2048 - 1024
+        return encode_wav(sr, n, pcm=s.astype("<i2").tobytes())
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            # numpy evaluation of the audio_pcm_samples formula (same
-            # values — the scalar reference stays for tests/oracle)
-            sr = 8000 + (i % 4) * 2000
-            n = (i % 8 + 2) * 250
-            step = i % 7 + 3
-            s = (np.arange(n, dtype=np.int64) * step + i * 11) % 2048 - 1024
-            return encode_wav(sr, n, pcm=s.astype("<i2").tobytes())
-
-        return ids.map(lambda i: make(int(i)))
-
-    ids = _spread_ids(
-        df.select(F.col(id_col).cast("long").alias("media_id")), "media_id"
-    )
-    return ids.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    return _plant(_spread_ids(_media_ids(df, id_col), "media_id"), make)
 
 
 def decode_wav_pcm(payload: bytes | None):
@@ -2675,44 +2483,44 @@ def decode_wav_pcm(payload: bytes | None):
     return None
 
 
+def _wav_samples(payload: bytes, frame: int | None = None):
+    """(sample_rate, channels, int64 samples) of a 16-bit PCM WAV, or
+    None when :func:`decode_wav_pcm` cannot parse it. ``frame`` keeps
+    only the first ``frame`` samples, zero-padding shorter clips."""
+    import numpy as np
+
+    decoded = decode_wav_pcm(payload)
+    if decoded is None:
+        return None
+    sr, ch, frames = decoded
+    s = np.frombuffer(frames[: len(frames) // 2 * 2], dtype="<i2").astype(np.int64)
+    if frame is not None:
+        s = s[:frame]
+        s = np.pad(s, (0, frame - len(s)))
+    return sr, ch, s
+
+
 def audio_feature_batch(df: DataFrame) -> DataFrame:
     """(media_id, payload) → per-clip audio features via REAL PCM
     decode: peak amplitude, zero-crossing count, and the exact integer
     sum of squares (RMS = sqrt(sum_squares / n) derives JVM-side so no
-    float leaves Python). numpy-vectorized inside Arrow batches."""
+    float leaves Python). numpy-vectorized, one row per payload."""
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, srs, ns, peaks, zcs, sqs = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                decoded = decode_wav_pcm(payload)
-                if decoded is None:
-                    srs.append(None); ns.append(None); peaks.append(None)
-                    zcs.append(None); sqs.append(None)
-                    continue
-                sr, ch, frames = decoded
-                s = np.frombuffer(
-                    frames[: len(frames) // 2 * 2], dtype="<i2"
-                ).astype(np.int64)
-                srs.append(sr)
-                ns.append(len(s) // ch)
-                peaks.append(int(np.abs(s).max()) if len(s) else 0)
-                zcs.append(int(np.count_nonzero(s[:-1] * s[1:] < 0)))
-                sqs.append(int((s * s).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "sample_rate": pd.array(srs, dtype="Int32"),
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    "peak_abs": pd.array(peaks, dtype="Int64"),
-                    "zero_crossings": pd.array(zcs, dtype="Int64"),
-                    "sum_squares": pd.array(sqs, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple | None:
+        decoded = _wav_samples(p)
+        if decoded is None:
+            return None
+        sr, ch, s = decoded
+        return (
+            sr,
+            len(s) // ch,
+            int(np.abs(s).max()) if len(s) else 0,
+            int(np.count_nonzero(s[:-1] * s[1:] < 0)),
+            int((s * s).sum()),
+        )
 
-    return df.mapInPandas(fn, AUDIO_FEATURE_SCHEMA)
+    return _payload_map(df, AUDIO_FEATURE_SCHEMA, fn)
 
 
 SPECTRAL_FRAME = 64
@@ -2765,63 +2573,36 @@ def audio_spectral_batch(df: DataFrame) -> DataFrame:
       rounded at 6 decimals the ~1e-13 cross-engine DFT error is ~1e-7
       per-value collision risk — the documented tolerance contract.
 
-    numpy inside Arrow batches; clips shorter than the frame are
-    zero-padded (the planted corpus is always longer)."""
+    One row per payload; clips shorter than the frame are zero-padded
+    (the planted corpus is always longer)."""
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        signs = _wht_sign_matrix(np)
-        nfr = SPECTRAL_FRAME
-        ks = np.arange(1, nfr // 2 + 1, dtype=np.float64)
-        for pdf in batches:
-            cols = {k: [] for k in AUDIO_SPECTRAL_SCHEMA.fieldNames()}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                cols["media_id"].append(mid)
-                decoded = decode_wav_pcm(payload)
-                if decoded is None:
-                    for k in AUDIO_SPECTRAL_SCHEMA.fieldNames()[1:]:
-                        cols[k].append(None)
-                    continue
-                sr, ch, frames = decoded
-                s = np.frombuffer(
-                    frames[: len(frames) // 2 * 2], dtype="<i2"
-                ).astype(np.int64)[:nfr]
-                if len(s) < nfr:
-                    s = np.pad(s, (0, nfr - len(s)))
-                w = signs @ s  # exact int64
-                absw = np.abs(w[1:])
-                e = w[1:] * w[1:]
-                tot = int(e.sum())
-                cum = np.cumsum(e)
-                roll = int(np.argmax(100 * cum >= 85 * tot)) + 1 if tot else 0
-                x = np.fft.rfft(s.astype(np.float64))
-                p = (x.real * x.real + x.imag * x.imag)[1 : nfr // 2 + 1]
-                ptot = float(p.sum())
-                cols["sample_rate"].append(sr)
-                cols["wht_abs_sum"].append(int(absw.sum()))
-                cols["wht_weighted_sum"].append(
-                    int((np.arange(1, nfr, dtype=np.int64) * absw).sum())
-                )
-                cols["wht_dominant"].append(int(np.argmax(absw)) + 1)
-                cols["wht_rolloff"].append(roll)
-                cols["fft_centroid"].append(
-                    float((ks * p).sum() / ptot) if ptot else None
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": cols["media_id"],
-                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                    "wht_abs_sum": pd.array(cols["wht_abs_sum"], dtype="Int64"),
-                    "wht_weighted_sum": pd.array(
-                        cols["wht_weighted_sum"], dtype="Int64"
-                    ),
-                    "wht_dominant": pd.array(cols["wht_dominant"], dtype="Int64"),
-                    "wht_rolloff": pd.array(cols["wht_rolloff"], dtype="Int64"),
-                    "fft_centroid": pd.array(cols["fft_centroid"], dtype="float64"),
-                }
-            )
+    nfr = SPECTRAL_FRAME
+    ks = np.arange(1, nfr // 2 + 1, dtype=np.float64)
 
-    return df.mapInPandas(fn, AUDIO_SPECTRAL_SCHEMA)
+    def fn(p: bytes) -> tuple | None:
+        decoded = _wav_samples(p, nfr)
+        if decoded is None:
+            return None
+        sr, _, s = decoded
+        w = _wht_sign_matrix(np) @ s  # exact int64
+        absw = np.abs(w[1:])
+        e = w[1:] * w[1:]
+        tot = int(e.sum())
+        roll = int(np.argmax(100 * np.cumsum(e) >= 85 * tot)) + 1 if tot else 0
+        x = np.fft.rfft(s.astype(np.float64))
+        pw = (x.real * x.real + x.imag * x.imag)[1 : nfr // 2 + 1]
+        ptot = float(pw.sum())
+        return (
+            sr,
+            int(absw.sum()),
+            int((np.arange(1, nfr, dtype=np.int64) * absw).sum()),
+            int(np.argmax(absw)) + 1,
+            roll,
+            float((ks * pw).sum() / ptot) if ptot else None,
+        )
+
+    return _payload_map(df, AUDIO_SPECTRAL_SCHEMA, fn)
 
 
 AUDIO_DUP_OFFSET = 1_000_000
@@ -2851,32 +2632,22 @@ def plant_audio_dup_corpus(df: DataFrame, id_col: str) -> DataFrame:
     re-mastered/re-encoded clip scenario. Integer arithmetic end to
     end, so the oracle replays the exact waveforms (and therefore the
     exact fingerprints — a full exactness proof, not just recall)."""
-    from pyspark.sql.functions import pandas_udf
+    import numpy as np
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        import numpy as np
+    def make(i: int) -> bytes:
+        is_copy = i >= AUDIO_DUP_OFFSET
+        bid = i - AUDIO_DUP_OFFSET if is_copy else i
+        sr = 8000 + (bid % 4) * 2000
+        s = np.array(
+            [_noise_sample(bid * 64 + j) for j in range(AUDIO_DUP_N)],
+            dtype=np.int64,
+        )
+        if is_copy:
+            s[: bid % 3 + 1] += AUDIO_DUP_PERT
+        return encode_wav(sr, AUDIO_DUP_N, pcm=s.astype("<i2").tobytes())
 
-        def make(i: int) -> bytes:
-            is_copy = i >= AUDIO_DUP_OFFSET
-            bid = i - AUDIO_DUP_OFFSET if is_copy else i
-            sr = 8000 + (bid % 4) * 2000
-            s = np.array(
-                [_noise_sample(bid * 64 + j) for j in range(AUDIO_DUP_N)],
-                dtype=np.int64,
-            )
-            if is_copy:
-                s[: bid % 3 + 1] += AUDIO_DUP_PERT
-            return encode_wav(sr, AUDIO_DUP_N, pcm=s.astype("<i2").tobytes())
-
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    copies = ids.filter(F.col("media_id") % AUDIO_DUP_EVERY == 0).select(
-        (F.col("media_id") + AUDIO_DUP_OFFSET).alias("media_id")
-    )
-    corpus = _spread_ids(ids.unionByName(copies), "media_id")
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    corpus = _with_copies(_media_ids(df, id_col), AUDIO_DUP_EVERY, AUDIO_DUP_OFFSET)
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 AUDIO_FP_SCHEMA = T.StructType(
@@ -2896,42 +2667,21 @@ def audio_fingerprint_batch(df: DataFrame) -> DataFrame:
     Haitsma-Kalker / Shazam family shape) whose EXACT integer
     coefficients make the whole signature oracle-reproducible, unlike
     float-spectrum hashes. Two non-negative 32-bit halves feed the
-    same banded-Hamming near-dup join images use. Arrow batches,
+    same banded-Hamming near-dup join images use. One row per payload,
     numpy matrix fold."""
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        signs = _wht_sign_matrix(np)
-        nfr = SPECTRAL_FRAME
-        for pdf in batches:
-            ids, srs, his, los = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                decoded = decode_wav_pcm(payload)
-                if decoded is None:
-                    srs.append(None); his.append(None); los.append(None)
-                    continue
-                sr, ch, frames = decoded
-                s = np.frombuffer(
-                    frames[: len(frames) // 2 * 2], dtype="<i2"
-                ).astype(np.int64)[:nfr]
-                if len(s) < nfr:
-                    s = np.pad(s, (0, nfr - len(s)))
-                w = signs @ s
-                bits = (w > 0).astype(np.int64)
-                hi = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
-                lo = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
-                srs.append(sr); his.append(hi); los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "sample_rate": pd.array(srs, dtype="Int32"),
-                    "h_hi": pd.array(his, dtype="Int64"),
-                    "h_lo": pd.array(los, dtype="Int64"),
-                }
-            )
+    shifts = np.arange(32, dtype=np.int64)
 
-    return df.mapInPandas(fn, AUDIO_FP_SCHEMA)
+    def fn(p: bytes) -> tuple | None:
+        decoded = _wav_samples(p, SPECTRAL_FRAME)
+        if decoded is None:
+            return None
+        sr, _, s = decoded
+        bits = (_wht_sign_matrix(np) @ s > 0).astype(np.int64)
+        return sr, int((bits[:32] << shifts).sum()), int((bits[32:] << shifts).sum())
+
+    return _payload_map(df, AUDIO_FP_SCHEMA, fn)
 
 
 def audio_decimate_batch(df: DataFrame, *, factor: int = 2) -> DataFrame:
@@ -2944,28 +2694,20 @@ def audio_decimate_batch(df: DataFrame, *, factor: int = 2) -> DataFrame:
     batches; payload bytes never visit the driver."""
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                decoded = decode_wav_pcm(payload)
-                if decoded is None:
-                    outs.append(None)
-                    continue
-                sr, ch, frames = decoded
-                s = np.frombuffer(
-                    frames[: len(frames) // 2 * 2], dtype="<i2"
-                ).astype(np.int64)
-                n2 = len(s) // factor
-                blocks = s[: n2 * factor].reshape(n2, factor)
-                dec = np.trunc(blocks.sum(axis=1) / factor).astype("<i2")
-                outs.append(encode_wav(sr // factor, n2, pcm=dec.tobytes()))
-            yield pd.DataFrame({"media_id": ids, "payload": outs})
+    def fn(p: bytes) -> tuple | None:
+        decoded = _wav_samples(p)
+        if decoded is None:
+            return None
+        sr, _, s = decoded
+        n2 = len(s) // factor
+        blocks = s[: n2 * factor].reshape(n2, factor)
+        dec = np.trunc(blocks.sum(axis=1) / factor).astype("<i2")
+        return (encode_wav(sr // factor, n2, pcm=dec.tobytes()),)
 
-    return df.mapInPandas(
-        fn, "media_id long, payload binary"
+    schema = T.StructType(
+        [T.StructField("media_id", T.LongType()), T.StructField("payload", T.BinaryType())]
     )
+    return _payload_map(df, schema, fn)
 
 
 # --------------------------------------------------------------------------
@@ -3138,18 +2880,10 @@ def parse_mp4_frames(payload: bytes | None) -> list[bytes] | None:
 def plant_video_payloads(df: DataFrame, id_col: str) -> DataFrame:
     """Video corpus as REAL ISO-BMFF files with sample tables and
     deterministic frame content (:func:`video_frame_plan`)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: encode_mp4_frames((int(i) % 20 + 1) * 500, int(i))
-        )
-
-    ids = _spread_ids(
-        df.select(F.col(id_col).cast("long").alias("media_id")), "media_id"
+    return _plant(
+        _spread_ids(_media_ids(df, id_col), "media_id"),
+        lambda i: encode_mp4_frames((i % 20 + 1) * 500, i),
     )
-    return ids.select("media_id", _gen(F.col("media_id")).alias("payload"))
 
 
 VIDEO_DUP_OFFSET = 1_000_000
@@ -3163,26 +2897,17 @@ def plant_video_remux_corpus(df: DataFrame, id_col: str) -> DataFrame:
     timescale and different duration rounding — container bytes differ
     everywhere, mdat content is identical. The dedup scenario where
     one clip circulates through different packagers."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            is_remux = i >= VIDEO_DUP_OFFSET
-            bid = i - VIDEO_DUP_OFFSET if is_remux else i
-            dur = (bid % 20 + 1) * 500
-            if is_remux:
-                return encode_mp4_frames(dur + 3, bid, timescale=90000)
-            return encode_mp4_frames(dur, bid)
+    def make(i: int) -> bytes:
+        is_remux = i >= VIDEO_DUP_OFFSET
+        bid = i - VIDEO_DUP_OFFSET if is_remux else i
+        dur = (bid % 20 + 1) * 500
+        if is_remux:
+            return encode_mp4_frames(dur + 3, bid, timescale=90000)
+        return encode_mp4_frames(dur, bid)
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-    copies = ids.filter(F.col("media_id") % VIDEO_DUP_EVERY == 0).select(
-        (F.col("media_id") + VIDEO_DUP_OFFSET).alias("media_id")
-    )
-    corpus = _spread_ids(ids.unionByName(copies), "media_id")
-    return corpus.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    corpus = _with_copies(_media_ids(df, id_col), VIDEO_DUP_EVERY, VIDEO_DUP_OFFSET)
+    return _plant(_spread_ids(corpus, "media_id"), make)
 
 
 VIDEO_KEYFRAME_OFFSET = 2_000_000
@@ -3203,35 +2928,21 @@ def plant_video_keyframe_corpus(df: DataFrame, id_col: str) -> DataFrame:
 
     The scenario: stills extracted from (or re-used as) video frames —
     thumbnail/keyframe reuse across modalities."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(mid: int) -> bytes:
-            bid = mid - VIDEO_KEYFRAME_OFFSET
-            w, h = bid % 48 + 16, (bid * 7) % 32 + 16
-            key = struct.pack(">II", w, h) + _phash_raster(
-                bid, w, h, bid % 3
-            )
-            filler = [
-                video_frame_bytes(bid, k + 1, (bid + k * 7) % 96 + 32)
-                for k in range(bid % 3 + 1)
-            ]
-            return encode_mp4_frames(
-                (bid % 20 + 1) * 500, bid, frames=[key] + filler
-            )
+    def make(mid: int) -> bytes:
+        bid = mid - VIDEO_KEYFRAME_OFFSET
+        w, h = bid % 48 + 16, (bid * 7) % 32 + 16
+        key = struct.pack(">II", w, h) + _phash_raster(bid, w, h, bid % 3)
+        filler = [
+            video_frame_bytes(bid, k + 1, (bid + k * 7) % 96 + 32)
+            for k in range(bid % 3 + 1)
+        ]
+        return encode_mp4_frames((bid % 20 + 1) * 500, bid, frames=[key] + filler)
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = _spread_ids(
-        df.filter(F.col(id_col) % VIDEO_KEYFRAME_EVERY == 0).select(
-            (F.col(id_col).cast("long") + VIDEO_KEYFRAME_OFFSET).alias(
-                "media_id"
-            )
-        ),
-        "media_id",
+    ids = df.filter(F.col(id_col) % VIDEO_KEYFRAME_EVERY == 0).select(
+        (F.col(id_col).cast("long") + VIDEO_KEYFRAME_OFFSET).alias("media_id")
     )
-    return ids.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    return _plant(_spread_ids(ids, "media_id"), make)
 
 
 def video_keyframe_phash_batch(df: DataFrame) -> DataFrame:
@@ -3239,39 +2950,20 @@ def video_keyframe_phash_batch(df: DataFrame) -> DataFrame:
     walk the real sample table, slice frame 0 out of mdat, read the
     ``>II`` dims header, dHash the raster — the video-side half of the
     cross-modality near-dup join (the image side is
-    :func:`phash_batch`). Arrow-batched; NULL row when the payload has
-    no sample table or the keyframe is not a dimensioned raster."""
+    :func:`phash_batch`). One row per payload; NULL row when the
+    payload has no sample table or the keyframe is not a dimensioned
+    raster."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, his, los = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                frames = parse_mp4_frames(payload)
-                ok = False
-                if frames:
-                    key = frames[0]
-                    if len(key) >= 8:
-                        w, h = struct.unpack(">II", key[:8])
-                        if len(key) == 8 + w * h and w >= 9 and h >= 8:
-                            hi, lo = dhash64(key[8:], w, h)
-                            ws.append(w); hs.append(h)
-                            his.append(hi); los.append(lo)
-                            ok = True
-                if not ok:
-                    ws.append(None); hs.append(None)
-                    his.append(None); los.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": pd.array(ws, dtype="Int64"),
-                    "height": pd.array(hs, dtype="Int64"),
-                    "h_hi": pd.array(his, dtype="Int64"),
-                    "h_lo": pd.array(los, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple | None:
+        frames = parse_mp4_frames(p)
+        if frames and len(frames[0]) >= 8:
+            key = frames[0]
+            w, h = struct.unpack(">II", key[:8])
+            if len(key) == 8 + w * h and w >= 9 and h >= 8:
+                return (w, h, *dhash64(key[8:], w, h))
+        return None
 
-    return df.mapInPandas(fn, PHASH_SCHEMA)
+    return _payload_map(df, PHASH_SCHEMA, fn)
 
 
 def cross_phash_hamming_pairs(
@@ -3300,35 +2992,15 @@ def cross_phash_hamming_pairs(
             f"max_distance <= 3, got {max_distance}"
         )
 
-    def banded(h: DataFrame, idc: str) -> DataFrame:
-        mask = F.lit(0xFFFF)
-        bandvals = [
-            F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
-            F.col("h_hi").bitwiseAND(mask),
-            F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
-            F.col("h_lo").bitwiseAND(mask),
-        ]
-        return h.filter(
-            F.col("h_hi").isNotNull() & F.col("h_lo").isNotNull()
-        ).select(
+    nonnull = F.col("h_hi").isNotNull() & F.col("h_lo").isNotNull()
+    la, rb = (
+        _phash_banded(
+            h.filter(nonnull),
             F.col("media_id").alias(idc),
             F.struct("h_hi", "h_lo").alias(f"__ph_{idc}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("band"), v.alias("key"))
-                        for b, v in enumerate(bandvals)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            idc,
-            f"__ph_{idc}",
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
         )
-
-    la, rb = banded(left, left_id), banded(right, right_id)
+        for h, idc in ((left, left_id), (right, right_id))
+    )
     ham = (
         F.bit_count(
             F.col(f"__ph_{left_id}.h_hi").bitwiseXOR(
@@ -3364,36 +3036,19 @@ def video_content_signature_batch(df: DataFrame) -> DataFrame:
     checksum) in frame order into one 31-bit chain — identical for any
     re-mux of the same media samples, different as soon as one frame
     byte differs. Integer arithmetic end to end (oracle-replayable).
-    Arrow batches."""
+    One row per payload."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, sigs = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = parse_mp4_frames(payload)
-                ids.append(mid)
-                if frames is None:
-                    nfs.append(None)
-                    sigs.append(None)
-                    continue
-                sig = 0
-                for fr in frames:
-                    acc = 0
-                    for byte in fr:
-                        acc = (acc * 31 + byte) % 2147483648
-                    sig = (sig * 31 + len(fr)) % 2147483648
-                    sig = (sig * 31 + acc) % 2147483648
-                nfs.append(len(frames))
-                sigs.append(sig)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "n_frames": pd.array(nfs, dtype="Int64"),
-                    "sig": pd.array(sigs, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple | None:
+        frames = parse_mp4_frames(p)
+        if frames is None:
+            return None
+        sig = 0
+        for fr in frames:
+            sig = (sig * 31 + len(fr)) % 2147483648
+            sig = (sig * 31 + _mix31(fr)) % 2147483648
+        return len(frames), sig
 
-    return df.mapInPandas(fn, VIDEO_SIG_SCHEMA)
+    return _payload_map(df, VIDEO_SIG_SCHEMA, fn)
 
 
 def video_frame_stats_batch(df: DataFrame, *, every: int = 2) -> DataFrame:
@@ -3401,8 +3056,11 @@ def video_frame_stats_batch(df: DataFrame, *, every: int = 2) -> DataFrame:
     table, keep every ``every``-th frame (temporal subsampling BEFORE
     any per-frame work — the 100 TB pattern: decode cost scales with
     kept frames, not stored frames), and emit per-frame size, byte sum
-    and an order-sensitive mix checksum
-    (``acc = (acc*31 + byte) mod 2^31``)."""
+    and an order-sensitive mix checksum (:func:`_mix31`).
+
+    It emits one row per KEPT FRAME, not one per payload, so it is the
+    one kernel that keeps its own ``mapInPandas`` loop instead of
+    :func:`_payload_map`."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3413,14 +3071,11 @@ def video_frame_stats_batch(df: DataFrame, *, every: int = 2) -> DataFrame:
                     continue
                 for k in range(0, len(frames), every):
                     fr = frames[k]
-                    acc = 0
-                    for byte in fr:
-                        acc = (acc * 31 + byte) % 2147483648
                     ids.append(mid)
                     idxs.append(k)
                     sizes.append(len(fr))
                     sums.append(sum(fr))
-                    mixes.append(acc)
+                    mixes.append(_mix31(fr))
             yield pd.DataFrame(
                 {
                     "media_id": ids,
@@ -3465,54 +3120,24 @@ def resize_raster(
 def plant_raster_corpus(df: DataFrame, id_col: str) -> DataFrame:
     """Unperturbed real-PNG raster corpus (the plant_phash_corpus base
     formula without copies): dims and every pixel arithmetic in the id."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("binary")
-    def _gen(ids: pd.Series) -> pd.Series:
-        def make(i: int) -> bytes:
-            w, h = i % 48 + 16, (i * 7) % 32 + 16
-            return encode_png_gray(w, h, _phash_raster(i, w, h, 0))
+    def make(i: int) -> bytes:
+        w, h = i % 48 + 16, (i * 7) % 32 + 16
+        return encode_png_gray(w, h, _phash_raster(i, w, h, 0))
 
-        return ids.map(lambda i: make(int(i)))
-
-    ids = _spread_ids(
-        df.select(F.col(id_col).cast("long").alias("media_id")), "media_id"
-    )
-    return ids.select("media_id", _gen(F.col("media_id")).alias("payload"))
+    return _plant(_spread_ids(_media_ids(df, id_col), "media_id"), make)
 
 
 def resize_batch(df: DataFrame, *, out_w: int = 16, out_h: int = 12) -> DataFrame:
     """(media_id, payload) → thumbnail stats via TRUE decode + resize:
     decode_raster (PNG inflate+unfilter or baseline-JPEG Huffman+IDCT),
     nearest-neighbor downsample, then the thumbnail's exact pixel sum
-    and order-sensitive mix checksum (``acc = (acc*31 + p) mod 2^31``)
-    — pinning the full decode→resize path byte-for-byte."""
+    and order-sensitive mix checksum (:func:`_mix31`) — pinning the
+    full decode→resize path byte-for-byte."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, mixes = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                decoded = decode_raster(payload)
-                if decoded is None:
-                    ws.append(None); hs.append(None)
-                    sums.append(None); mixes.append(None)
-                    continue
-                w, h, pix = decoded
-                thumb = resize_raster(pix, w, h, out_w, out_h)
-                acc = 0
-                for p in thumb:
-                    acc = (acc * 31 + p) % 2147483648
-                ws.append(w); hs.append(h)
-                sums.append(sum(thumb)); mixes.append(acc)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "pix_sum": pd.array(sums, dtype="Int64"),
-                    "pix_mix": pd.array(mixes, dtype="Int64"),
-                }
-            )
+    def fn(p: bytes) -> tuple:
+        w, h, pix = decode_raster(p)
+        thumb = resize_raster(pix, w, h, out_w, out_h)
+        return w, h, sum(thumb), _mix31(thumb)
 
-    return df.mapInPandas(fn, RESIZE_SCHEMA)
+    return _payload_map(df, RESIZE_SCHEMA, fn)

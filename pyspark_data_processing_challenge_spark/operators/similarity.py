@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns, vectors
+from ..session import spread_partitions
 
 
 def cosine_topk(
@@ -439,17 +440,9 @@ def knn_graph_arrow(
             }
         )
 
-    # EXPLICIT partition count (the plant_phash_corpus/AQE lesson): the
-    # assignment table is small enough that AQE's size-based coalescing
-    # folds the grouping exchange to ONE post-shuffle partition and
-    # every list's kernel runs serially on one core. A keyed repartition
-    # with an explicit count keeps the group tasks spread (parallelism
-    # still bounded by |lists| — quantizer balance is the lever).
-    sess = assigned.sparkSession
-    n_parts = max(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
+    # keeps the group tasks spread; parallelism is still bounded by
+    # |lists| — quantizer balance is the lever
+    n_parts = spread_partitions(assigned.sparkSession)
     per_list = assigned.repartition(n_parts, "centroid_id").groupBy(
         "centroid_id"
     ).applyInPandas(

@@ -1499,7 +1499,7 @@ def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     capability metadata parsing can't give: plant real PNG payloads
     (base images + perturbed near-copies, operators/multimodal.
     plant_phash_corpus), zlib-inflate and unfilter the actual rasters
-    executor-side (decode_png_gray inside mapInPandas), dHash the
+    executor-side (decode_png_gray inside phash_batch), dHash the
     pixels. The oracle recomputes every pixel and hash bit from the
     planting arithmetic, so one wrong pixel anywhere in the
     decode→sample→pack chain breaks the driver hash."""

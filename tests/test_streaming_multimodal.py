@@ -2078,3 +2078,65 @@ def test_pack_scan_equals_bitwriter_spec():
     sizes, amps = multimodal._mag_size_amp_arrays(vs, np)
     for v, s, a in zip(vs.tolist(), sizes.tolist(), amps.tolist()):
         assert (s, a) == multimodal._mag_bits(v), v
+
+
+def test_payload_map_contract(spark):
+    """_payload_map, the one JVM↔pandas crossing of the payload
+    kernels: a NULL payload and a payload ``fn`` maps to None both
+    arrive as SQL NULL (never NaN) in every declared type, media_id and
+    row order pass through, and an empty input keeps the schema."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("media_id", T.LongType(), False),
+            T.StructField("n", T.IntegerType(), True),
+            T.StructField("big", T.LongType(), True),
+            T.StructField("half", T.DoubleType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("rev", T.BinaryType(), True),
+        ]
+    )
+
+    def fn(p: bytes):
+        if p == b"undecodable":
+            return None
+        return len(p), 1 << 40, len(p) / 2, p.decode(), p[::-1]
+
+    media = spark.createDataFrame(
+        [(7, b"abc"), (3, None), (5, b"undecodable"), (1, b"xy")],
+        "media_id long, payload binary",
+    )
+    out = multimodal._payload_map(media, schema, fn)
+    assert out.schema == schema
+    nulls = (None,) * 5
+    assert [tuple(r) for r in out.collect()] == [
+        (7, 3, 1 << 40, 1.5, "abc", b"cba"),
+        (3, *nulls),
+        (5, *nulls),
+        (1, 2, 1 << 40, 1.0, "xy", b"yx"),
+    ]
+    assert out.filter(F.isnan("half")).count() == 0
+    assert out.filter(F.col("half").isNull()).count() == 2
+
+    empty = multimodal._payload_map(media.limit(0), schema, fn)
+    assert empty.schema == schema
+    assert empty.collect() == []
+
+
+def test_mapinpandas_only_in_payload_adapter():
+    """Structure lint: every one-row-per-payload kernel goes through
+    _payload_map, so ``mapInPandas(`` appears in operators/multimodal.py
+    only inside the adapter and the multi-row video_frame_stats_batch."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(multimodal)
+    sites = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef):
+            n = ast.get_source_segment(src, node).count("mapInPandas(")
+            if n:
+                sites[node.name] = n
+    assert sites == {"_payload_map": 1, "video_frame_stats_batch": 1}
+    assert src.count("mapInPandas(") == 2
