@@ -428,15 +428,25 @@ BASELINES = [
 ]
 
 
-def _prior_round_mins(sf: float) -> dict[str, float]:
+def _latest_detail_path(cpus) -> str:
+    """Where a completed run persists its full detail line, named by
+    core count so an 8-core scaling run never clobbers the full-width
+    run's detail (nor becomes its same-sf baseline)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    return os.path.join(here, f"BENCH_full_latest_c{cpus}.json")
+
+
+def _prior_round_mins(sf: float, cpus) -> dict[str, float]:
     """Per-query min times from the most recent committed bench
     snapshot AT THE SAME SCALE FACTOR — the reference point for the
     regression-vs-noise re-run policy (VERDICT r10 #1). Preference
-    order: BENCH_full_latest.json (last completed run), then the
-    highest-numbered BENCH_full_r{N}.json. A snapshot at a different
-    sf is skipped (sf0.01 iteration runs must not flag everything as
-    a 10x 'regression' against sf0.1 numbers). Missing/corrupt files
-    degrade to {} — the policy is additive, never load-bearing."""
+    order: BENCH_full_latest_c{cpus}.json (last completed run at this
+    core count), then the highest-numbered BENCH_full_r{N}.json; a
+    latest file from another core count is never read. A snapshot at a
+    different sf is skipped (sf0.01 iteration runs must not flag
+    everything as a 10x 'regression' against sf0.1 numbers).
+    Missing/corrupt files degrade to {} — the policy is additive, never
+    load-bearing."""
     here = os.path.dirname(os.path.abspath(__file__))
 
     def round_no(path: str) -> int:
@@ -445,7 +455,7 @@ def _prior_round_mins(sf: float) -> dict[str, float]:
         m = re.search(r"r(\d+)", os.path.basename(path))
         return int(m.group(1)) if m else -1
 
-    candidates = [os.path.join(here, "BENCH_full_latest.json")] + sorted(
+    candidates = [_latest_detail_path(cpus)] + sorted(
         glob.glob(os.path.join(here, "BENCH_full_r*.json")),
         key=round_no,
         reverse=True,
@@ -798,7 +808,7 @@ def main() -> None:
                 "note"
             ] = note
 
-    prior_mins = _prior_round_mins(sf)
+    prior_mins = _prior_round_mins(sf, cpus)
 
     times: dict[str, float] = {}
     # The *_full_* ingest-ratio comparators run FIRST (VERDICT r12 #5):
@@ -840,9 +850,7 @@ def main() -> None:
     # round can commit it (BENCH_full_r{N}.json) and round-over-round
     # comparisons never depend on the driver's truncation window.
     try:
-        out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_full_latest.json")
-        with open(out, "w") as f:
+        with open(_latest_detail_path(cpus), "w") as f:
             f.write(lines[0] + "\n")
     except OSError:
         pass  # benchmarking from a read-only checkout still prints

@@ -110,8 +110,3 @@ def build_schema(fields: Iterable[Mapping[str, Any]]) -> T.StructType:
             )
         )
     return T.StructType(out)
-
-
-def schema_ddl(fields: Iterable[Mapping[str, Any]]) -> str:
-    """Render the same declaration as a DDL string (for readStream etc.)."""
-    return build_schema(fields).simpleString()[len("struct<") : -1]

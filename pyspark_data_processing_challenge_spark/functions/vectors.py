@@ -37,13 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm2(a) * norm2(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diff = F.zip_with(as_double(a), as_double(b), lambda x, y: x - y)
-    return F.sqrt(
-        F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
 def lsh_bucket(v: Column, planes: list[list[float]]) -> Column:
     """Sign-random-projection LSH bucket id (SimHash for vectors).
 

@@ -42,11 +42,3 @@ def setup_logging(
     logger.addHandler(sh)
     logger.propagate = False
     return logger
-
-
-def setup_from_config(conf: dict) -> logging.Logger:
-    """Consume the reference config.yaml's ``logging`` section."""
-    lc = conf.get("logging", {})
-    return setup_logging(
-        log_file=lc.get("log_file"), log_level=str(lc.get("log_level", "INFO"))
-    )

@@ -15,6 +15,13 @@ reaches SQL as NULL, never NaN. Only :func:`video_frame_stats_batch`,
 which emits several rows per payload, keeps its own ``mapInPandas``.
 Test corpora are planted through :func:`_plant` the same way.
 
+The pHash near-dup path runs on every core and pays the Python
+crossing only where it does work: :func:`phash_batch` spreads its input
+before the decode (AQE would otherwise fold a few-MB payload table into
+one task), and :func:`phash_hamming_pairs` prunes single-row band
+buckets in the JVM, then verifies the rest with ``applyInArrow`` on raw
+Arrow tables. No grouped kernel here goes through pandas frames.
+
 Codecs available in this container (no PIL/ffmpeg):
 
 - ``codec="headers"`` — REAL container-format parsing in pure Python:
@@ -1479,13 +1486,18 @@ def phash_batch(df: DataFrame) -> DataFrame:
     decode, dispatched by signature (decode_raster): PNG zlib-inflate
     + unfilter, or baseline-JPEG Huffman + IDCT. dHash the raster.
     One row per payload through :func:`_payload_map` — the decode loop
-    runs executor-side over columnar batches."""
+    runs executor-side over columnar batches.
+
+    The input is spread by :func:`_spread_ids` first. Decode costs ~1 ms
+    per payload, a shuffle microseconds, and AQE sizes partitions by
+    bytes, so a few-MB payload table that passed an exchange upstream
+    arrives as ONE partition and the decode would run as one task."""
 
     def fn(p: bytes) -> tuple:
         w, h, pix = decode_raster(p)
         return (w, h, *dhash64(pix, w, h))
 
-    return _payload_map(df, PHASH_SCHEMA, fn)
+    return _payload_map(_spread_ids(df, "media_id"), PHASH_SCHEMA, fn)
 
 
 # Row-block budget for the Arrow Hamming verify (float-free: n x n
@@ -1506,14 +1518,18 @@ _HAM_ARROW_HOT_THRESHOLD = 4096
 
 
 def _hamming_pair_kernel(max_distance: int, blocked: bool):
-    """applyInPandas kernel emitting a bucket's Hamming-close pairs:
+    """applyInArrow kernel emitting a bucket's Hamming-close pairs:
     vectorized XOR + SWAR popcount over row blocks, ``id_a < id_b``.
+    numpy-only, so it reads the group's ``pyarrow.Table`` columns
+    straight into int64 arrays and returns a ``pa.Table`` of int64
+    columns — no pandas frame is built on either side of the crossing.
     Integer-only, so equality with the join path is exact by
     construction. ``blocked=True`` is the hot-bucket form: rows carry
     ``__blk`` and the group's (b1, b2) replica key, and a pair is
     emitted only when its ordered block pair IS the group key — the
     exactly-once rule of dedup.banded_pairs' blocked self-join."""
     import numpy as np
+    import pyarrow as pa
 
     M1 = np.uint64(0x5555555555555555)
     M2 = np.uint64(0x3333333333333333)
@@ -1526,29 +1542,31 @@ def _hamming_pair_kernel(max_distance: int, blocked: bool):
         x = (x + (x >> np.uint64(4))) & M4
         return (x * H01) >> np.uint64(56)
 
-    empty = pd.DataFrame(
-        {
-            "id_a": pd.array([], dtype="int64"),
-            "id_b": pd.array([], dtype="int64"),
-            "hamming": pd.array([], dtype="int64"),
-        }
-    )
+    names = ["id_a", "id_b", "hamming"]
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
+    def pairs(a, b, h):
+        return pa.table([pa.array(c, pa.int64()) for c in (a, b, h)], names=names)
+
+    none = np.empty(0, np.int64)
+
+    def col(tbl, c):
+        return tbl.column(c).to_numpy().astype(np.int64, copy=False)
+
+    def kern(tbl):
+        n = tbl.num_rows
         if n <= 1:
-            return empty
-        ids = pdf["doc"].to_numpy(dtype=np.int64)
+            return pairs(none, none, none)
+        ids = col(tbl, "doc")
         o = np.argsort(ids)  # one row per doc per bucket -> unique ids
         ids = ids[o]
-        hi = pdf["h_hi"].to_numpy(dtype=np.int64)[o].astype(np.uint64)
-        lo = pdf["h_lo"].to_numpy(dtype=np.int64)[o].astype(np.uint64)
+        hi = col(tbl, "h_hi")[o].astype(np.uint64)
+        lo = col(tbl, "h_lo")[o].astype(np.uint64)
         if blocked:
-            blk = pdf["__blk"].to_numpy(dtype=np.int64)[o]
-            b1 = int(pdf["b1"].iloc[0])
-            b2 = int(pdf["b2"].iloc[0])
+            blk = col(tbl, "__blk")[o]
+            b1 = tbl.column("b1")[0].as_py()
+            b2 = tbl.column("b2")[0].as_py()
         step = max(1, _HAM_BLOCK_ELEMS // n)
-        out_a, out_b, out_h = [], [], []
+        out_a, out_b, out_h = [none], [none], [none]
         for s in range(0, n, step):
             e = min(s + step, n)
             ham = popcount(hi[s:e, None] ^ hi[None, :]) + popcount(
@@ -1565,15 +1583,7 @@ def _hamming_pair_kernel(max_distance: int, blocked: bool):
             out_a.append(ids[s + rr])
             out_b.append(ids[cc])
             out_h.append(ham[rr, cc].astype(np.int64))
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_h),
-            }
-        )
+        return pairs(*map(np.concatenate, (out_a, out_b, out_h)))
 
     return kern
 
@@ -1627,9 +1637,13 @@ def phash_hamming_pairs(
     but a few thousand — measured 9.7 s at sf0.1 for the pair stage
     alone. The default ``impl="arrow"`` keeps the identical banding,
     window-count hot/cold split, and blocked exactly-once hot-bucket
-    scheme, but scores each bucket in ONE applyInPandas kernel
-    (row-blocked XOR + SWAR popcount, ≤ {_HAM_BLOCK_ELEMS}-element
-    slices) and only SURVIVING pairs cross the Arrow boundary.
+    scheme, but scores each bucket in ONE ``applyInArrow`` kernel
+    (:func:`_hamming_pair_kernel`: row-blocked XOR + SWAR popcount,
+    ≤ ``_HAM_BLOCK_ELEMS``-element slices, on the group's Arrow table
+    with no pandas frame) and only SURVIVING pairs cross back. Buckets
+    holding a single row (``__bn`` = 1, the large majority of 16-bit
+    band values) are pruned in the JVM before the crossing: they can
+    emit no pair, so the output is unchanged by construction.
     Hamming is integer arithmetic, so the two impls are equal by
     construction — pinned by a twin-equality test and the unchanged
     DuckDB oracles of every consumer.
@@ -1671,11 +1685,14 @@ def phash_hamming_pairs(
     tagged = exploded.withColumn("__bn", F.count(F.lit(1)).over(w)).persist()
     if cache_into is not None:
         cache_into.append(tagged)
-    cold = tagged.filter(F.col("__bn") <= _HAM_ARROW_HOT_THRESHOLD).drop(
-        "__bn"
-    )
+    # a one-row bucket can never emit a pair: prune it in the JVM so
+    # only buckets that can do work cross into Python (most 16-bit band
+    # values are unique to one hash)
+    cold = tagged.filter(
+        F.col("__bn").between(2, _HAM_ARROW_HOT_THRESHOLD)
+    ).drop("__bn")
     hot = tagged.filter(F.col("__bn") > _HAM_ARROW_HOT_THRESHOLD).drop("__bn")
-    cold_pairs = cold.groupBy("band", "key").applyInPandas(
+    cold_pairs = cold.groupBy("band", "key").applyInArrow(
         _hamming_pair_kernel(max_distance, blocked=False), _HAM_PAIR_SCHEMA
     )
     # hot buckets: the banded_pairs blocked scheme — replicate each row
@@ -1702,7 +1719,7 @@ def phash_hamming_pairs(
         "doc", "h_hi", "h_lo", "band", "key", "__blk",
         F.col("__bp.b1").alias("b1"), F.col("__bp.b2").alias("b2"),
     )
-    hot_pairs = replicated.groupBy("band", "key", "b1", "b2").applyInPandas(
+    hot_pairs = replicated.groupBy("band", "key", "b1", "b2").applyInArrow(
         _hamming_pair_kernel(max_distance, blocked=True), _HAM_PAIR_SCHEMA
     )
     # a close pair can share several bands (and a hot and a cold bucket

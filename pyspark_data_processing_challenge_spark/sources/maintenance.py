@@ -201,23 +201,6 @@ def hilbert_index(df: DataFrame, x_col: str, y_col: str, *, bits: int, out_col: 
     return cur.withColumn(out_col, F.col("__hd")).drop("__hx", "__hy", "__hd")
 
 
-def py_hilbert_xy2d(n: int, x: int, y: int) -> int:
-    """Pure-Python reference of the same xy2d (tests)."""
-    d = 0
-    s = n // 2
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
 def zone_map_report(
     df: DataFrame,
     file_col: str,

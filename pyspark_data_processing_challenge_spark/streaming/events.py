@@ -720,17 +720,6 @@ def cluster_split_current(
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
-def read_embeddings_stream(
-    spark: SparkSession, path: str, *, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Bounded embeddings stream (test source; Kafka/Delta in prod)."""
-    return (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
 def semdedup_ingest_sink(
     out_dir: str,
     centroids: DataFrame,

@@ -101,12 +101,32 @@ def test_prior_round_mins_sf_scoped():
     must be skipped (else sf0.01 iteration flags everything), and a
     missing sf yields {} so the policy degrades to the absolute
     thresholds."""
-    prior = bench._prior_round_mins(0.1)
+    prior = bench._prior_round_mins(0.1, 32)
     assert prior, "committed BENCH_full snapshots should provide sf0.1 mins"
     assert all(isinstance(v, (int, float)) for v in prior.values())
     # baselines are folded in so movers outside the headline get reps too
     assert "embedding_near_dup" in prior
-    assert bench._prior_round_mins(123.456) == {}
+    assert bench._prior_round_mins(123.456, 32) == {}
+
+
+def test_prior_round_mins_prefers_matching_cpus(tmp_path, monkeypatch):
+    """The latest-run detail is named by core count: an 8-core scaling
+    run writes its own file, so the full-width run's same-sf baseline
+    comes from the matching file, and a core count with no latest file
+    falls back to the committed round snapshot, never to another core
+    count's latest run."""
+
+    def snap(name, t):
+        (tmp_path / name).write_text(json.dumps({"sf": 0.1, "queries": {"q": t}}))
+
+    snap("BENCH_full_latest_c8.json", 1.0)
+    snap("BENCH_full_latest_c32.json", 2.0)
+    snap("BENCH_full_r5.json", 3.0)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._latest_detail_path(8) == str(tmp_path / "BENCH_full_latest_c8.json")
+    assert bench._prior_round_mins(0.1, "32") == {"q": 2.0}
+    assert bench._prior_round_mins(0.1, 8) == {"q": 1.0}
+    assert bench._prior_round_mins(0.1, 4) == {"q": 3.0}
 
 
 def test_scaling_and_load_land_in_detail_only():

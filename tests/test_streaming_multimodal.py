@@ -2140,3 +2140,109 @@ def test_mapinpandas_only_in_payload_adapter():
                 sites[node.name] = n
     assert sites == {"_payload_map": 1, "video_frame_stats_batch": 1}
     assert src.count("mapInPandas(") == 2
+
+
+def test_applyinpandas_not_in_multimodal():
+    """Structure lint: the grouped pHash verify kernels are numpy-only
+    and run through ``applyInArrow`` on raw Arrow tables, so no
+    ``applyInPandas(`` call (a pandas frame built per group, both ways)
+    remains in operators/multimodal.py."""
+    import inspect
+
+    assert inspect.getsource(multimodal).count("applyInPandas(") == 0
+
+
+def _kernel_rows(tbl):
+    return sorted(
+        zip(*(tbl.column(c).to_pylist() for c in ("id_a", "id_b", "hamming")))
+    )
+
+
+def test_hamming_pair_kernel_contract():
+    """_hamming_pair_kernel called directly on hand-built Arrow tables:
+    a 1-row bucket returns an empty table with exactly the
+    ``id_a long, id_b long, hamming long`` schema; a bucket holding
+    pairs at Hamming 0, 3 and 4 emits only the <= 3 pairs, id_a < id_b;
+    the blocked form emits a pair only under the group whose (b1, b2)
+    is its ordered block pair, so the blocked groups partition the
+    unblocked output exactly once."""
+    import pyarrow as pa
+
+    want_schema = pa.schema(
+        [("id_a", pa.int64()), ("id_b", pa.int64()), ("hamming", pa.int64())]
+    )
+    flat = multimodal._hamming_pair_kernel(3, blocked=False)
+    one = flat(pa.table({"band": [0], "key": [1], "doc": [5], "h_hi": [1], "h_lo": [2]}))
+    assert one.schema == want_schema and one.num_rows == 0
+
+    # docs 2 and 9 are identical (Hamming 0), 7 is 3 bits from both,
+    # 4 is 4 bits from 2/9 and 7 bits from 7
+    docs, his, los, blks = [9, 2, 7, 4], [0, 0, 0b111, 0], [0, 0, 0, 0b1111], [0, 1, 1, 0]
+    bucket = {"band": [0] * 4, "key": [0] * 4, "doc": docs, "h_hi": his, "h_lo": los}
+    want = [(2, 7, 3), (2, 9, 0), (7, 9, 3)]
+    out = flat(pa.table(bucket))
+    assert out.schema == want_schema
+    assert _kernel_rows(out) == want
+    old = multimodal._HAM_BLOCK_ELEMS
+    multimodal._HAM_BLOCK_ELEMS = 2  # one row per slice
+    try:
+        assert _kernel_rows(flat(pa.table(bucket))) == want
+    finally:
+        multimodal._HAM_BLOCK_ELEMS = old
+
+    blocked = multimodal._hamming_pair_kernel(3, blocked=True)
+    got = {}
+    for b1, b2 in [(0, 0), (0, 1), (1, 1)]:
+        tbl = pa.table({**bucket, "__blk": blks, "b1": [b1] * 4, "b2": [b2] * 4})
+        out = blocked(tbl)
+        assert out.schema == want_schema
+        got[(b1, b2)] = _kernel_rows(out)
+    assert got == {(0, 0): [], (0, 1): [(2, 9, 0), (7, 9, 3)], (1, 1): [(2, 7, 3)]}
+    one_b = blocked(
+        pa.table({"doc": [5], "h_hi": [1], "h_lo": [2], "__blk": [0], "b1": [0], "b2": [0]})
+    )
+    assert one_b.schema == want_schema and one_b.num_rows == 0
+
+
+def test_phash_hamming_prune_exact(spark):
+    """Pruning single-row band buckets before the Arrow verify changes
+    no output. Hand-built hashes: a doc alone in all four of its
+    buckets, a Hamming-2 pair sharing two bands (exercises the pair
+    ``distinct``), a Hamming-4 pair sharing one band (never emitted),
+    and a triple sharing bands (a 3-row bucket goes down the blocked
+    hot path once the hot threshold is lowered to 2). The arrow output
+    equals the ``impl="join"`` twin and brute force over all pairs, at
+    the production hot threshold and at 2."""
+    from itertools import combinations
+
+    from pyspark_data_processing_challenge_spark.operators import multimodal as mm
+
+    rows = [
+        (1, 0x0F0F1E1E, 0x2D2D3C3C),  # alone in all four buckets
+        (2, 0xAAAABBBB, 0xCCCCDDDD),  # 2 and 3: Hamming 2, bands 0+1 shared
+        (3, 0xAAAABBBB, 0xCCCDDDDC),
+        (4, 0x12345678, 0x9ABCDEF0),  # 4 and 5: Hamming 4, band 0 shared
+        (5, 0x12345679, 0x9ABDDEF3),
+        (6, 0x77770000, 0x00000000),  # 6, 7, 8: Hamming 1/2/3
+        (7, 0x77770001, 0x00000000),
+        (8, 0x77770000, 0x00000003),
+    ]
+    brute = sorted(
+        (a, b, bin(ha ^ hb).count("1") + bin(la ^ lb).count("1"))
+        for (a, ha, la), (b, hb, lb) in combinations(rows, 2)
+        if bin(ha ^ hb).count("1") + bin(la ^ lb).count("1") <= 3
+    )
+    assert brute == [(2, 3, 2), (6, 7, 1), (6, 8, 2), (7, 8, 3)]
+    hashes = spark.createDataFrame(rows, "media_id long, h_hi long, h_lo long")
+
+    def pairs(**kw):
+        return sorted(tuple(r) for r in mm.phash_hamming_pairs(hashes, **kw).collect())
+
+    assert pairs(impl="join") == brute
+    assert pairs() == brute
+    old = mm._HAM_ARROW_HOT_THRESHOLD
+    mm._HAM_ARROW_HOT_THRESHOLD = 2
+    try:
+        assert pairs() == brute
+    finally:
+        mm._HAM_ARROW_HOT_THRESHOLD = old
