@@ -29,6 +29,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark_data_processing_challenge_spark.queries import _util  # noqa: E402
 from pyspark_data_processing_challenge_spark.session import get_session  # noqa: E402
 
 # Representative mix: the reference pipeline, heavy relational shapes,
@@ -649,26 +650,10 @@ def main() -> None:
     salt_dirs = _salted_sf_dirs(sf_dir)
 
     def run_once(name: str, rep: int = 0) -> float:
-        # the PCA constructors memoize their build-time collect +
-        # eigensolve per sf_dir (for the plan-lint sweep / parity
-        # runs); a timed rep must pay the real work, so clear it
-        from pyspark_data_processing_challenge_spark.queries import advanced as _adv
-        from pyspark_data_processing_challenge_spark.queries import extended as _ext
-        from pyspark_data_processing_challenge_spark.queries import llm as _llm
-
-        _adv._PCA_MEMO.clear()
-        _llm._CC_MEMO.clear()
-        _ext._KNN_MEMO.clear()
-        # Drop persisted frames leaked by earlier entries/reps: catalog
-        # queries return lazily, so operator-internal persist()s (the
-        # cache_into convention's frames) outlive their query. Left in
-        # place they (a) let a re-rep of an identical plan silently
-        # read the previous rep's cache instead of redoing the work —
-        # docs_containment_pairs' "2.95 s standalone" was exactly this
-        # (CacheManager matches canonical plans; salted honest reps
-        # measure 4.2-5.0 s, r16 diagnosis) — and (b) accumulate ~100
-        # entries of memory/disk pressure by the tail of the run.
-        spark.catalog.clearCache()
+        # a leaked persist() let docs_containment_pairs' re-rep read
+        # the previous rep's cache ("2.95 s standalone" vs 4.2-5.0 s
+        # salted, r16 diagnosis): every rep starts from reset state
+        _util.reset(spark)
         d = sf_dir if rep == 0 or not salt_dirs else salt_dirs[
             (rep - 1) % len(salt_dirs)
         ]
@@ -1826,7 +1811,7 @@ def _bench_scaling(
 # this pass runs after the headline loop and only times the small side.
 # Value = small-side rep count (r14 advice: a single-shot t_small on a
 # 5-10x-swinging host can flag a spurious exponent). The kNN pair reps
-# 3x with min — after the memo clear each rep rebuilds through a FRESH
+# 3x with min — after _util.reset each rep rebuilds through a FRESH
 # localCheckpoint, so its plan is canonically distinct and immune to
 # this build's cross-execution shuffle-stage reuse. The ivf_filtered
 # pair stays single-shot: its plan is purely declarative (no
@@ -1847,17 +1832,14 @@ def _bench_scaling_catalog(
 ) -> None:
     """Append measured exponents for SCALING_CATALOG to the scaling
     section: t_large from the headline min at sf_dir, t_small from the
-    min of its rep budget at SCALING_SMALL_DIR (memoized build-time
-    state cleared per rep, same contract as run_once), behind the
-    shared quiet gate. Same flag-if > {SCALING_FLAG_EXPONENT} rule;
-    same fixed-overhead caveat — k bounds blowup from above."""
+    min of its rep budget at SCALING_SMALL_DIR, every rep starting
+    from ``_util.reset(spark)`` like run_once (no memoized build-time
+    state, no persisted frames), behind the shared quiet gate. Same
+    flag-if > {SCALING_FLAG_EXPONENT} rule; same fixed-overhead
+    caveat — k bounds blowup from above."""
     if not scaling or not os.path.isdir(SCALING_SMALL_DIR) or sf <= 0.01:
         return
     import __spark_entry__ as entrymod
-
-    from pyspark_data_processing_challenge_spark.queries import advanced as _adv
-    from pyspark_data_processing_challenge_spark.queries import extended as _ext
-    from pyspark_data_processing_challenge_spark.queries import llm as _llm
 
     gate = gate or _QuietGate()
     qs = entrymod.queries()
@@ -1869,9 +1851,7 @@ def _bench_scaling_catalog(
         evidence = gate.wait()
         vals = []
         for _ in range(nreps):
-            _adv._PCA_MEMO.clear()
-            _llm._CC_MEMO.clear()
-            _ext._KNN_MEMO.clear()
+            _util.reset(spark)
             t0 = time.perf_counter()
             qs[name](spark, SCALING_SMALL_DIR).write.format("noop").mode(
                 "overwrite"

@@ -19,12 +19,10 @@ ord(ch) == Java ascii(ch) semantics — true for BMP text since Spark's
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .textfns import HASH_MOD, MINHASH_P, minhash_coeffs
@@ -90,173 +88,6 @@ def with_minhash_fast(
     Arrow path. Values are bit-identical to the expression form."""
     udf = minhash_signature_udf(num_hashes, shingle_n)
     return df.withColumn(out_col, udf(F.col(text_col)))
-
-
-# ---------------------------------------------------------------------------
-# XXH64 (r17, guide §4.2): a numpy-vectorized twin of Spark's
-# ``F.xxhash64`` over strings, for the prefix-join family's shingle
-# explode (the ~21 CPU-s/query JVM HOF stage VERDICT r16 #4 targets).
-# Spark's XxHash64 over one string child is the reference XXH64 of the
-# UTF-8 bytes with seed 42 (catalyst XXH64.hashUnsafeBytes: 32-byte
-# stripes, 8/4/1-byte tail, avalanche) — implemented here lane-parallel
-# over a padded byte matrix with per-row length masks, all uint64
-# wraparound arithmetic. Bit-equality is pinned by a hypothesis twin
-# against F.xxhash64 (tests/test_properties.py).
-# ---------------------------------------------------------------------------
-
-_XP1 = np.uint64(0x9E3779B185EBCA87)
-_XP2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_XP3 = np.uint64(0x165667B19E3779F9)
-_XP4 = np.uint64(0x85EBCA77C2B2AE63)
-_XP5 = np.uint64(0x27D4EB2F165667C5)
-_SPARK_XXH64_SEED = np.uint64(42)
-
-
-def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
-    r = np.uint64(r)
-    return (x << r) | (x >> (np.uint64(64) - r))
-
-
-def xxh64_batch(bufs: list[bytes], seed: int = 42) -> np.ndarray:
-    """XXH64 of each byte string, vectorized across the batch.
-
-    Returns int64 (Spark's signed view of the unsigned hash). The
-    batch is padded to one (n, maxlen) uint8 matrix viewed as
-    little-endian u64/u32 lanes; every variable-length step (stripe
-    count, 8/4/1-byte tail) runs masked over the rows that still have
-    bytes, so per-row Python work is only the padding copy.
-    """
-    n = len(bufs)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    old = np.seterr(over="ignore")
-    try:
-        lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-        maxlen = int(lens.max()) if n else 0
-        w = max(8, ((maxlen + 31) // 32) * 32)  # pad to a stripe multiple
-        mat = np.zeros((n, w), dtype=np.uint8)
-        for i, b in enumerate(bufs):
-            if b:
-                mat[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-        words = mat.view("<u8")  # (n, w//8)
-        u32s = mat.view("<u4")  # (n, w//4)
-        seed = np.uint64(seed)
-        ulen = lens.astype(np.uint64)
-
-        big = lens >= 32
-        nstripes = np.where(big, (lens - 32) // 32 + 1, 0)
-        h = np.full(n, seed + _XP5, dtype=np.uint64)
-        if big.any():
-            v1 = np.full(n, seed + _XP1 + _XP2, dtype=np.uint64)
-            v2 = np.full(n, seed + _XP2, dtype=np.uint64)
-            v3 = np.full(n, seed, dtype=np.uint64)
-            v4 = np.full(n, seed - _XP1, dtype=np.uint64)
-            for s in range(int(nstripes.max())):
-                m = nstripes > s
-                base = 4 * s
-                for v, j in ((v1, 0), (v2, 1), (v3, 2), (v4, 3)):
-                    lane = words[m, base + j]
-                    acc = v[m] + lane * _XP2
-                    v[m] = _rotl64(acc, 31) * _XP1
-            hb = (
-                _rotl64(v1, 1)
-                + _rotl64(v2, 7)
-                + _rotl64(v3, 12)
-                + _rotl64(v4, 18)
-            )
-            for v in (v1, v2, v3, v4):
-                hb ^= _rotl64(v * _XP2, 31) * _XP1
-                hb = hb * _XP1 + _XP4
-            h = np.where(big, hb, h)
-        h += ulen
-
-        off = (nstripes * 32).astype(np.int64)  # byte offset into tail
-        rem = lens - off
-        n8 = rem // 8
-        rows = np.arange(n)
-        for k in range(3):
-            m = n8 > k
-            if not m.any():
-                continue
-            lane = words[rows[m], (off[m] // 8) + k]
-            hm = h[m]
-            hm ^= _rotl64(lane * _XP2, 31) * _XP1
-            h[m] = _rotl64(hm, 27) * _XP1 + _XP4
-        off = off + n8 * 8
-        rem = lens - off
-        m4 = rem >= 4
-        if m4.any():
-            lane = u32s[rows[m4], off[m4] // 4].astype(np.uint64)
-            hm = h[m4]
-            hm ^= lane * _XP1
-            h[m4] = _rotl64(hm, 23) * _XP2 + _XP3
-            off = off + np.where(m4, 4, 0)
-        for k in range(7):
-            m = (lens - off) > k
-            if not m.any():
-                break
-            lane = mat[rows[m], off[m] + k].astype(np.uint64)
-            hm = h[m]
-            hm ^= lane * _XP5
-            h[m] = _rotl64(hm, 11) * _XP1
-        # avalanche
-        h ^= h >> np.uint64(33)
-        h *= _XP2
-        h ^= h >> np.uint64(29)
-        h *= _XP3
-        h ^= h >> np.uint64(32)
-        return h.view(np.int64)
-    finally:
-        np.seterr(**old)
-
-
-def xxh64_str(values: list[str | None]) -> np.ndarray:
-    """Spark-equivalent ``xxhash64(col)`` for a list of strings (None
-    hashes to the seed itself, matching Spark's null-skips-child rule —
-    callers here never pass None, but the twin test covers it)."""
-    enc = [v.encode("utf-8") for v in values if v is not None]
-    hashed = xxh64_batch(enc, seed=int(_SPARK_XXH64_SEED))
-    if len(enc) == len(values):
-        return hashed
-    out = np.empty(len(values), dtype=np.int64)
-    j = 0
-    for i, v in enumerate(values):
-        if v is None:
-            out[i] = np.int64(np.uint64(42))
-        else:
-            out[i] = hashed[j]
-            j += 1
-    return out
-
-
-def shingle_xxh64_udf(shingle_n: int = 3):
-    """array<long> of xxhash64 over the doc's DISTINCT n-gram shingles
-    — the Arrow twin of
-    ``transform(shingles(text, n), g -> xxhash64(g))`` feeding
-    ``operators.dedup._rarest_sorted_shingles``. Tokenize + join stay
-    per-shingle Python (C regex + str.join); the hash of every shingle
-    in the batch runs through ONE vectorized xxh64_batch call."""
-
-    @F.pandas_udf("array<long>")
-    def _udf(texts: pd.Series) -> pd.Series:
-        per_doc: list[list[bytes]] = []
-        flat: list[bytes] = []
-        for text in texts:
-            if text is None:
-                per_doc.append([])
-                continue
-            sh = [s.encode("utf-8") for s in _py_shingles(text, shingle_n)]
-            per_doc.append(sh)
-            flat.extend(sh)
-        hashed = xxh64_batch(flat, seed=int(_SPARK_XXH64_SEED))
-        out = []
-        pos = 0
-        for sh in per_doc:
-            out.append(hashed[pos : pos + len(sh)])
-            pos += len(sh)
-        return pd.Series(out)
-
-    return _udf
 
 
 def simhash_udf(bits: int = 32, shingle_n: int | None = None):

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns
@@ -89,26 +89,22 @@ def drop_duplicate_rows(
     shuffle: str = "wide",
     count_partitions: int | None = None,
 ) -> DataFrame:
-    """Whole-row exact dedup keyed on the 128-bit row fingerprint —
-    result-identical to ``dropDuplicates()`` (groups under a fingerprint
-    are identical rows, so the kept row is deterministic by value).
+    """Exact row dedup — result-identical to ``dropDuplicates()``.
 
-    Honest cost accounting (measured, 6M cached rows, local[32]):
-    single-pass wall is roughly NEUTRAL vs all-column ``dropDuplicates``
-    (2.1s vs 1.8s) — Tungsten hash-aggregates on the UnsafeRow's binary
-    bytes, so "16 columns" is not 16 hash calls. What the fingerprint
-    buys instead: (a) a narrow persistable key — store the two longs
-    and anti-join NEW batches against the historical fingerprint table
-    for INCREMENTAL dedup without re-reading old data (the actual 100 TB
-    pattern; all-column dedup can't do this without re-shuffling the
-    corpus); (b) dedup across sources whose row layouts differ but whose
-    fingerprinted columns agree.
+    The default whole-row form (``shuffle="wide"``, ``cols=None``) IS
+    ``df.dropDuplicates()``: grouping on all columns compiles to a
+    keys-only Tungsten HashAggregate on the UnsafeRow's binary bytes,
+    and a fingerprint would be a pure function of that group key. The
+    narrow path and column subsets key on the 128-bit row fingerprint
+    (:func:`with_row_fingerprint`), whose 16 bytes are the persistable
+    key incremental dedup anti-joins new batches against at 100 TB.
 
     ``shuffle`` picks the physical strategy; the result set is identical:
 
-    - ``"wide"`` (default): one hash-aggregate shuffling FULL-WIDTH rows
-      keyed on the fingerprint. Optimal for narrow rows (the shuffle IS
-      the row) and for corpora where most rows are duplicated.
+    - ``"wide"`` (default): one aggregate shuffling FULL-WIDTH rows,
+      keyed on all columns (whole rows) or on the subset's fingerprint.
+      Optimal for narrow rows (the shuffle IS the row) and for corpora
+      where most rows are duplicated.
     - ``"narrow"``: two scans, no full-width shuffle of unique rows.
       Pass A shuffles ONLY the 16-byte fingerprint per row to count
       group sizes and keep the fingerprints seen more than once — a
@@ -131,6 +127,8 @@ def drop_duplicate_rows(
     """
     if shuffle not in ("wide", "narrow"):
         raise ValueError(f"shuffle must be 'wide' or 'narrow', got {shuffle!r}")
+    if shuffle == "wide" and cols is None:
+        return df.dropDuplicates()
     fp_cols = ("__fp0", "__fp1")
     fingerprinted = with_row_fingerprint(df, cols, out_cols=fp_cols)
     if shuffle == "narrow":
@@ -177,16 +175,7 @@ def drop_duplicate_rows(
             F.broadcast(dup_fps), [fp_cols[0]], "left_semi"
         ).dropDuplicates(list(fp_cols))
         return uniques.unionByName(survivors).drop(*fp_cols)
-    if cols is None:
-        # whole-row dedup: grouping on ALL columns (fps are functions of
-        # the row, so groups are identical) compiles to a keys-only
-        # Tungsten HashAggregate; dropDuplicates on just the fp subset
-        # would plan a SortAggregate carrying a wide first() per column
-        # (measured ~2x slower on lineitem)
-        deduped = fingerprinted.dropDuplicates()
-    else:
-        deduped = fingerprinted.dropDuplicates(list(fp_cols))
-    return deduped.drop(*fp_cols)
+    return fingerprinted.dropDuplicates(list(fp_cols)).drop(*fp_cols)
 
 
 def batch_minus_store(
@@ -270,8 +259,8 @@ def incremental_exact_dedup(
     fp_cols = ["__fp0", "__fp1"]
     fingerprinted = with_row_fingerprint(new_df, cols)
     # all-column grouping for whole-row dedup: keys-only HashAggregate
-    # instead of a wide first()-carrying SortAggregate (see
-    # drop_duplicate_rows)
+    # instead of a wide first()-carrying SortAggregate on the fp subset
+    # (measured ~2x slower on lineitem)
     batch = (
         fingerprinted.dropDuplicates()
         if cols is None
@@ -457,6 +446,55 @@ def with_minhash(
     ).drop("__shingle_hs")
 
 
+def _minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    num_hashes: int,
+    shingle_n: int,
+    arrow: bool,
+) -> DataFrame:
+    """(doc, minhash) signatures: the numpy Arrow UDF (functions/
+    fast_text.py) when ``arrow``, else the pure-JVM staged expression —
+    bit-identical values either way (same oracle)."""
+    if arrow:
+        from ..functions.fast_text import with_minhash_fast as sign
+    else:
+        sign = with_minhash
+    return sign(
+        df.select(id_col, text_col), text_col,
+        num_hashes=num_hashes, shingle_n=shingle_n,
+    ).select(F.col(id_col).alias("doc"), "minhash")
+
+
+def _band_keys(sig_col: str, bands: int, rows_per_band: int) -> Column:
+    """LSH band explode, aliased ``bk``: one (band, key) struct per band,
+    ``key`` being the band's signature slice joined as a '-' string."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.array_join(
+                        F.transform(
+                            F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
+                            lambda x: x.cast("string"),
+                        ),
+                        "-",
+                    ).alias("key"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bk")
+
+
+def _n_agree(a: Column, b: Column) -> Column:
+    """Number of signature slots where ``a`` and ``b`` agree."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
+
+
 def minhash_candidates(
     df: DataFrame,
     id_col: str,
@@ -473,19 +511,9 @@ def minhash_candidates(
     routed through the blocked join in :func:`banded_pairs` (boilerplate
     skew guard; identical pair set).
     """
-    band_rows = []
-    for b in range(bands):
-        key = F.array_join(
-            F.transform(
-                F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-            "-",
-        )
-        band_rows.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
     exploded = df.select(
-        F.col(id_col).alias("doc"), F.explode(F.array(*band_rows)).alias("bk")
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.col(id_col).alias("doc"), _band_keys(sig_col, bands, rows_per_band)
+    ).select("doc", "bk.band", "bk.key")
     return banded_pairs(exploded).distinct()
 
 
@@ -523,45 +551,16 @@ def minhash_near_duplicates(
     self-join (:func:`banded_pairs`) — same pair set, bounded task size
     under boilerplate skew.
     """
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
-
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    sigs = sigs.repartition("doc")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
+    sigs = _minhash_signatures(
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
+    ).repartition("doc")
     exploded = sigs.select(
-        "doc", "minhash", F.explode(F.array(*band_rows)).alias("bk")
-    ).select("doc", "minhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        "doc", "minhash", _band_keys("minhash", bands, num_hashes // bands)
+    ).select("doc", "minhash", "bk.band", "bk.key")
     pairs = banded_pairs(
         exploded, "minhash", hot_threshold=hot_threshold, num_blocks=num_blocks
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("minhash_a"), F.col("minhash_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
+    agree = _n_agree(F.col("minhash_a"), F.col("minhash_b"))
     est = agree.cast("double") / F.lit(float(num_hashes))
     return (
         pairs.select("id_a", "id_b", est.alias("est_jaccard"))
@@ -590,37 +589,12 @@ def _banded_signatures(
 ) -> DataFrame:
     """(doc, minhash, band, key) banded signature table for a corpus —
     the persistable representation incremental near-dup joins against."""
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
-
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    return sigs.select(
-        "doc", "minhash", F.explode(F.array(*band_rows)).alias("bk")
-    ).select(
-        "doc", "minhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    sigs = _minhash_signatures(
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
     )
+    return sigs.select(
+        "doc", "minhash", _band_keys("minhash", bands, num_hashes // bands)
+    ).select("doc", "minhash", "bk.band", "bk.key")
 
 
 def incremental_minhash_near_duplicates(
@@ -662,10 +636,7 @@ def incremental_minhash_near_duplicates(
         cache_into.append(new_banded)
 
     def est(a, b):
-        agree = F.size(
-            F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq)
-        )
-        return agree.cast("double") / F.lit(float(num_hashes))
+        return _n_agree(a, b).cast("double") / F.lit(float(num_hashes))
 
     # ingest orientation (the batch_minus_store/SemDeDup rule): the
     # batch is the small side — broadcast it on the self-join and the
@@ -1663,52 +1634,22 @@ def bbit_minhash_near_duplicates(
     shrinking bytes — the paper's core trade.
     """
     mask_mod = 1 << b_bits
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
-
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
+    sigs = _minhash_signatures(
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
+    )
     bb = sigs.select(
         "doc",
         F.transform(
             "minhash", lambda h: (h % F.lit(mask_mod)).cast("int")
         ).alias("bb"),
     ).repartition("doc")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("bb"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
     exploded = bb.select(
-        "doc", "bb", F.explode(F.array(*band_rows)).alias("bk")
-    ).select(
-        "doc", "bb", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
+        "doc", "bb", _band_keys("bb", bands, num_hashes // bands)
+    ).select("doc", "bb", "bk.band", "bk.key")
     pairs = banded_pairs(
         exploded, "bb", hot_threshold=hot_threshold, num_blocks=num_blocks
     )
-    n_match = F.size(
-        F.filter(
-            F.zip_with(F.col("bb_a"), F.col("bb_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
+    n_match = _n_agree(F.col("bb_a"), F.col("bb_b"))
     collision = 1.0 / float(mask_mod)
     p = n_match.cast("double") / F.lit(float(num_hashes))
     est = (p - F.lit(collision)) / F.lit(1.0 - collision)

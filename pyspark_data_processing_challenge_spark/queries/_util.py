@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -17,6 +19,50 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return events_table(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+_MEMO: dict = {}
+
+
+def _stamp(sf_dir: str) -> tuple:
+    """Sorted (relpath, size, mtime_ns) of every file under ``sf_dir``,
+    following symlinks (bench re-reps read through symlinked twins)."""
+    out = []
+    for root, _dirs, files in os.walk(sf_dir, followlinks=True):
+        for f in files:
+            path = os.path.join(root, f)
+            st = os.stat(path)
+            out.append((os.path.relpath(path, sf_dir), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, compute):
+    """``compute()``, reused across catalog queries that share a
+    build-time sub-result (a PCA eigensolve, a localCheckpointed kNN
+    graph or component table). Plan-lint sweeps and full-catalog parity
+    runs build every query, so each sub-result is paid once per input.
+
+    The entry belongs to one Spark application and one state of the
+    input files: it is keyed by (applicationId, sf_dir, name) and
+    stamped with every file's (relpath, size, mtime_ns). A restarted
+    session or a rewritten parquet file recomputes instead of reading a
+    dead checkpoint or a stale answer. Timed reps start from
+    :func:`reset`, so bench numbers pay the real work."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    stamp = _stamp(sf_dir)
+    hit = _MEMO.get(key)
+    if hit is None or hit[0] != stamp:
+        hit = _MEMO[key] = (stamp, compute())
+    return hit[1]
+
+
+def reset(spark: SparkSession) -> None:
+    """The state every timed rep starts from: no memoized sub-result
+    and no persisted frame (catalog queries return lazily, so
+    operator-internal persist()s outlive their query and a re-rep of a
+    canonically identical plan would read the previous rep's cache)."""
+    _MEMO.clear()
+    spark.catalog.clearCache()
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:

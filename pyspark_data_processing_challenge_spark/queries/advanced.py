@@ -25,6 +25,7 @@ from ..operators import dedup, selection, similarity, temporal
 from . import relational
 from ._util import (
     centroid_means,
+    memo,
     round_to,
     spread,
     sql_char_hash,
@@ -3059,28 +3060,33 @@ PCA_DIM = 64
 
 # The PCA constructors run a distributed collect + a 128-256-iteration
 # driver eigensolve at DataFrame-BUILD time (the bounded-collect
-# class). Plan-lint sweeps and full-catalog parity runs build every
-# query, so memoize both stages per sf_dir — the moment sums are a
-# deterministic function of the parquet path, so the cache can never
-# go stale within a process (ADVICE r12: the lint sweep alone paid
-# four full solves).
-_PCA_MEMO: dict = {}
-
-
-def _pca_memo(key: tuple, compute):
-    if key not in _PCA_MEMO:
-        _PCA_MEMO[key] = compute()
-    return _PCA_MEMO[key]
-
-
+# class); both stages go through _util.memo (ADVICE r12: the lint
+# sweep alone paid four full solves).
 def _pca_full_rows(spark: SparkSession, sf_dir: str) -> list:
-    return _pca_memo(
-        ("rows_full", sf_dir),
+    return memo(
+        spark,
+        sf_dir,
+        "pca_rows",
         lambda: similarity.embedding_moment_sums(
             spread(t(spark, sf_dir, "embeddings")),
             scale_bits=PCA_SCALE_BITS,
         ).collect(),
     )
+
+
+def _pca_top_k(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """(moment rows, top-PCA_K deflation components) shared by the
+    top-k, projection and per-group PCA queries."""
+    rows = _pca_full_rows(spark, sf_dir)
+    out = memo(
+        spark,
+        sf_dir,
+        "pca_top_k",
+        lambda: similarity.top_k_pcs_power_iteration(
+            rows, k=PCA_K, iters=PCA_K_ITERS, scale_bits=PCA_SCALE_BITS
+        ),
+    )
+    return rows, out
 
 
 def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3109,8 +3115,10 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pca.py (cos > 0.9999 at the measured ~1.07 eigen-gap).
     """
     rows = _pca_full_rows(spark, sf_dir)
-    out = _pca_memo(
-        ("top_pc", sf_dir),
+    out = memo(
+        spark,
+        sf_dir,
+        "pca_top_pc",
         lambda: similarity.top_pc_power_iteration(
             rows, iters=PCA_ITERS, scale_bits=PCA_SCALE_BITS
         ),
@@ -3149,9 +3157,11 @@ def embedding_top_pc_incremental(
             batch, store, scale_bits=PCA_SCALE_BITS
         ).collect()
 
-    rows = _pca_memo(("rows_incr", sf_dir), _compute)
-    out = _pca_memo(
-        ("top_pc_incr", sf_dir),
+    rows = memo(spark, sf_dir, "pca_rows_incr", _compute)
+    out = memo(
+        spark,
+        sf_dir,
+        "pca_top_pc_incr",
         lambda: similarity.top_pc_power_iteration(
             rows, iters=PCA_ITERS, scale_bits=PCA_SCALE_BITS
         ),
@@ -3272,13 +3282,7 @@ def embedding_top_k_pcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant directions supports larger k at fewer iterations.
     Output: (component, dim, loading, eigval, explained_ratio),
     {PCA_K}·64 rows, portable round_to(…, 6)."""
-    rows = _pca_full_rows(spark, sf_dir)
-    out = _pca_memo(
-        ("top_k_pcs", sf_dir),
-        lambda: similarity.top_k_pcs_power_iteration(
-            rows, k=PCA_K, iters=PCA_K_ITERS, scale_bits=PCA_SCALE_BITS
-        ),
-    )
+    rows, out = _pca_top_k(spark, sf_dir)
     raw = spark.createDataFrame(
         out,
         "component long, dim long, loading double, eigval double,"
@@ -3314,13 +3318,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = spread(t(spark, sf_dir, "embeddings"))
-    rows = _pca_full_rows(spark, sf_dir)
-    out = _pca_memo(
-        ("top_k_pcs", sf_dir),
-        lambda: similarity.top_k_pcs_power_iteration(
-            rows, k=PCA_K, iters=PCA_K_ITERS, scale_bits=PCA_SCALE_BITS
-        ),
-    )
+    rows, out = _pca_top_k(spark, sf_dir)
     n = next(int(r[2]) for r in rows if int(r[0]) == -1)
     nf = float(n)
     scale = float(2**PCA_SCALE_BITS)
@@ -3387,13 +3385,7 @@ def embedding_group_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = spread(t(spark, sf_dir, "embeddings"))
-    rows = _pca_full_rows(spark, sf_dir)
-    out = _pca_memo(
-        ("top_k_pcs", sf_dir),
-        lambda: similarity.top_k_pcs_power_iteration(
-            rows, k=PCA_K, iters=PCA_K_ITERS, scale_bits=PCA_SCALE_BITS
-        ),
-    )
+    rows, out = _pca_top_k(spark, sf_dir)
     n = next(int(r[2]) for r in rows if int(r[0]) == -1)
     nf_g = float(n)
     scale = float(2**PCA_SCALE_BITS)

@@ -16,6 +16,7 @@ from ..functions import textfns, vectors
 from ..functions.textfns import LANG_STOPWORDS, PUNCT_CLASS
 from ..operators import dedup, similarity
 from ._util import (
+    memo,
     round_to,
     sql_char_hash,
     sql_cosine,
@@ -4989,10 +4990,7 @@ FROM per_doc GROUP BY split
 
 # The cluster-split constructors run minhash + iterative connected
 # components at DataFrame-BUILD time (CC localCheckpoints per
-# iteration). Full-catalog sweeps (plan lint, oracle parity) build
-# every query, so memoize the pair-bounded component label table per
-# sf_dir — deterministic function of the parquet path. bench.py clears
-# this per timed rep (same contract as advanced._PCA_MEMO).
+# iteration); their sub-results go through _util.memo.
 #
 # The memo holds a localCheckpointed (doc_id, component) *DataFrame*,
 # NEVER a driver-side Python list (VERDICT r13 #1): the label table is
@@ -5000,9 +4998,6 @@ FROM per_doc GROUP BY split
 # at crawl-scale duplicate rates (30-50 % of a 100 TB corpus) a
 # .collect() of it is a corpus-fraction-sized driver OOM. Checkpointed
 # executor blocks scale with the cluster; the driver never sees a row.
-_CC_MEMO: dict = {}
-
-
 def _nd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The perturbed corpus's near-dup pair list, materialized ONCE per
     memo window (r17, the iterative-operator rule): the pair join is
@@ -5010,14 +5005,14 @@ def _nd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval consumed it twice per run (once for the CC labels, once for
     the cross-split pair audit). localCheckpointed so both consumers
     read the materialized RDD; pair-bounded rows, executor-side."""
-    key = ("nd_pairs", sf_dir)
-    if key not in _CC_MEMO:
-        _CC_MEMO[key] = (
-            minhash_near_dup(spark, sf_dir)
-            .select("id_a", "id_b")
-            .localCheckpoint()
-        )
-    return _CC_MEMO[key]
+    return memo(
+        spark,
+        sf_dir,
+        "nd_pairs",
+        lambda: minhash_near_dup(spark, sf_dir)
+        .select("id_a", "id_b")
+        .localCheckpoint(),
+    )
 
 
 def _cluster_keyed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5038,18 +5033,17 @@ def _cluster_keyed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import graph
 
     corpus = _perturbed_docs(spark, sf_dir)
-    key = ("components", sf_dir)
-    if key not in _CC_MEMO:
-        pairs = _nd_pairs(spark, sf_dir)
-        _CC_MEMO[key] = (
-            graph.connected_components(pairs)
-            .select(
-                F.col("node").cast("long").alias("doc_id"),
-                F.col("component").cast("long").alias("component"),
-            )
-            .localCheckpoint()
+    comp = memo(
+        spark,
+        sf_dir,
+        "cc_components",
+        lambda: graph.connected_components(_nd_pairs(spark, sf_dir))
+        .select(
+            F.col("node").cast("long").alias("doc_id"),
+            F.col("component").cast("long").alias("component"),
         )
-    comp = _CC_MEMO[key]
+        .localCheckpoint(),
+    )
     return corpus.join(F.broadcast(comp), "doc_id", "left").withColumn(
         "cluster",
         F.coalesce(F.col("component"), F.col("doc_id")).cast("long"),
@@ -5209,50 +5203,50 @@ def _inc_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banded store streams, never shuffles) feed
     graph.incremental_components, which folds them into the store's
     spanning forest WITHOUT the historical edge list. Returns a
-    localCheckpointed (doc_id, component) DataFrame memoized per
-    sf_dir like the full-path _CC_MEMO — distributed, never a driver
-    collect (same 100 TB rationale; see _CC_MEMO)."""
-    key = ("components_inc", sf_dir)
-    if key in _CC_MEMO:
-        return _CC_MEMO[key]
-    from ..operators import graph
+    localCheckpointed (doc_id, component) DataFrame through _util.memo
+    like the full-path components — distributed, never a driver collect
+    (same 100 TB rationale)."""
 
-    corpus = _perturbed_docs(spark, sf_dir)
-    is_batch = (F.col("doc_id") >= 100000) & (F.col("doc_id") % 2 == 1)
-    batch = corpus.filter(is_batch)
-    hist = corpus.filter(~is_batch)
-    empty = spark.createDataFrame(
-        [], "doc long, minhash array<bigint>, band int, key string"
-    )
-    mh_kw = dict(
-        num_hashes=MH_HASHES,
-        shingle_n=MH_SHINGLE_N,
-        bands=MH_ND_BANDS,
-        threshold=MH_ND_THRESHOLD,
-    )
-    caches: list = []
-    hist_pairs, hist_banded = dedup.incremental_minhash_near_duplicates(
-        hist, empty, "text", "doc_id", cache_into=caches, **mh_kw
-    )
-    comp_store = graph.connected_components(
-        hist_pairs.select("id_a", "id_b")
-    )
-    comp = graph.incremental_components(
-        dedup.incremental_minhash_near_duplicates(
-            batch, hist_banded, "text", "doc_id", cache_into=caches, **mh_kw
-        )[0].select("id_a", "id_b"),
-        comp_store,
-    )
-    # localCheckpoint is EAGER: the label table materializes here, so
-    # the signature caches it read can be released immediately after
-    frame = comp.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    ).localCheckpoint()
-    for c in caches:
-        c.unpersist()
-    _CC_MEMO[key] = frame
-    return frame
+    def _compute() -> DataFrame:
+        from ..operators import graph
+
+        corpus = _perturbed_docs(spark, sf_dir)
+        is_batch = (F.col("doc_id") >= 100000) & (F.col("doc_id") % 2 == 1)
+        batch = corpus.filter(is_batch)
+        hist = corpus.filter(~is_batch)
+        empty = spark.createDataFrame(
+            [], "doc long, minhash array<bigint>, band int, key string"
+        )
+        mh_kw = dict(
+            num_hashes=MH_HASHES,
+            shingle_n=MH_SHINGLE_N,
+            bands=MH_ND_BANDS,
+            threshold=MH_ND_THRESHOLD,
+        )
+        caches: list = []
+        hist_pairs, hist_banded = dedup.incremental_minhash_near_duplicates(
+            hist, empty, "text", "doc_id", cache_into=caches, **mh_kw
+        )
+        comp_store = graph.connected_components(
+            hist_pairs.select("id_a", "id_b")
+        )
+        comp = graph.incremental_components(
+            dedup.incremental_minhash_near_duplicates(
+                batch, hist_banded, "text", "doc_id", cache_into=caches, **mh_kw
+            )[0].select("id_a", "id_b"),
+            comp_store,
+        )
+        # localCheckpoint is EAGER: the label table materializes here, so
+        # the signature caches it read can be released immediately after
+        frame = comp.select(
+            F.col("node").cast("long").alias("doc_id"),
+            F.col("component").cast("long").alias("component"),
+        ).localCheckpoint()
+        for c in caches:
+            c.unpersist()
+        return frame
+
+    return memo(spark, sf_dir, "cc_components_inc", _compute)
 
 
 def split_cluster_assign_incremental(

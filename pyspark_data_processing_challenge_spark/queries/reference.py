@@ -101,15 +101,14 @@ def ref_flagship_pipeline_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
       reach the parquet scan and only surviving rows shuffle — this is
       the dominant measured win (≈2× at sf0.1) and grows with filter
       selectivity at scale;
-    - R1 dedups on a 128-bit row fingerprint
-      (operators/dedup.drop_duplicate_rows) — roughly cost-neutral for
-      a single pass (see its docstring for the honest measurement), but
-      the narrow persistable key is what enables INCREMENTAL dedup of
-      new batches against a stored fingerprint table at 100 TB.
+    - R1 is operators/dedup.drop_duplicate_rows' default whole-row
+      form: one keys-only hash aggregate over the filtered rows (its
+      fingerprint-keyed forms serve the narrow-shuffle and incremental
+      paths).
     """
     li = t(spark, sf_dir, "lineitem")
     df = _flagship_filters(li)
-    df = dedup_ops.drop_duplicate_rows(df)  # R1 (fingerprint-keyed)
+    df = dedup_ops.drop_duplicate_rows(df)  # R1
     return _flagship_tail(df)
 
 

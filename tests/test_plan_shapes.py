@@ -6,6 +6,7 @@ run finds out."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_data_processing_challenge_spark import plans
@@ -16,6 +17,15 @@ from pyspark_data_processing_challenge_spark.queries import (
     relational,
 )
 from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module")
+def catalog(spark) -> dict:
+    """Every catalog query built once at SF_DIR (name → DataFrame),
+    shared by the catalog-wide plan lints."""
+    import __spark_entry__ as entrymod
+
+    return {name: fn(spark, SF_DIR) for name, fn in entrymod.queries().items()}
 
 
 def test_date_filter_pushes_to_scan(spark):
@@ -139,17 +149,15 @@ def test_quartiles_twin_is_shuffle_free(spark):
     assert plans.exchange_count(df) == 0
 
 
-def test_headline_queries_have_no_global_window_over_raw(spark):
+def test_headline_queries_have_no_global_window_over_raw(catalog):
     # quantify the WindowExec story: no bench headline query may funnel
     # an unaggregated table into a single-partition Window
     import bench
-    import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
     offenders = [
         name
         for name in bench.HEADLINE
-        if plans.global_window_over_raw(qs[name](spark, SF_DIR))
+        if plans.global_window_over_raw(catalog[name])
     ]
     assert not offenders, f"global window over raw table: {offenders}"
 
@@ -706,7 +714,7 @@ def test_ivfpq_ingest_never_shuffles_the_store_and_broadcasts(spark):
     assert plans.broadcast_join_count(out) >= 4  # probe, anti, cents, cb
 
 
-def test_no_raise_error_in_any_catalog_filter(spark):
+def test_no_raise_error_in_any_catalog_filter(catalog):
     """Regression net for the r11 curate_corpus detonation: a
     side-effecting assert-style predicate in a Filter gets copied by
     InferFiltersFromConstraints through join equalities onto relations
@@ -717,13 +725,9 @@ def test_no_raise_error_in_any_catalog_filter(spark):
     substitutes them into same-relation filters (see
     plans.raise_error_in_filter for why that form cannot cross a
     join)."""
-    import __spark_entry__ as entrymod
-
-    offenders = []
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, SF_DIR)
-        if plans.raise_error_in_filter(df):
-            offenders.append(name)
+    offenders = [
+        name for name, df in catalog.items() if plans.raise_error_in_filter(df)
+    ]
     assert not offenders, f"raise_error inside a Filter: {offenders}"
 
 

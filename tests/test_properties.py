@@ -168,64 +168,6 @@ def test_fast_minhash_matches_expression(spark, texts):
     assert a == b
 
 
-xxh_text = st.text(
-    alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FFF),
-    max_size=200,  # crosses the 32-byte stripe path and multi-stripe
-)
-
-
-@SETTINGS
-@given(texts=st.lists(xxh_text, min_size=1, max_size=12))
-def test_numpy_xxh64_matches_spark(spark, texts):
-    """fast_text.xxh64_str must be BIT-IDENTICAL to F.xxhash64 over
-    strings (seed 42) — the contract that lets the prefix-join family's
-    shingle hashing move to the Arrow kernel (VERDICT r16 #4). Covers
-    empty strings, multi-byte UTF-8, and lengths through every XXH64
-    path (stripes / 8 / 4 / 1-byte tails)."""
-    from pyspark_data_processing_challenge_spark.functions.fast_text import (
-        xxh64_str,
-    )
-
-    df = spark.createDataFrame([(t,) for t in texts], "s string")
-    want = [
-        r["h"] for r in df.select(F.xxhash64(F.col("s")).alias("h")).collect()
-    ]
-    got = [int(v) for v in xxh64_str(texts)]
-    assert got == want
-
-
-@SETTINGS
-@given(texts=st.lists(ascii_text.filter(lambda t: t.strip()), min_size=1, max_size=8))
-def test_shingle_xxh64_udf_matches_expression(spark, texts):
-    """The Arrow shingle-hash kernel must produce exactly the rows the
-    JVM form (explode(shingles) -> xxhash64) produces, element order
-    included — _rarest_sorted_shingles' correctness twin."""
-    from pyspark_data_processing_challenge_spark.functions import textfns
-    from pyspark_data_processing_challenge_spark.functions.fast_text import (
-        shingle_xxh64_udf,
-    )
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    jvm = {
-        r["doc_id"]: list(r["gs"])
-        for r in df.select(
-            "doc_id",
-            F.transform(
-                textfns.shingles(F.col("text"), 3), lambda g: F.xxhash64(g)
-            ).alias("gs"),
-        ).collect()
-    }
-    fast = {
-        r["doc_id"]: list(r["gs"])
-        for r in df.select(
-            "doc_id", shingle_xxh64_udf(3)(F.col("text")).alias("gs")
-        ).collect()
-    }
-    assert fast == jvm
-
-
 @SETTINGS
 @given(
     w=st.integers(1, 128),

@@ -318,14 +318,16 @@ def test_parse_media_header_hardening():
 
 def test_row_fingerprint_null_position(spark):
     """Rows differing only in WHICH column is null are distinct rows —
-    the fingerprint must not collide them (xxhash64 skips nulls)."""
+    the fingerprint must not collide them (xxhash64 skips nulls). The
+    narrow path keys on the fingerprint; the wide whole-row path is
+    plain dropDuplicates."""
     from pyspark_data_processing_challenge_spark.operators import dedup
 
     df = spark.createDataFrame(
         [("x", None), (None, "x"), ("x", None)], "a string, b string"
     )
-    out = dedup.drop_duplicate_rows(df)
-    assert out.count() == 2
+    for shuffle in ("wide", "narrow"):
+        assert dedup.drop_duplicate_rows(df, shuffle=shuffle).count() == 2
     assert df.dropDuplicates().count() == 2
 
 

@@ -6,8 +6,8 @@ Usage:
 Times qs[name](spark, sf_dir) -> noop sink like bench.run_once, with a
 job-level report from the driver's AppStatusStore (job id, description,
 wall seconds) for the LAST rep, so the cost of a multi-job query
-(localCheckpoints, iterative loops, collects) is attributable. Clears
-the operator memos + cache per rep like the bench.
+(localCheckpoints, iterative loops, collects) is attributable. Each
+rep starts from ``_util.reset(spark)`` like the bench.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from pyspark_data_processing_challenge_spark.queries import _util  # noqa: E402
 from pyspark_data_processing_challenge_spark.session import get_session  # noqa: E402
 
 
@@ -52,10 +53,6 @@ def main() -> None:
 
     qs = entrymod.queries()
 
-    from pyspark_data_processing_challenge_spark.queries import advanced as _adv
-    from pyspark_data_processing_challenge_spark.queries import extended as _ext
-    from pyspark_data_processing_challenge_spark.queries import llm as _llm
-
     # same warmup as bench
     spark.range(1000).selectExpr("sum(id)").collect()
     for wt in ("lineitem", "orders", "events", "documents", "embeddings"):
@@ -64,10 +61,7 @@ def main() -> None:
 
     statusTracker = sc.statusTracker()
     for r in range(reps):
-        _adv._PCA_MEMO.clear()
-        _llm._CC_MEMO.clear()
-        _ext._KNN_MEMO.clear()
-        spark.catalog.clearCache()
+        _util.reset(spark)
         prior = statusTracker.getJobIdsForGroup(None) or []
         first_new_job = (max(prior) + 1) if prior else 0
         t0 = time.perf_counter()
