@@ -8,8 +8,12 @@ Re-expresses the reference's three gates (SURVEY.md §2.3):
   after finding ``min_rows`` rows.
 - Q2 required-columns gate (reference: :283-292) — metadata only.
 - Q3 output not-null gate (reference: :296-313) — the reference ran ONE
-  JOB PER COLUMN; here a single aggregate computes all null counts in
-  one pass. It also names columns post-rename explicitly instead of
+  JOB PER COLUMN; here one set of sum(isNull) expressions counts every
+  column's nulls in one pass. ``pipeline.run`` hangs those expressions
+  on the write itself as an ``Observation`` (the output is staged,
+  gated, then published), so the gate costs no job of its own;
+  ``check_no_nulls`` is the eager form for frames that are not
+  written. It also names columns post-rename explicitly instead of
   leaning on analyzer missing-reference resolution.
 
 Gates raise ``QualityError`` (or return a report) instead of the
@@ -18,10 +22,10 @@ reference's log-and-exit-0 contract (SURVEY §2.1 S7).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,17 +56,18 @@ def missing_columns(df: DataFrame, required: Sequence[str]) -> list[str]:
     return [c for c in required if c not in have]
 
 
+def null_count_exprs(cols: Sequence[str]) -> list[Column]:
+    """One ``sum(isNull)`` aggregate per listed column, aliased by the
+    column's name — usable in a ``select`` or an ``observe``."""
+    return [F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols]
+
+
 def null_counts(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """One-row DataFrame with a null-count per listed column, computed in
     a SINGLE aggregate pass (vs the reference's one filter+count job per
     column). Map-side partial aggregation makes this a near-free scan.
     """
-    return df.select(
-        [
-            F.sum(F.col(c).isNull().cast("long")).alias(c)
-            for c in cols
-        ]
-    )
+    return df.select(null_count_exprs(cols))
 
 
 def profile_table(
@@ -152,15 +157,22 @@ def check_input(
     return QualityReport(True, {"min_rows": min_rows, "required": list(required_columns)})
 
 
-def check_no_nulls(df: DataFrame, cols: Sequence[str]) -> QualityReport:
-    """Output gate = Q3. Raises QualityError listing offending columns."""
-    if not cols:
-        return QualityReport(True, {})
-    row = null_counts(df, cols).first()
-    bad = {c: int(row[c]) for c in cols if row[c]}
+def require_no_nulls(counts: Mapping[str, int | None], cols: Sequence[str]) -> QualityReport:
+    """Q3 verdict on already-computed null counts (a ``null_counts`` row
+    or an ``Observation`` over ``null_count_exprs``). Raises
+    QualityError listing offending columns."""
+    bad = {c: int(counts[c]) for c in cols if counts[c]}
     if bad:
         raise QualityError(f"null values present: {bad}")
     return QualityReport(True, {c: 0 for c in cols})
+
+
+def check_no_nulls(df: DataFrame, cols: Sequence[str]) -> QualityReport:
+    """Output gate = Q3 as its own eager job. Raises QualityError listing
+    offending columns."""
+    if not cols:
+        return QualityReport(True, {})
+    return require_no_nulls(null_counts(df, cols).first().asDict(), cols)
 
 
 def run_expectations(df: DataFrame, rules: Sequence[dict]) -> DataFrame:

@@ -15,9 +15,13 @@ Differences by design (SURVEY.md §4.2/§7.5):
 - typed raises (QualityError) instead of log-and-exit-0 on DQ failure;
 - single-scan membership filter (``reference_semantics`` restores the
   double-scan union, which duplicates rows on overlapping sets);
-- one-pass output null gate, with config's pre-rename column names
-  translated through columns_rename instead of leaning on the
-  analyzer's missing-reference resolution (reference Q3 subtlety);
+- the output null gate rides on the write as an ``Observation`` (no
+  job of its own, the lineage runs once): the write goes to a hidden
+  sibling staging directory, and only a clean gate publishes it over
+  the target, so a failed gate leaves the previous output untouched.
+  Config's pre-rename column names are translated through
+  columns_rename instead of leaning on the analyzer's
+  missing-reference resolution (reference Q3 subtlety);
 - LIMIT-probe input row gate instead of a full count;
 - ``observe`` metrics instead of eager mid-chain count() actions;
 - null-tolerant date parse + division by default (``strict`` opt-in);
@@ -31,6 +35,7 @@ from collections.abc import Mapping
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -159,7 +164,12 @@ def run(
     write: bool = True,
     reference_semantics: bool = False,
 ) -> PipelineResult:
-    """Full job: read → DQ-in → transform → DQ-out → (write)."""
+    """Full job: read → DQ-in → transform → DQ-out → (write).
+
+    With ``write`` the DQ-out counts are observed on the write itself,
+    into a staging sibling of the output path that is published (old
+    output deleted, staging renamed onto it) only if the gate passes;
+    without it the gate is one eager aggregate."""
     dq = conf.get("data_quality", {})
     df = read_input(spark, conf, base_dir=base_dir)
     quality.check_input(
@@ -174,19 +184,73 @@ def run(
     not_nulls = [
         rename.get(c, c) for c in dq.get("output", {}).get("not_nulls", [])
     ]
-    quality.check_no_nulls(out, not_nulls)
-    metrics: dict[str, Any] = {}
-    if write:
-        rp = conf["run_parameters"]
-        env = conf.get("environment", {}).get("name", "DEV")
-        path = output_path or f"{base_dir}/{rp['output_base_path']}/{env}"
+    if not write:  # no write for the gate to ride on
+        quality.check_no_nulls(out, not_nulls)
+        return PipelineResult(out, {})
+    gated = out
+    if not_nulls:
+        gate = Observation()
+        gated = out.observe(gate, *quality.null_count_exprs(not_nulls))
+    rp = conf["run_parameters"]
+    env = conf.get("environment", {}).get("name", "DEV")
+    path = output_path or f"{base_dir}/{rp['output_base_path']}/{env}"
+    target, staging, fs = _staging_paths(spark, path)
+    try:
         write_table(
-            out,
+            gated,
             {
-                "path": path,
+                "path": staging.toString(),
                 "partition_by": rp.get("partition_columns", []),
                 "mode": "overwrite",
             },
         )
-        metrics = dict(obs.get)
+        metrics = _observed(obs)
+        counts = _observed(gate) if not_nulls else {}
+        if not metrics or (not_nulls and not counts):
+            # AQE swaps a shuffle stage that produced no rows for an
+            # empty relation, and the observations inside it are lost
+            # with it: recount exactly from the staged output instead.
+            # Everything after the filters is row-preserving, so the
+            # written row count is rows_after_filters.
+            counts = (
+                spark.read.schema(gated.schema)
+                .parquet(staging.toString())
+                .select(
+                    F.count(F.lit(1)).alias("rows_after_filters"),
+                    *quality.null_count_exprs(not_nulls),
+                )
+                .first()
+                .asDict()
+            )
+            metrics = {"rows_after_filters": counts["rows_after_filters"]}
+        quality.require_no_nulls(counts, not_nulls)
+        fs.delete(target, True)
+        if not fs.rename(staging, target):
+            raise OSError(f"could not publish {staging} as {target}")
+    finally:
+        fs.delete(staging, True)  # no-op once published
     return PipelineResult(out, metrics)
+
+
+def _observed(obs: Observation) -> dict[str, Any]:
+    """``obs.get`` after its action, or ``{}`` if the action delivered
+    no metrics row (``get`` then fails inside py4j)."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return {}
+
+
+def _staging_paths(spark: SparkSession, path: str):
+    """(target, staging, FileSystem) for a staged write to ``path``: the
+    staging directory is the hidden sibling ``.<name>.staging`` (readers
+    skip dot-prefixed entries), on the same Hadoop FileSystem so the
+    publish is a rename on any scheme."""
+    jvm = spark.sparkContext._jvm
+    raw = jvm.org.apache.hadoop.fs.Path(path)
+    fs = raw.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    target = fs.makeQualified(raw)
+    staging = jvm.org.apache.hadoop.fs.Path(
+        target.getParent(), f".{target.getName()}.staging"
+    )
+    return target, staging, fs

@@ -2,10 +2,17 @@
 
 Matches the reference's parquet sink (reference: data_process.py:315-330
 — mode=overwrite, partitionBy(fecha_proceso, pais)) and generalizes it:
-any format, any partition columns, optional bucketing for downstream
-co-located joins, and a guard against high-cardinality partition columns
-(SURVEY.md §7.5.3 — a partitionBy on a million-distinct key creates a
-million directories and kills the namenode/listing at scale).
+any format, any partition columns, and a guard against high-cardinality
+partition columns (SURVEY.md §7.5.3 — a partitionBy on a
+million-distinct key creates a million directories and kills the
+namenode/listing at scale).
+
+A partitioned write is rebalanced on its partition columns first (the
+``REBALANCE`` hint): without it every write task opens one file per
+partition directory it touches, so N tasks spread over D directories
+leave up to N×D small files. With it each directory's rows land in one
+task and one file, while AQE still splits a skewed directory across
+several tasks. Unpartitioned writes keep their input's plan.
 """
 
 from __future__ import annotations
@@ -48,6 +55,8 @@ def write_table(
                 f"partition_by {partition_by} would create ~{n} partitions "
                 f"(> {max_partitions}); repartition or bucket instead"
             )
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     writer = df.write.format(fmt).mode(str(conf.get("mode", "overwrite")))
     options = dict(conf.get("options") or {})
     if options:

@@ -466,11 +466,10 @@ def epoch_sink(out_dir: str):
     directly."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             batch_df.withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(out_dir)
         )
@@ -508,7 +507,6 @@ def dedup_ingest_sink(out_dir: str, fp_store_dir: str, cols=None):
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             store = (
                 spark.read.parquet(fp_store_dir)
@@ -530,6 +528,7 @@ def dedup_ingest_sink(out_dir: str, fp_store_dir: str, cols=None):
             fresh.drop("__fp0", "__fp1")
             .withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(out_dir)
         )
@@ -537,6 +536,7 @@ def dedup_ingest_sink(out_dir: str, fp_store_dir: str, cols=None):
             fresh.select("__fp0", "__fp1")
             .withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(fp_store_dir)
         )
@@ -602,7 +602,6 @@ def cluster_split_ingest_sink(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             store_all = (
                 spark.read.schema(_CSPLIT_STORE_SCHEMA)
@@ -659,6 +658,7 @@ def cluster_split_ingest_sink(
             assigned.withColumn("__epoch", F.lit(epoch_id))
             .coalesce(1)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(out_dir)
         )
@@ -679,6 +679,7 @@ def cluster_split_ingest_sink(
             .withColumn("__epoch", F.lit(epoch_id))
             .coalesce(1)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch", "kind")
             .parquet(store_dir)
         )
@@ -1182,8 +1183,6 @@ def cms_ingest_sink(store_dir: str, key_col: str = "user_id"):
     from ..operators.sketches import cms_cells
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         counts = batch_df.groupBy(
             F.col(key_col).cast("string").alias("k")
         ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -1191,6 +1190,7 @@ def cms_ingest_sink(store_dir: str, key_col: str = "user_id"):
         (
             cells.withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(store_dir)
         )
@@ -1222,8 +1222,6 @@ def pca_moments_ingest_sink(
     from ..operators.similarity import embedding_moment_sums
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         m = embedding_moment_sums(
             batch_df, vec_col=vec_col, id_col=id_col, scale_bits=scale_bits
         )
@@ -1231,6 +1229,7 @@ def pca_moments_ingest_sink(
             m.coalesce(1)
             .withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(store_dir)
         )
@@ -1291,8 +1290,6 @@ def ivm_ingest_sink(store_dir: str):
     merged == one-pass batch aggregate)."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         partial = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).alias("s"),
@@ -1300,6 +1297,7 @@ def ivm_ingest_sink(store_dir: str):
         (
             partial.withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(store_dir)
         )
@@ -1328,8 +1326,6 @@ def cdc_apply_sink(store_dir: str, *, keys, version_col="version", op_col="op"):
     from ..operators.cdc import changelog_compact
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         compacted = changelog_compact(
             batch_df,
             keys,
@@ -1340,6 +1336,7 @@ def cdc_apply_sink(store_dir: str, *, keys, version_col="version", op_col="op"):
         (
             compacted.withColumn("__epoch", F.lit(epoch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(store_dir)
         )
@@ -1399,7 +1396,6 @@ def psi_ingest_sink(out_dir: str, *, edges, ref_counts, value_col: str):
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         edge_arr = F.array(*[F.lit(float(e)) for e in edges])
         v = F.col(value_col)
         binned = batch_df.select(
@@ -1422,6 +1418,7 @@ def psi_ingest_sink(out_dir: str, *, edges, ref_counts, value_col: str):
         )
         (
             out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(out_dir)
         )

@@ -98,9 +98,14 @@ def test_partitioned_write_layout(spark, tmp_path):
         "flag", F.col("l_returnflag")
     )
     out = str(tmp_path / "part_out")
-    write_table(li, {"path": out, "partition_by": ["flag"]})
+    # four input partitions, each holding every flag: without the
+    # rebalance each task writes its own file into every directory
+    write_table(li.repartition(4), {"path": out, "partition_by": ["flag"]})
     dirs = {d for d in os.listdir(out) if d.startswith("flag=")}
     assert dirs == {"flag=A", "flag=N", "flag=R"}
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if not f.startswith((".", "_"))]
+        assert len(files) == 1, (d, files)
     back = spark.read.parquet(out)
     assert back.count() == li.count()
 

@@ -129,6 +129,28 @@ def test_exactly_once_sink_replay_is_idempotent(spark, tmp_path):
     assert rows_after == rows_before
 
 
+def test_epoch_sink_overwrite_mode_is_writer_scoped(spark, tmp_path):
+    """The sink overwrites its own epoch partition (dynamic mode on its
+    writer) and leaves the session's partitionOverwriteMode alone, so
+    later partitioned overwrites in the same session stay static."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    out = str(tmp_path / "epochs")
+    batch = spark.range(6).withColumn("x", F.col("id") * 2)
+    sink = sev.epoch_sink(out)
+    sink(batch, 0)
+    sink(batch.filter(F.col("id") < 2), 1)
+    sink(batch.filter(F.col("id") < 3), 0)  # replay of epoch 0
+    assert spark.conf.get(key) == before
+    got = {
+        r["__epoch"]: r["n"]
+        for r in spark.read.parquet(out).groupBy("__epoch").count()
+        .withColumnRenamed("count", "n").collect()
+    }
+    assert got == {0: 3, 1: 2}
+
+
 def test_stream_static_enrichment_matches_batch(spark):
     """Stream-static broadcast join twin-checked against the same join
     done in batch: per-segment event counts must agree."""
