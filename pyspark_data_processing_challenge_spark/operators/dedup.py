@@ -15,7 +15,9 @@ needs a family of strategies, each with a different cost/recall point:
   operators/similarity.py for the bucketing).
 
 Everything is DataFrame-native: shuffles only on narrow derived keys,
-no driver-side loops, no UDFs.
+no driver-side loops. The MinHash and SimHash signatures are the one
+Python step: a numpy Arrow UDF (functions/fast_text.py) per row,
+bit-identical to the JVM expressions ``with_minhash``/``with_simhash``.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns
+from ..functions.fast_text import simhash_udf, with_minhash_fast
 
 # --------------------------------------------------------------------------
 # exact dedup
@@ -87,7 +90,6 @@ def drop_duplicate_rows(
     cols: Sequence[str] | None = None,
     *,
     shuffle: str = "wide",
-    count_partitions: int | None = None,
 ) -> DataFrame:
     """Exact row dedup — result-identical to ``dropDuplicates()``.
 
@@ -155,8 +157,7 @@ def drop_duplicate_rows(
         # (defaultParallelism on a cluster is total executor cores), so
         # per-task table size stays bounded as data and cluster grow
         # together; AQE never coalesces a user-numbered repartition.
-        sc = df.sparkSession.sparkContext
-        n_count_parts = count_partitions or 8 * sc.defaultParallelism
+        n_count_parts = 8 * df.sparkSession.sparkContext.defaultParallelism
         dup_fps = (
             fingerprinted.select(fp_cols[0])
             .repartition(n_count_parts, fp_cols[0])
@@ -301,122 +302,102 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFram
 # --------------------------------------------------------------------------
 
 
+def blocked_replicas(
+    exploded: DataFrame, *, hot_threshold: int, num_blocks: int
+) -> DataFrame:
+    """The banded table ``(doc, ..., band, key)`` keyed for one blocked
+    self-join or grouped kernel: adds ``__blk``, ``b1``, ``b2``.
+
+    A window count over ``(band, key)`` sizes every bucket. A bucket of
+    one row can emit no pair and is dropped here. A hot row (bucket
+    above ``hot_threshold``) gets ``__blk = hash(doc) % num_blocks`` and
+    one replica per block q under ``(min(__blk, q), max(__blk, q))``; a
+    cold row gets ``__blk = 0`` and the single replica ``(0, 0)``. A
+    pair (a, b) is then taken only under the replica whose key IS its
+    ordered block pair ``(min(__blk_a, __blk_b), max(...))`` — exactly
+    once, including when both docs hash to the same block (where every
+    q yields the same key). For cold rows that rule holds trivially, so
+    one join or one grouping serves both kinds of bucket, while the
+    worst hot task shrinks from n² to (n/num_blocks)² pairs at a
+    num_blocks× replication of only the hot rows."""
+    w = Window.partitionBy("band", "key")
+    sized = exploded.withColumn("__bn", F.count(F.lit(1)).over(w)).filter(
+        F.col("__bn") > 1
+    )
+    hot = F.col("__bn") > hot_threshold
+    blk = F.when(
+        hot, F.pmod(F.xxhash64(F.col("doc")), F.lit(num_blocks)).cast("int")
+    ).otherwise(F.lit(0))
+    blocks = F.array(*[F.lit(q) for q in range(num_blocks)])
+    keys = F.when(
+        hot,
+        F.transform(
+            blocks,
+            lambda q: F.struct(
+                F.least(F.col("__blk"), q).alias("b1"),
+                F.greatest(F.col("__blk"), q).alias("b2"),
+            ),
+        ),
+    ).otherwise(F.array(F.struct(F.lit(0).alias("b1"), F.lit(0).alias("b2"))))
+    return (
+        sized.withColumn("__blk", blk)
+        .withColumn("__bp", F.explode(keys))
+        .select(
+            *exploded.columns,
+            "__blk",
+            F.col("__bp.b1").alias("b1"),
+            F.col("__bp.b2").alias("b2"),
+        )
+    )
+
+
 def banded_pairs(
     exploded: DataFrame,
     payload_col: str | None = None,
     *,
     hot_threshold: int = 64,
     num_blocks: int = 8,
-    cache_into: list | None = None,
 ) -> DataFrame:
     """Candidate pairs from a banded table ``(doc, [payload,] band, key)``:
     docs sharing a (band, key) bucket, ``id_a < id_b``, payload carried
-    as ``payload_a``/``payload_b`` when requested.
+    as ``payload_a``/``payload_b`` when requested. Each pair appears
+    once per bucket it shares.
 
-    Skew guard (boilerplate-heavy corpora put thousands of docs in one
-    band bucket, and a plain self-equi-join then builds one quadratic
-    task): buckets above ``hot_threshold`` are routed through a BLOCKED
-    self-join — each hot row is replicated ``num_blocks`` times under
-    key ``(min(block, q), max(block, q))`` for every block q, where
-    ``block = hash(doc) % num_blocks``; the join additionally requires
-    the replica key to equal the pair's actual (ordered) block pair, so
-    a pair (a, b) meets exactly once — including when both docs hash to
-    the same block, where the replica keys (p, q) coincide for every q
-    and the key match alone would emit the pair num_blocks times. The
-    pair set is therefore IDENTICAL to the plain join while the worst
-    task shrinks from n² to (n/num_blocks)² pairs at a num_blocks×
-    replication of only the hot rows. Cold buckets take the plain join.
+    One lazy plan, one self-join: :func:`blocked_replicas` keys every
+    row by ``(band, key, b1, b2)`` — the skew guard for boilerplate-
+    heavy corpora, where thousands of docs share one band bucket and a
+    plain self-equi-join would build one quadratic task — and the join
+    adds its exactly-once rule. The pair set is IDENTICAL to the plain
+    ``(band, key)`` join.
 
-    Cache lifetime: the banded table is ``persist()``-ed (rationale in
-    the inline comment below). Pass ``cache_into`` (a list) to receive
-    the persisted frame and ``unpersist()`` it once the consuming
-    action finishes — long-lived sessions that call this repeatedly
-    without releasing rely on LRU eviction, which competes with
-    executor memory for real work (see release_caches()).
+    Nothing is persisted: with one join there is one consumer of the
+    window under it (both join sides read the same exchange), so the
+    signature stage feeding ``exploded`` runs once without a cache, and
+    the operator owns no cached frame that would outlive its query. A
+    caller that runs several actions over the result persists and
+    releases it.
     """
-    carry = [payload_col] if payload_col else []
-    # bucket sizes via a window count over the SAME key the self-join
-    # shuffles on, then MATERIALIZE once: the cold/hot × left/right
-    # split creates four consumers whose subtrees differ (different
-    # filters), so exchange reuse can no longer deduplicate the
-    # expensive signature stage feeding ``exploded`` — without the
-    # checkpoint it re-executes once per consumer (measured 8 scans /
-    # 8 Arrow UDF evaluations at sf0.1). The 100 TB equivalent is
-    # writing the signature table to storage and joining from there.
-    # persist(), not localCheckpoint(): under AQE a DataFrame
-    # checkpoint forces the query stages to materialize at CONSTRUCTION
-    # time (even with eager=False — toRdd runs the adaptive stages), so
-    # building the frame to inspect its plan would execute the job.
-    # persist() is truly lazy, computes the signature stage once on
-    # first action, and all four consumers read the cached blocks; the
-    # cache is evicted by LRU / released when the frame is collected.
-    w = Window.partitionBy("band", "key")
-    tagged = exploded.withColumn("__bn", F.count(F.lit(1)).over(w)).persist()
-    if cache_into is not None:
-        cache_into.append(tagged)
-    cold = tagged.filter(F.col("__bn") <= hot_threshold).drop("__bn")
-    hot = tagged.filter(F.col("__bn") > hot_threshold).drop("__bn")
-
-    def pair_select(joined: DataFrame) -> DataFrame:
-        out = [
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-        ]
-        for c in carry:
-            out.append(F.col(f"l.{c}").alias(f"{c}_a"))
-            out.append(F.col(f"r.{c}").alias(f"{c}_b"))
-        return joined.select(*out)
-
-    cl, cr = cold.alias("l"), cold.alias("r")
-    cold_pairs = pair_select(
-        cl.join(
-            cr,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
+    rep = blocked_replicas(
+        exploded, hot_threshold=hot_threshold, num_blocks=num_blocks
     )
-
-    blocks = F.array(*[F.lit(q) for q in range(num_blocks)])
-    hotb = hot.withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("doc")), F.lit(num_blocks)).cast("int")
+    l, r = rep.alias("l"), rep.alias("r")
+    joined = l.join(
+        r,
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.key") == F.col("r.key"))
+        & (F.col("l.b1") == F.col("r.b1"))
+        & (F.col("l.b2") == F.col("r.b2"))
+        # the replica key must BE this pair's block pair (kills the
+        # same-block num_blocks× duplication)
+        & (F.col("l.b1") == F.least(F.col("l.__blk"), F.col("r.__blk")))
+        & (F.col("l.b2") == F.greatest(F.col("l.__blk"), F.col("r.__blk")))
+        & (F.col("l.doc") < F.col("r.doc")),
     )
-    replicated = hotb.withColumn(
-        "__bp",
-        F.explode(
-            F.transform(
-                blocks,
-                lambda q: F.struct(
-                    F.least(F.col("__blk"), q).alias("b1"),
-                    F.greatest(F.col("__blk"), q).alias("b2"),
-                ),
-            )
-        ),
-    ).select(
-        "doc",
-        *carry,
-        "band",
-        "key",
-        "__blk",
-        F.col("__bp.b1").alias("b1"),
-        F.col("__bp.b2").alias("b2"),
-    )
-    hl, hr = replicated.alias("l"), replicated.alias("r")
-    hot_pairs = pair_select(
-        hl.join(
-            hr,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.b1") == F.col("r.b1"))
-            & (F.col("l.b2") == F.col("r.b2"))
-            # replica key must BE this pair's block pair (kills the
-            # same-block num_blocks× duplication)
-            & (F.col("l.b1") == F.least(F.col("l.__blk"), F.col("r.__blk")))
-            & (F.col("l.b2") == F.greatest(F.col("l.__blk"), F.col("r.__blk")))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-    )
-    return cold_pairs.unionByName(hot_pairs)
+    out = [F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b")]
+    if payload_col:
+        out.append(F.col(f"l.{payload_col}").alias(f"{payload_col}_a"))
+        out.append(F.col(f"r.{payload_col}").alias(f"{payload_col}_b"))
+    return joined.select(*out)
 
 
 # --------------------------------------------------------------------------
@@ -453,16 +434,10 @@ def _minhash_signatures(
     *,
     num_hashes: int,
     shingle_n: int,
-    arrow: bool,
 ) -> DataFrame:
-    """(doc, minhash) signatures: the numpy Arrow UDF (functions/
-    fast_text.py) when ``arrow``, else the pure-JVM staged expression —
-    bit-identical values either way (same oracle)."""
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast as sign
-    else:
-        sign = with_minhash
-    return sign(
+    """(doc, minhash) signatures through the numpy Arrow UDF
+    (functions/fast_text.py), bit-identical to :func:`with_minhash`."""
+    return with_minhash_fast(
         df.select(id_col, text_col), text_col,
         num_hashes=num_hashes, shingle_n=shingle_n,
     ).select(F.col(id_col).alias("doc"), "minhash")
@@ -526,7 +501,6 @@ def minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.7,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -537,9 +511,8 @@ def minhash_near_duplicates(
     the band explode, so the expensive text→signature fold is evaluated
     once per side of the self-join — no join-back to the corpus.
 
-    ``arrow=True`` (default) computes signatures via the numpy pandas
-    UDF (functions/fast_text.py) — bit-identical values (same oracle),
-    ~5x faster per row; set False for a pure-JVM plan.
+    Signatures come from the numpy Arrow UDF (functions/fast_text.py):
+    the values of :func:`with_minhash`, ~5x faster per row.
 
     The signature frame is repartitioned before the self-join: both
     join sides then read the SAME shuffle output (AQE stage reuse), so
@@ -552,7 +525,7 @@ def minhash_near_duplicates(
     under boilerplate skew.
     """
     sigs = _minhash_signatures(
-        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
     ).repartition("doc")
     exploded = sigs.select(
         "doc", "minhash", _band_keys("minhash", bands, num_hashes // bands)
@@ -569,14 +542,6 @@ def minhash_near_duplicates(
     )
 
 
-def release_caches(frames: list) -> None:
-    """Unpersist every frame collected through a ``cache_into`` list
-    (banded_pairs / incremental_minhash_near_duplicates), emptying the
-    list — the explicit cache-lifetime bound for long-lived sessions."""
-    while frames:
-        frames.pop().unpersist()
-
-
 def _banded_signatures(
     df: DataFrame,
     text_col: str,
@@ -585,12 +550,11 @@ def _banded_signatures(
     num_hashes: int,
     shingle_n: int,
     bands: int,
-    arrow: bool,
 ) -> DataFrame:
     """(doc, minhash, band, key) banded signature table for a corpus —
     the persistable representation incremental near-dup joins against."""
     sigs = _minhash_signatures(
-        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
     )
     return sigs.select(
         "doc", "minhash", _band_keys("minhash", bands, num_hashes // bands)
@@ -607,7 +571,6 @@ def incremental_minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.7,
-    arrow: bool = True,
     cache_into: list | None = None,
     fresh_into: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -630,8 +593,8 @@ def incremental_minhash_near_duplicates(
     """
     new_banded = _banded_signatures(
         new_df, text_col, id_col,
-        num_hashes=num_hashes, shingle_n=shingle_n, bands=bands, arrow=arrow,
-    ).persist()  # three consumers (within l/r, versus); see banded_pairs
+        num_hashes=num_hashes, shingle_n=shingle_n, bands=bands,
+    ).persist()  # three consumers: within l/r and versus
     if cache_into is not None:
         cache_into.append(new_banded)
 
@@ -764,7 +727,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     bands: int = 4,
     shingle_n: int | None = None,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -780,20 +742,12 @@ def simhash_near_duplicates(
     if bands <= max_hamming:
         raise ValueError("need bands > max_hamming for pigeonhole completeness")
     slice_bits = bits // bands
-    if arrow:
-        from ..functions.fast_text import simhash_udf
-
-        sigs = df.select(
-            F.col(id_col).alias("doc"),
-            simhash_udf(bits, shingle_n)(F.col(text_col)).alias("simhash"),
-        )
-    else:
-        sigs = with_simhash(
-            df.select(id_col, text_col), text_col, bits=bits, shingle_n=shingle_n
-        ).select(F.col(id_col).alias("doc"), "simhash")
     # one shuffle both join sides reuse (AQE stage reuse) — see
     # minhash_near_duplicates
-    sigs = sigs.repartition("doc")
+    sigs = df.select(
+        F.col(id_col).alias("doc"),
+        simhash_udf(bits, shingle_n)(F.col(text_col)).alias("simhash"),
+    ).repartition("doc")
     slices = [
         F.struct(
             F.lit(i).alias("band"),
@@ -1448,9 +1402,11 @@ def prefix_filter_pairs(
     4. candidates verify with one exact array intersection.
 
     Returns (id_a, id_b, inter, uni, jac) for verified pairs. The
-    sorted-shingle frame is persisted (three consumers); pass
-    ``cache_into`` (a list) to receive it for release_caches() in a
-    long-lived session — otherwise LRU eviction bounds it.
+    sorted-shingle frame is persisted (three consumers that exchange
+    reuse does not merge; without it ``setsim_prefix_pairs`` measured
+    7.4-7.8 -> 7.9-9.7 s at sf0.1); pass ``cache_into`` (a
+    list) to receive it and ``unpersist()`` it after the last action —
+    otherwise LRU eviction bounds it.
     """
     per_doc = _rarest_sorted_shingles(docs, text_col, id_col, shingle_n)
     per_doc = per_doc.persist()
@@ -1541,8 +1497,8 @@ def containment_pairs(
 
     Returns (id_a, id_b, inter, size_a, containment), one row per
     DIRECTION that passes (A-in-B and B-in-A are separate facts).
-    ``cache_into`` receives the persisted shingle frame
-    (release_caches convention).
+    ``cache_into`` receives the persisted shingle frame, as in
+    :func:`prefix_filter_pairs`.
     """
     per_doc = _rarest_sorted_shingles(docs, text_col, id_col, shingle_n)
     per_doc = per_doc.persist()
@@ -1613,7 +1569,6 @@ def bbit_minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.5,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -1635,7 +1590,7 @@ def bbit_minhash_near_duplicates(
     """
     mask_mod = 1 << b_bits
     sigs = _minhash_signatures(
-        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n, arrow=arrow
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
     )
     bb = sigs.select(
         "doc",

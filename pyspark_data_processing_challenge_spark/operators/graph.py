@@ -396,7 +396,6 @@ def triangle_stats(
     *,
     src: str = "u",
     dst: str = "v",
-    cache_into: list | None = None,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient via
     DEGREE-ORIENTED wedge generation (Chiba-Nishizeki / Latapy
@@ -438,12 +437,7 @@ def triangle_stats(
     oriented = ek.select(
         F.when(F.col("ka") < F.col("kb"), F.col("ka")).otherwise(F.col("kb")).alias("s"),
         F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("d"),
-    ).persist()
-    # dedup.release_caches-compatible hand-back: the oriented edge set
-    # feeds three consumers; callers in long-lived sessions can bound
-    # its cache lifetime explicitly instead of waiting on LRU
-    if cache_into is not None:
-        cache_into.append(oriented)
+    )
     wedges = (
         oriented.alias("x")
         .join(oriented.alias("y"), F.col("x.s") == F.col("y.s"))

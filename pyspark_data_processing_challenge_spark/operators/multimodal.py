@@ -52,11 +52,12 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import spread_partitions
+from .dedup import blocked_replicas
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -1505,8 +1506,8 @@ def phash_batch(df: DataFrame) -> DataFrame:
 # a hot band bucket streams through in bounded slices.
 _HAM_BLOCK_ELEMS = 1 << 22
 _HAM_NUM_BLOCKS = 8
-# The Arrow verify's hot threshold is much higher than the join twin's
-# (dedup.banded_pairs hot_threshold=64):
+# The Arrow verify's hot threshold is much higher than the banded
+# self-join's (dedup.banded_pairs hot_threshold=64):
 # the kernel row-blocks internally (memory stays bounded), a 4096-row
 # bucket is ~16M vectorized XOR/popcount ops ≈ tens of ms in one task,
 # and splitting earlier costs more than it buys — the blocked scheme's
@@ -1517,17 +1518,20 @@ _HAM_NUM_BLOCKS = 8
 _HAM_ARROW_HOT_THRESHOLD = 4096
 
 
-def _hamming_pair_kernel(max_distance: int, blocked: bool):
-    """applyInArrow kernel emitting a bucket's Hamming-close pairs:
-    vectorized XOR + SWAR popcount over row blocks, ``id_a < id_b``.
-    numpy-only, so it reads the group's ``pyarrow.Table`` columns
-    straight into int64 arrays and returns a ``pa.Table`` of int64
-    columns — no pandas frame is built on either side of the crossing.
-    Integer-only, so equality with the join path is exact by
-    construction. ``blocked=True`` is the hot-bucket form: rows carry
-    ``__blk`` and the group's (b1, b2) replica key, and a pair is
-    emitted only when its ordered block pair IS the group key — the
-    exactly-once rule of dedup.banded_pairs' blocked self-join."""
+def _hamming_pair_kernel(max_distance: int):
+    """applyInArrow kernel emitting a (band, key, b1, b2) group's
+    Hamming-close pairs: vectorized XOR + SWAR popcount over row
+    blocks, ``id_a < id_b``. numpy-only, so it reads the group's
+    ``pyarrow.Table`` columns straight into int64 arrays and returns a
+    ``pa.Table`` of int64 columns — no pandas frame is built on either
+    side of the crossing. Groups are the replica keys (b1, b2) of
+    :func:`blocked_replicas`; a pair is emitted only when its ordered
+    block pair IS the group key — the exactly-once rule of the blocked
+    self-join. By construction a (q, q) group holds only rows with
+    ``__blk`` q (a cold bucket is the (0, 0) group with every
+    ``__blk`` 0), where the rule always holds, and a (b1, b2) group
+    with b1 < b2 holds rows of those two blocks, where it keeps exactly
+    the pairs spanning both — so only that case reads ``__blk``."""
     import numpy as np
     import pyarrow as pa
 
@@ -1561,10 +1565,9 @@ def _hamming_pair_kernel(max_distance: int, blocked: bool):
         ids = ids[o]
         hi = col(tbl, "h_hi")[o].astype(np.uint64)
         lo = col(tbl, "h_lo")[o].astype(np.uint64)
-        if blocked:
+        cross = tbl.column("b1")[0].as_py() != tbl.column("b2")[0].as_py()
+        if cross:
             blk = col(tbl, "__blk")[o]
-            b1 = tbl.column("b1")[0].as_py()
-            b2 = tbl.column("b2")[0].as_py()
         step = max(1, _HAM_BLOCK_ELEMS // n)
         out_a, out_b, out_h = [none], [none], [none]
         for s in range(0, n, step):
@@ -1575,10 +1578,8 @@ def _hamming_pair_kernel(max_distance: int, blocked: bool):
             keep = (ham <= np.uint64(max_distance)) & (
                 ids[None, :] > ids[s:e, None]
             )
-            if blocked:
-                bmin = np.minimum(blk[s:e, None], blk[None, :])
-                bmax = np.maximum(blk[s:e, None], blk[None, :])
-                keep &= (bmin == b1) & (bmax == b2)
+            if cross:
+                keep &= blk[s:e, None] != blk[None, :]
             rr, cc = np.nonzero(keep)
             out_a.append(ids[s + rr])
             out_b.append(ids[cc])
@@ -1594,8 +1595,8 @@ _HAM_PAIR_SCHEMA = "id_a long, id_b long, hamming long"
 def _phash_banded(hashes: DataFrame, *carry) -> DataFrame:
     """(media_id, h_hi, h_lo) → 4 rows per hash of (*carry, band, key):
     the 16-bit band explosion shared by every banded-Hamming join (the
-    self-join and its Arrow twin, the incremental versus-join, the
-    cross-set join). ``carry`` defaults to (media_id AS doc,
+    Arrow self-verify, the incremental versus-join, the cross-set
+    join). ``carry`` defaults to (media_id AS doc,
     struct(h_hi, h_lo) AS ph). Banding is arithmetic, so a persisted
     store stays plain hashes and bands on read — a narrow projection."""
     if not carry:
@@ -1620,8 +1621,6 @@ def phash_hamming_pairs(
     hashes: DataFrame,
     *,
     max_distance: int = 3,
-    cache_into: list | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Image near-dup pairs by pHash Hamming distance via banded LSH:
     the 64-bit hash splits into four 16-bit bands; by pigeonhole, any
@@ -1630,101 +1629,49 @@ def phash_hamming_pairs(
     only within buckets — linear in corpus size, never all-pairs.
 
     VERIFY stage (VERDICT r14 #4): the id-derived planted rasters put
-    ~88M candidate pairs through ~1.4k buckets at sf0.1, and the
-    ``impl="join"`` twin (the skew-guarded
-    :func:`..dedup.banded_pairs` self-join) materializes every
-    candidate as a JVM join row before the distance filter drops all
-    but a few thousand — measured 9.7 s at sf0.1 for the pair stage
-    alone. The default ``impl="arrow"`` keeps the identical banding,
-    window-count hot/cold split, and blocked exactly-once hot-bucket
-    scheme, but scores each bucket in ONE ``applyInArrow`` kernel
-    (:func:`_hamming_pair_kernel`: row-blocked XOR + SWAR popcount,
-    ≤ ``_HAM_BLOCK_ELEMS``-element slices, on the group's Arrow table
-    with no pandas frame) and only SURVIVING pairs cross back. Buckets
-    holding a single row (``__bn`` = 1, the large majority of 16-bit
-    band values) are pruned in the JVM before the crossing: they can
-    emit no pair, so the output is unchanged by construction.
-    Hamming is integer arithmetic, so the two impls are equal by
-    construction — pinned by a twin-equality test and the unchanged
-    DuckDB oracles of every consumer.
+    ~88M candidate pairs through ~1.4k buckets at sf0.1; a JVM
+    self-join materialized every candidate as a join row before the
+    distance filter dropped all but a few thousand (9.7 s at sf0.1 for
+    the pair stage alone). Instead each bucket is scored in ONE
+    ``applyInArrow`` kernel (:func:`_hamming_pair_kernel`: row-blocked
+    XOR + SWAR popcount, ≤ ``_HAM_BLOCK_ELEMS``-element slices, on the
+    group's Arrow table with no pandas frame) and only SURVIVING pairs
+    cross back.
+
+    One lazy plan, one kernel: :func:`..dedup.blocked_replicas` drops
+    single-row buckets in the JVM (the large majority of 16-bit band
+    values; they can emit no pair) and keys every row by
+    ``(band, key, b1, b2)`` — buckets past ``_HAM_ARROW_HOT_THRESHOLD``
+    rows split into blocks, the rest form one (0, 0) group each — and
+    ONE grouped ``applyInArrow`` scores every group. The window, the
+    pruning and the grouping read one exchange, so the hash stage
+    feeding ``hashes`` runs once without a cache and the operator owns
+    no persisted frame. Hamming is integer arithmetic: the output is
+    pinned against brute force over all pairs and the unchanged DuckDB
+    oracles of every consumer.
 
     ``hashes``: (media_id, h_hi, h_lo). Returns (id_a, id_b, hamming).
     """
-    if impl not in ("arrow", "join"):
-        raise ValueError(f"impl {impl!r}: arrow or join")
-    if impl == "join":
-        from .dedup import banded_pairs
-
-        pairs = banded_pairs(
-            _phash_banded(hashes), payload_col="ph", cache_into=cache_into
-        )
-        ham = (
-            F.bit_count(F.col("ph_a.h_hi").bitwiseXOR(F.col("ph_b.h_hi")))
-            + F.bit_count(F.col("ph_a.h_lo").bitwiseXOR(F.col("ph_b.h_lo")))
-        ).cast("long")
-        return (
-            pairs.select("id_a", "id_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_distance)
-            .distinct()  # a close pair can share several bands
-        )
-
     exploded = _phash_banded(hashes, F.col("media_id").alias("doc"), "h_hi", "h_lo")
     # EXPLICIT partition count (session.spread_partitions): the banded
     # table is only ~8 MB at sf0.1, so an unnumbered groupBy exchange
     # would coalesce to ONE partition and serialize the kernel. One
-    # keyed repartition serves the window, the cold grouping, AND the
-    # hot grouping (hash on (band, key) satisfies the superset
-    # clustering (band, key, b1, b2)), so the arrow path pays exactly
-    # one exchange of the banded rows.
+    # keyed repartition serves the window AND the grouping (hash on
+    # (band, key) satisfies the superset clustering (band, key, b1,
+    # b2)), so the plan pays exactly one exchange of the banded rows.
     exploded = exploded.repartition(
         spread_partitions(hashes.sparkSession), "band", "key"
     )
-    # same persist rationale as banded_pairs: the cold/hot split makes
-    # two consumers of the expensive hash stage feeding ``exploded``
-    w = Window.partitionBy("band", "key")
-    tagged = exploded.withColumn("__bn", F.count(F.lit(1)).over(w)).persist()
-    if cache_into is not None:
-        cache_into.append(tagged)
-    # a one-row bucket can never emit a pair: prune it in the JVM so
-    # only buckets that can do work cross into Python (most 16-bit band
-    # values are unique to one hash)
-    cold = tagged.filter(
-        F.col("__bn").between(2, _HAM_ARROW_HOT_THRESHOLD)
-    ).drop("__bn")
-    hot = tagged.filter(F.col("__bn") > _HAM_ARROW_HOT_THRESHOLD).drop("__bn")
-    cold_pairs = cold.groupBy("band", "key").applyInArrow(
-        _hamming_pair_kernel(max_distance, blocked=False), _HAM_PAIR_SCHEMA
+    rep = blocked_replicas(
+        exploded,
+        hot_threshold=_HAM_ARROW_HOT_THRESHOLD,
+        num_blocks=_HAM_NUM_BLOCKS,
     )
-    # hot buckets: the banded_pairs blocked scheme — replicate each row
-    # once per block q under the ordered key (min(blk,q), max(blk,q));
-    # the kernel's block-pair equality keeps each pair exactly once and
-    # the worst GROUP shrinks from n to ~2n/num_blocks rows.
-    blocks = F.array(*[F.lit(q) for q in range(_HAM_NUM_BLOCKS)])
-    hotb = hot.withColumn(
-        "__blk",
-        F.pmod(F.xxhash64(F.col("doc")), F.lit(_HAM_NUM_BLOCKS)).cast("int"),
+    pairs = rep.groupBy("band", "key", "b1", "b2").applyInArrow(
+        _hamming_pair_kernel(max_distance), _HAM_PAIR_SCHEMA
     )
-    replicated = hotb.withColumn(
-        "__bp",
-        F.explode(
-            F.transform(
-                blocks,
-                lambda q: F.struct(
-                    F.least(F.col("__blk"), q).alias("b1"),
-                    F.greatest(F.col("__blk"), q).alias("b2"),
-                ),
-            )
-        ),
-    ).select(
-        "doc", "h_hi", "h_lo", "band", "key", "__blk",
-        F.col("__bp.b1").alias("b1"), F.col("__bp.b2").alias("b2"),
-    )
-    hot_pairs = replicated.groupBy("band", "key", "b1", "b2").applyInArrow(
-        _hamming_pair_kernel(max_distance, blocked=True), _HAM_PAIR_SCHEMA
-    )
-    # a close pair can share several bands (and a hot and a cold bucket
-    # across different bands) — distinct at pair grain, like the twin
-    return cold_pairs.unionByName(hot_pairs).distinct()
+    # a close pair can share several bands — distinct at pair grain
+    return pairs.distinct()
 
 
 # --------------------------------------------------------------------------

@@ -74,9 +74,9 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql.legacy.parquet.nanosAsLong`` (nanos surface as BIGINT);
     4.1.2+ ignores that conf and infers TIMESTAMP_NTZ natively (already
     µs-truncated, verified equal to DuckDB's cast). Branch on the
-    inferred type so both work.
+    inferred type so both work; the caller's session conf is never
+    written (``session.get_session`` sets the legacy conf at build).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # integer division: epoch-nanos (~1.7e18) don't fit a double mantissa

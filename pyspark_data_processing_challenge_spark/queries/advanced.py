@@ -735,9 +735,7 @@ FROM scored
 from ..operators.sketches import CMS_D, CMS_SEED, CMS_W  # noqa: E402
 
 
-def cms_heavy_hitters(
-    spark: SparkSession, sf_dir: str, cache_into: list | None = None
-) -> DataFrame:
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch over corpus token frequencies, with the two
     contracts that make it a 100 TB primitive: (a) MERGEABLE — the
     sketch built from per-half partials (split by doc_id % 2, summed
@@ -761,12 +759,6 @@ def cms_heavy_hitters(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("h", textfns.char_hash(F.col("tok")))
     )
-    tokc.persist()
-    # dedup.release_caches-compatible hand-back (four consumers read
-    # tokc): long-lived sessions can bound the cache lifetime instead
-    # of waiting on LRU eviction
-    if cache_into is not None:
-        cache_into.append(tokc)
 
     def fan(df: DataFrame) -> DataFrame:
         return sketches.cms_fan(df, keep=[df.columns[0]])

@@ -570,8 +570,8 @@ def tfidf_top_terms(
         .agg(F.count(F.lit(1)).alias("tf"))
         # persist, not exchange-reuse: AQE does not dedupe this subtree
         # across the three consumers (measured), so without the cache
-        # the tokenize stage runs 3x. dedup.release_caches-compatible
-        # hand-back below bounds the lifetime in long-lived sessions.
+        # the tokenize stage runs 3x. ``cache_into`` hands the frame
+        # back so a long-lived caller can unpersist it.
         .persist()
     )
     if cache_into is not None:

@@ -38,8 +38,9 @@ def read_events_stream(
     spark: SparkSession, sf_dir: str, *, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """Bounded parquet directory as a stream (smoke/test source; swap for
-    Kafka in production — the downstream graph is source-agnostic)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Kafka in production — the downstream graph is source-agnostic).
+    The caller's session conf is left as it is: ``nanos_long_to_ts``
+    branches on what the reader surfaces under the declared BIGINT."""
     # the file-stream source requires a directory: scan sf_dir with a
     # glob filter selecting just the events file
     raw = (

@@ -1099,3 +1099,60 @@ def test_narrow_dedup_shuffles_only_fingerprints(spark):
 
     for m in _re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "__fp0" in m and "pad" not in m
+
+
+def test_banded_pair_operators_are_one_lazy_plan(spark):
+    """The banded near-dup operators return one lazy plan: no cached
+    frame (InMemoryRelation) inside it, one blocked self-join for the
+    MinHash pairs and one grouped Arrow kernel for the pHash pairs —
+    cold and hot buckets share the replicated keys, so there is no
+    second join or kernel and no union of the two."""
+    import re
+
+    from pyspark_data_processing_challenge_spark.operators import dedup, multimodal
+
+    docs = llm._perturbed_docs(spark, SF_DIR)
+    mh = plans.optimized_plan(dedup.minhash_near_duplicates(docs, "text", "doc_id"))
+    hashes = spark.createDataFrame([(1, 2, 3)], "media_id long, h_hi long, h_lo long")
+    ph = plans.optimized_plan(multimodal.phash_hamming_pairs(hashes))
+    assert "InMemoryRelation" not in mh
+    assert "InMemoryRelation" not in ph
+    assert len(re.findall(r"(?m)^[\s:+|-]*Join \w+", mh)) == 1
+    assert ph.count("FlatMapGroupsInArrow") == 1
+
+
+def test_operator_persists_have_an_owner():
+    """Structure lint: an operator returns a lazy plan and owns no
+    cache. ``.persist(``/``.cache(`` in operators/ appears only in the
+    incremental ingest functions, whose callers receive the frame
+    through ``cache_into`` and unpersist it after their last action,
+    and in the two set-similarity joins whose shingle frame feeds three
+    consumers that exchange reuse does not merge. Every such function
+    takes ``cache_into``, so a new unowned operator cache fails here."""
+    import ast
+    import pathlib
+
+    from pyspark_data_processing_challenge_spark import operators
+
+    sites, total = {}, 0
+    for path in sorted(pathlib.Path(operators.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        total += src.count(".persist(") + src.count(".cache(")
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef):
+                seg = ast.get_source_segment(src, node)
+                n = seg.count(".persist(") + seg.count(".cache(")
+                if n:
+                    sites[f"{path.stem}.{node.name}"] = n
+                    assert "cache_into" in [a.arg for a in node.args.kwonlyargs]
+    assert sites == {
+        "dedup.incremental_exact_dedup": 1,
+        "dedup.incremental_minhash_near_duplicates": 1,
+        "dedup.incremental_duplicated_spans": 2,
+        "dedup.prefix_filter_pairs": 1,
+        "dedup.containment_pairs": 1,
+        "multimodal.incremental_phash_near_duplicates": 1,
+        "similarity.incremental_semdedup_pairs_assigned": 1,
+        "similarity.incremental_ivfpq_postings": 1,
+    }
+    assert total == sum(sites.values())

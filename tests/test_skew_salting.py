@@ -213,18 +213,6 @@ def test_merge_apply_null_op_is_upsert(spark):
     ]
 
 
-def test_release_caches(spark):
-    handles = []
-    hot = spark.range(20).select(
-        F.col("id").alias("doc"), F.lit(0).alias("band"), F.lit("x").alias("key")
-    )
-    out = dedup.banded_pairs(hot, hot_threshold=4, num_blocks=2, cache_into=handles)
-    out.count()
-    assert handles and handles[0].storageLevel.useMemory
-    dedup.release_caches(handles)
-    assert not handles
-
-
 def test_incremental_semdedup_matches_full_recompute(spark):
     """Batch-over-batch SemDeDup must equal the full recompute over the
     union corpus (same static centroid codebook + static id % nsplits

@@ -151,6 +151,24 @@ def test_epoch_sink_overwrite_mode_is_writer_scoped(spark, tmp_path):
     assert got == {0: 3, 1: 2}
 
 
+def test_event_readers_leave_session_conf_alone(spark):
+    """Neither events reader writes the caller's session conf: both
+    branch on what the parquet reader surfaces, so with the legacy
+    nanos conf unset they still read and leave it unset."""
+    from pyspark_data_processing_challenge_spark.queries._util import events_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        sev.read_events_stream(spark, SF_DIR)
+        assert events_table(spark, SF_DIR).limit(1).count() == 1
+        assert spark.conf.get(key, None) is None
+    finally:
+        if old is not None:
+            spark.conf.set(key, old)
+
+
 def test_stream_static_enrichment_matches_batch(spark):
     """Stream-static broadcast join twin-checked against the same join
     done in batch: per-segment event counts must agree."""
@@ -1954,14 +1972,27 @@ def test_streaming_bloom_decontam_ingest(spark, tmp_path):
     assert batch_flagged and batch_flagged <= flagged
 
 
-def test_phash_hamming_pairs_arrow_matches_join_twin(spark):
-    """VERDICT r14 #4: the Arrow band-verify kernel (default impl) must
-    reproduce the banded self-join twin EXACTLY — integer Hamming, so
-    tuple equality, including the blocked hot-bucket path (forced by a
-    tiny threshold monkeypatch is unnecessary: the 10x replicated
-    corpus pushes buckets past the arrow hot threshold only at larger
-    SF, so instead pin both the production threshold path and a
-    hand-lowered one)."""
+def _brute_hamming_pairs(rows, max_distance=3):
+    """All-pairs Hamming over (media_id, h_hi, h_lo) rows, in Python."""
+    from itertools import combinations
+
+    out = []
+    for (a, ha, la), (b, hb, lb) in combinations(sorted(rows), 2):
+        d = bin((ha ^ hb) & (2**64 - 1)).count("1") + bin(
+            (la ^ lb) & (2**64 - 1)
+        ).count("1")
+        if d <= max_distance:
+            out.append((a, b, d))
+    return sorted(out)
+
+
+def test_phash_hamming_pairs_matches_brute_force(spark):
+    """VERDICT r14 #4: the banded Arrow band-verify must reproduce
+    all-pairs Hamming EXACTLY over the planted corpus's hashes — integer
+    Hamming, so tuple equality — at the production hot threshold and
+    with buckets past 8 rows forced down the blocked split (the
+    replicated corpus reaches the production threshold only at larger
+    SF)."""
     from pyspark_data_processing_challenge_spark.operators import multimodal as mm
 
     ids = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id")
@@ -1971,14 +2002,12 @@ def test_phash_hamming_pairs_arrow_matches_join_twin(spark):
         .select("media_id", "h_hi", "h_lo")
         .localCheckpoint()
     )
+    rows = [tuple(r) for r in hashes.collect()]
+    brute = _brute_hamming_pairs(rows)
     a = sorted(
         tuple(r) for r in mm.phash_hamming_pairs(hashes).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in mm.phash_hamming_pairs(hashes, impl="join").collect()
-    )
-    assert a == b and a, "arrow verify diverged from the join twin"
+    assert a == brute and a, "banded verify diverged from brute force"
 
     # force the blocked hot path through the kernel and re-prove
     old = mm._HAM_ARROW_HOT_THRESHOLD
@@ -2184,48 +2213,60 @@ def _kernel_rows(tbl):
 
 def test_hamming_pair_kernel_contract():
     """_hamming_pair_kernel called directly on hand-built Arrow tables:
-    a 1-row bucket returns an empty table with exactly the
-    ``id_a long, id_b long, hamming long`` schema; a bucket holding
-    pairs at Hamming 0, 3 and 4 emits only the <= 3 pairs, id_a < id_b;
-    the blocked form emits a pair only under the group whose (b1, b2)
-    is its ordered block pair, so the blocked groups partition the
-    unblocked output exactly once."""
+    a 1-row group returns an empty table with exactly the
+    ``id_a long, id_b long, hamming long`` schema; a cold bucket — the
+    (0, 0) group with every ``__blk`` 0 — holding pairs at Hamming 0, 3
+    and 4 emits only the <= 3 pairs, id_a < id_b; split into the block
+    groups ``blocked_replicas`` builds for a hot bucket — (q, q) holds
+    block q's rows, (0, 1) both blocks' rows — a pair is emitted only
+    under the group whose (b1, b2) is its ordered block pair, so the
+    block groups partition the cold output exactly once."""
     import pyarrow as pa
 
     want_schema = pa.schema(
         [("id_a", pa.int64()), ("id_b", pa.int64()), ("hamming", pa.int64())]
     )
-    flat = multimodal._hamming_pair_kernel(3, blocked=False)
-    one = flat(pa.table({"band": [0], "key": [1], "doc": [5], "h_hi": [1], "h_lo": [2]}))
+    kern = multimodal._hamming_pair_kernel(3)
+    one = kern(
+        pa.table({"doc": [5], "h_hi": [1], "h_lo": [2], "__blk": [0], "b1": [0], "b2": [0]})
+    )
     assert one.schema == want_schema and one.num_rows == 0
 
     # docs 2 and 9 are identical (Hamming 0), 7 is 3 bits from both,
     # 4 is 4 bits from 2/9 and 7 bits from 7
     docs, his, los, blks = [9, 2, 7, 4], [0, 0, 0b111, 0], [0, 0, 0, 0b1111], [0, 1, 1, 0]
     bucket = {"band": [0] * 4, "key": [0] * 4, "doc": docs, "h_hi": his, "h_lo": los}
+    cold = pa.table({**bucket, "__blk": [0] * 4, "b1": [0] * 4, "b2": [0] * 4})
     want = [(2, 7, 3), (2, 9, 0), (7, 9, 3)]
-    out = flat(pa.table(bucket))
+    out = kern(cold)
     assert out.schema == want_schema
     assert _kernel_rows(out) == want
+
+    hot = pa.table({**bucket, "__blk": blks})
+
+    def block_groups():
+        got = {}
+        for b1, b2 in [(0, 0), (0, 1), (1, 1)]:
+            grp = hot.take([i for i, b in enumerate(blks) if b in (b1, b2)])
+            n = grp.num_rows
+            out = kern(
+                grp.append_column("b1", pa.array([b1] * n))
+                .append_column("b2", pa.array([b2] * n))
+            )
+            assert out.schema == want_schema
+            got[(b1, b2)] = _kernel_rows(out)
+        return got
+
+    want_blocks = {(0, 0): [], (0, 1): [(2, 9, 0), (7, 9, 3)], (1, 1): [(2, 7, 3)]}
+    assert sorted(sum(want_blocks.values(), [])) == want
+    assert block_groups() == want_blocks
     old = multimodal._HAM_BLOCK_ELEMS
     multimodal._HAM_BLOCK_ELEMS = 2  # one row per slice
     try:
-        assert _kernel_rows(flat(pa.table(bucket))) == want
+        assert _kernel_rows(kern(cold)) == want
+        assert block_groups() == want_blocks
     finally:
         multimodal._HAM_BLOCK_ELEMS = old
-
-    blocked = multimodal._hamming_pair_kernel(3, blocked=True)
-    got = {}
-    for b1, b2 in [(0, 0), (0, 1), (1, 1)]:
-        tbl = pa.table({**bucket, "__blk": blks, "b1": [b1] * 4, "b2": [b2] * 4})
-        out = blocked(tbl)
-        assert out.schema == want_schema
-        got[(b1, b2)] = _kernel_rows(out)
-    assert got == {(0, 0): [], (0, 1): [(2, 9, 0), (7, 9, 3)], (1, 1): [(2, 7, 3)]}
-    one_b = blocked(
-        pa.table({"doc": [5], "h_hi": [1], "h_lo": [2], "__blk": [0], "b1": [0], "b2": [0]})
-    )
-    assert one_b.schema == want_schema and one_b.num_rows == 0
 
 
 def test_phash_hamming_prune_exact(spark):
@@ -2234,11 +2275,9 @@ def test_phash_hamming_prune_exact(spark):
     buckets, a Hamming-2 pair sharing two bands (exercises the pair
     ``distinct``), a Hamming-4 pair sharing one band (never emitted),
     and a triple sharing bands (a 3-row bucket goes down the blocked
-    hot path once the hot threshold is lowered to 2). The arrow output
-    equals the ``impl="join"`` twin and brute force over all pairs, at
-    the production hot threshold and at 2."""
-    from itertools import combinations
-
+    hot path once the hot threshold is lowered to 2). The output equals
+    brute force over all pairs, at the production hot threshold and at
+    2."""
     from pyspark_data_processing_challenge_spark.operators import multimodal as mm
 
     rows = [
@@ -2251,18 +2290,13 @@ def test_phash_hamming_prune_exact(spark):
         (7, 0x77770001, 0x00000000),
         (8, 0x77770000, 0x00000003),
     ]
-    brute = sorted(
-        (a, b, bin(ha ^ hb).count("1") + bin(la ^ lb).count("1"))
-        for (a, ha, la), (b, hb, lb) in combinations(rows, 2)
-        if bin(ha ^ hb).count("1") + bin(la ^ lb).count("1") <= 3
-    )
+    brute = _brute_hamming_pairs(rows)
     assert brute == [(2, 3, 2), (6, 7, 1), (6, 8, 2), (7, 8, 3)]
     hashes = spark.createDataFrame(rows, "media_id long, h_hi long, h_lo long")
 
-    def pairs(**kw):
-        return sorted(tuple(r) for r in mm.phash_hamming_pairs(hashes, **kw).collect())
+    def pairs():
+        return sorted(tuple(r) for r in mm.phash_hamming_pairs(hashes).collect())
 
-    assert pairs(impl="join") == brute
     assert pairs() == brute
     old = mm._HAM_ARROW_HOT_THRESHOLD
     mm._HAM_ARROW_HOT_THRESHOLD = 2
