@@ -100,7 +100,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component = min
     node id reachable. Deterministic. Isolated nodes absent from the
@@ -117,14 +116,14 @@ def connected_components(
 
     Physical strategy is SIZE-ADAPTIVE (r17, guide §1.2): the edge
     list is materialized and counted first; at or below
-    ``driver_max_edges`` (default ``_DRIVER_CC_MAX_EDGES``) the labels
+    ``_DRIVER_CC_MAX_EDGES`` edges the labels
     are computed in one bounded driver pull + numpy fixed-point loop —
     identical output, ~2 Spark jobs instead of 8-12 rounds of
     scheduler-latency-dominated tiny-graph jobs (measured: the CC
     floor was ~40-60% of every near-dup/cluster-split entry's wall at
     sf0.1). Above the gate the distributed min-label loop runs
-    unchanged. Pass ``driver_max_edges=0`` to force the distributed
-    path (the convergence-budget tests do).
+    unchanged (the convergence-budget tests force it by setting the
+    module constant to 0).
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
@@ -137,11 +136,10 @@ def connected_components(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint()
     n_edges = fwd.count()
-    limit = _DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
     tu = fwd.schema["u"].dataType
     tv = fwd.schema["v"].dataType
     if (
-        n_edges <= limit
+        n_edges <= _DRIVER_CC_MAX_EDGES
         and tu == tv
         and isinstance(tu, (LongType, IntegerType))
     ):

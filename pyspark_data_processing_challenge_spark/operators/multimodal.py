@@ -30,15 +30,22 @@ Codecs available in this container (no PIL/ffmpeg):
   actual bytes; handles any real file of these formats.
 - ``codec="stub"`` — deterministic fake decode (dims derived from
   payload length) for plumbing tests where payloads aren't images.
-- ``codec="raster"`` — TRUE pixel decode, no image library: grayscale
-  PNG (zlib inflate + all five filter types) and baseline-DCT
-  grayscale JPEG (canonical Huffman + dequantize + float IDCT).
+- ``codec="raster"`` — TRUE pixel decode, no image library, through
+  one codec per format: 8-bit grayscale or RGB PNG (:func:`decode_png`:
+  zlib inflate + all five filter types) and baseline-DCT JPEG with 1
+  or 3 components (:func:`decode_jpeg`: canonical Huffman + dequantize
+  + float IDCT, YCbCr -> RGB for 3), plus GIF. The channel count comes
+  from the stream (IHDR color type, SOF0 component count);
+  :func:`decode_raster_luma` folds color to luma, while
+  :func:`decode_raster` — behind ``codec="raster"``, :func:`phash_batch`
+  and :func:`resize_batch` — reads grayscale only and raises on color.
 
 ``encode_png``/``encode_gif`` generate real payloads (valid PNG incl.
-CRCs and zlib IDAT; GIF structurally valid); ``encode_jpeg_gray`` is
-a REAL baseline JPEG encoder (DCT + Annex K Huffman) whose output any
-compliant decoder reads, while ``encode_jpeg`` keeps the header-only
-stub-scan form for header-parse corpora.
+CRCs and zlib IDAT; GIF structurally valid); ``encode_jpeg_gray`` and
+``encode_jpeg_color`` are REAL baseline JPEG encoders (one DCT + Annex
+K Huffman body, :func:`_encode_jpeg`) whose output any compliant
+decoder reads, while ``encode_jpeg`` keeps the header-only stub-scan
+form for header-parse corpora.
 """
 
 from __future__ import annotations
@@ -199,46 +206,83 @@ def _png_chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def encode_png_gray(
-    width: int, height: int, pixels: bytes, *, filter_cycle: bool = False
+# IHDR color type -> bytes per pixel for the two layouts the PNG codec
+# reads and writes: 8-bit grayscale (0) and 8-bit truecolor RGB (2)
+_PNG_BPP = {0: 1, 2: 3}
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _encode_png(
+    width: int, height: int, raw: bytes, ctype: int, filter_cycle: bool
 ) -> bytes:
-    """A fully valid 8-bit grayscale PNG (correct CRCs, zlib IDAT) from
-    a row-major raster. ``filter_cycle=True`` encodes row y with filter
-    type y % 5 (None/Sub/Up/Average/Paeth) so every decoder filter path
-    can be exercised; default uses filter 0 for all rows."""
-    if len(pixels) != width * height:
-        raise ValueError(f"raster size {len(pixels)} != {width}x{height}")
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    """The one PNG writer behind :func:`encode_png_gray` and
+    :func:`encode_png_rgb`: a fully valid 8-bit PNG of color type
+    ``ctype`` (correct CRCs, zlib IDAT) from row-major interleaved
+    samples. Filters work bytewise with bpp from the color type ("left"
+    is bpp bytes back, per the PNG spec); ``filter_cycle=True`` encodes
+    row y with filter type y % 5 (None/Sub/Up/Average/Paeth) so every
+    decoder filter path can be exercised, else every row uses filter 0."""
+    bpp = _PNG_BPP[ctype]
+    if len(raw) != bpp * width * height:
+        raise ValueError(f"raster size {len(raw)} != {bpp}*{width}x{height}")
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0)
+    stride = bpp * width
     rows = []
-    prev = bytes(width)
+    prev = bytes(stride)
     for y in range(height):
-        row = pixels[y * width : (y + 1) * width]
+        row = raw[y * stride : (y + 1) * stride]
         ft = (y % 5) if filter_cycle else 0
         if ft == 0:
             enc = row
         elif ft == 1:  # Sub
-            enc = bytes((row[x] - (row[x - 1] if x else 0)) % 256 for x in range(width))
+            enc = bytes(
+                (row[x] - (row[x - bpp] if x >= bpp else 0)) % 256
+                for x in range(stride)
+            )
         elif ft == 2:  # Up
-            enc = bytes((row[x] - prev[x]) % 256 for x in range(width))
+            enc = bytes((row[x] - prev[x]) % 256 for x in range(stride))
         elif ft == 3:  # Average
             enc = bytes(
-                (row[x] - ((row[x - 1] if x else 0) + prev[x]) // 2) % 256
-                for x in range(width)
+                (row[x] - ((row[x - bpp] if x >= bpp else 0) + prev[x]) // 2) % 256
+                for x in range(stride)
             )
         else:  # Paeth
             enc = bytes(
-                (row[x] - _paeth((row[x - 1] if x else 0), prev[x],
-                                 (prev[x - 1] if x else 0))) % 256
-                for x in range(width)
+                (
+                    row[x]
+                    - _paeth(
+                        (row[x - bpp] if x >= bpp else 0),
+                        prev[x],
+                        (prev[x - bpp] if x >= bpp else 0),
+                    )
+                )
+                % 256
+                for x in range(stride)
             )
         rows.append(bytes([ft]) + enc)
         prev = row
     return (
-        b"\x89PNG\r\n\x1a\n"
+        _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
         + _png_chunk(b"IDAT", zlib.compress(b"".join(rows), 6))
         + _png_chunk(b"IEND", b"")
     )
+
+
+def encode_png_gray(
+    width: int, height: int, pixels: bytes, *, filter_cycle: bool = False
+) -> bytes:
+    """An 8-bit grayscale PNG (color type 0) from a row-major raster
+    (:func:`_encode_png`)."""
+    return _encode_png(width, height, pixels, 0, filter_cycle)
+
+
+def encode_png_rgb(
+    width: int, height: int, rgb: bytes, *, filter_cycle: bool = False
+) -> bytes:
+    """An 8-bit TRUECOLOR PNG (color type 2) from row-major interleaved
+    RGB (:func:`_encode_png`)."""
+    return _encode_png(width, height, rgb, 2, filter_cycle)
 
 
 def encode_png(width: int, height: int) -> bytes:
@@ -259,30 +303,34 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-def decode_png_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
-    """REAL raster decode of an 8-bit grayscale PNG: chunk walk, IDAT
-    concatenation, zlib inflate, and per-row unfiltering (all five PNG
-    filter types). Returns (width, height, row-major pixels); None for
-    null payloads; raises on non-PNG or unsupported color/depth (full
-    color/interlace support would need an image library — grayscale-8
-    is the corpus this engine plants and the one true-pixel path)."""
+def decode_png(payload: bytes | None) -> tuple[int, int, int, bytes] | None:
+    """REAL raster decode of a non-interlaced 8-bit grayscale or
+    truecolor PNG: chunk walk, IDAT concatenation, zlib inflate, and
+    per-row unfiltering (all five PNG filter types, bpp from the IHDR
+    color type). Returns (width, height, n_channels, row-major
+    interleaved samples); None for null payloads; raises on non-PNG or
+    any other color type, depth or interlace (palette/alpha/16-bit
+    would need an image library — gray-8 and RGB-8 are the corpora
+    this engine plants)."""
     if payload is None:
         return None
     b = bytes(payload)
-    if b[:8] != b"\x89PNG\r\n\x1a\n":
+    if b[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
-    i, w, h, idat = 8, None, None, []
+    i, w, h, bpp, idat = 8, None, None, 1, []
     while i + 8 <= len(b):
         (length,) = struct.unpack(">I", b[i : i + 4])
         tag = b[i + 4 : i + 8]
         data = b[i + 8 : i + 8 + length]
         if tag == b"IHDR":
             w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", data)
-            if depth != 8 or ctype != 0 or interlace != 0:
+            if depth != 8 or ctype not in _PNG_BPP or interlace != 0:
                 raise ValueError(
                     f"unsupported PNG (depth={depth}, color={ctype}, "
-                    f"interlace={interlace}): only non-interlaced grayscale-8"
+                    f"interlace={interlace}): only non-interlaced "
+                    "grayscale-8 or truecolor-8"
                 )
+            bpp = _PNG_BPP[ctype]
         elif tag == b"IDAT":
             idat.append(data)
         elif tag == b"IEND":
@@ -291,33 +339,34 @@ def decode_png_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
     if w is None or not idat:
         raise ValueError("PNG missing IHDR or IDAT")
     raw = zlib.decompress(b"".join(idat))
-    if len(raw) != (w + 1) * h:
-        raise ValueError(f"IDAT inflates to {len(raw)}, want {(w + 1) * h}")
-    out = bytearray(w * h)
-    prev = bytes(w)
+    stride = bpp * w
+    if len(raw) != (stride + 1) * h:
+        raise ValueError(f"IDAT inflates to {len(raw)}, want {(stride + 1) * h}")
+    out = bytearray(stride * h)
+    prev = bytes(stride)
     for y in range(h):
-        ft = raw[y * (w + 1)]
-        row = bytearray(raw[y * (w + 1) + 1 : (y + 1) * (w + 1)])
+        ft = raw[y * (stride + 1)]
+        row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
         if ft == 1:  # Sub
-            for x in range(1, w):
-                row[x] = (row[x] + row[x - 1]) % 256
+            for x in range(bpp, stride):
+                row[x] = (row[x] + row[x - bpp]) % 256
         elif ft == 2:  # Up
-            for x in range(w):
+            for x in range(stride):
                 row[x] = (row[x] + prev[x]) % 256
         elif ft == 3:  # Average
-            for x in range(w):
-                left = row[x - 1] if x else 0
+            for x in range(stride):
+                left = row[x - bpp] if x >= bpp else 0
                 row[x] = (row[x] + (left + prev[x]) // 2) % 256
         elif ft == 4:  # Paeth
-            for x in range(w):
-                left = row[x - 1] if x else 0
-                ul = prev[x - 1] if x else 0
+            for x in range(stride):
+                left = row[x - bpp] if x >= bpp else 0
+                ul = prev[x - bpp] if x >= bpp else 0
                 row[x] = (row[x] + _paeth(left, prev[x], ul)) % 256
         elif ft != 0:
             raise ValueError(f"bad PNG filter type {ft}")
-        out[y * w : (y + 1) * w] = row
+        out[y * stride : (y + 1) * stride] = row
         prev = row
-    return w, h, bytes(out)
+    return w, h, bpp, bytes(out)
 
 
 def encode_jpeg(width: int, height: int) -> bytes:
@@ -344,8 +393,9 @@ def encode_jpeg(width: int, height: int) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# real baseline JPEG codec (pure python + numpy DCT) — grayscale,
-# fixed flat quant table, standard Annex K luminance Huffman tables
+# real baseline JPEG codec (pure python + numpy DCT) — 1 or 3
+# components, fixed flat quant table, standard Annex K luminance
+# Huffman tables
 # --------------------------------------------------------------------------
 
 # JPEG zigzag scan order: index z -> (row*8 + col) position
@@ -588,51 +638,95 @@ def _entropy_symbols(zz_arr, dc_deltas, np):
     return codes[order], lens[order]
 
 
-def encode_jpeg_gray(width: int, height: int, pixels: bytes) -> bytes:
-    """A REAL baseline-DCT grayscale JPEG (ITU T.81): 8x8 blocks with
-    edge-replication padding, float DCT-II, flat quantization, and
-    canonical Annex K Huffman entropy coding with byte stuffing — any
-    standards-compliant decoder reads it. Replaces the stub-scan
-    ``encode_jpeg`` wherever decoded pixels matter (VERDICT r05 item 6).
-    """
+def _encode_jpeg(width: int, height: int, planes: list) -> bytes:
+    """The one baseline-DCT JPEG writer (ITU T.81) behind
+    :func:`encode_jpeg_gray` and :func:`encode_jpeg_color`. ``planes``
+    is one luminance plane or the three JFIF Y, Cb, Cr planes, each a
+    (height, width) array of [0, 255] samples; the component count is
+    ``len(planes)``. No chroma subsampling: each MCU is one 8x8 block
+    per component, interleaved. All components share quant table 0 and
+    the Annex K luminance Huffman tables (legal), so any
+    standards-compliant decoder reads the stream.
+
+    Each plane is edge-replication padded to whole blocks and level
+    shifted; DCT-II + flat quantize + zigzag then run as one batched
+    pass (the same dgemm per 8x8 slice as a per-block loop). DC is
+    predicted per component, and the entropy stage is the vectorized
+    emitter (:func:`_entropy_symbols` + :func:`_pack_scan`), byte-equal
+    to the sequential :class:`_BitWriter` form (encoder equality test)."""
     import numpy as np
 
-    if len(pixels) != width * height:
-        raise ValueError(f"raster size {len(pixels)} != {width}x{height}")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
+    nc = len(planes)
     bw, bh = (width + 7) // 8, (height + 7) // 8
-    padded = np.empty((bh * 8, bw * 8), dtype=np.float64)
-    padded[:height, :width] = img
-    padded[height:, :width] = img[-1:, :]  # edge replication
-    padded[:, width:] = padded[:, width - 1 : width]
-    padded -= 128.0
+    tiles = np.empty((bh, bw, nc, 8, 8), dtype=np.float64)
+    for ci, p in enumerate(planes):
+        pp = np.empty((bh * 8, bw * 8), dtype=np.float64)
+        pp[:height, :width] = p
+        pp[height:, :width] = p[-1:, :]  # edge replication
+        pp[:, width:] = pp[:, width - 1 : width]
+        pp -= 128.0
+        tiles[:, :, ci] = pp.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
     c = _dct_mat()
-    # batched DCT + quantize + zigzag up front (per-block numpy scalar
-    # indexing dominated the original loop) — bit-identical to the
-    # per-block form (same dgemm per 8x8 slice), pinned by the
-    # decode-checksum test. The entropy stage is fully vectorized too
-    # (_entropy_symbols + _pack_scan) — byte-equal to the sequential
-    # _BitWriter form, pinned by the encoder equality test.
-    tiles = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
     qall = np.round((c @ tiles @ c.T) / _JPEG_QUANT).astype(np.int64)
-    zz_arr = qall.reshape(bh * bw, 64)[:, _ZIGZAG]
-    codes, lens = _entropy_symbols(
-        zz_arr, np.diff(zz_arr[:, 0], prepend=np.int64(0)), np
-    )
-    scan = _pack_scan(codes, lens)
+    zz_arr = qall.reshape(bh * bw * nc, 64)[:, _ZIGZAG]
+    dcs = zz_arr[:, 0].reshape(-1, nc)
+    deltas = np.diff(dcs, axis=0, prepend=np.zeros((1, nc), dtype=np.int64))
+    scan = _pack_scan(*_entropy_symbols(zz_arr, deltas.reshape(-1), np))
 
     def seg(marker: int, payload: bytes) -> bytes:
         return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
 
-    dqt = seg(0xDB, b"\x00" + bytes(_JPEG_QUANT for _ in range(64)))
-    sof0 = seg(0xC0, b"\x08" + struct.pack(">HH", height, width) + b"\x01\x01\x11\x00")
+    ids = range(1, nc + 1)
+    dqt = seg(0xDB, b"\x00" + bytes([_JPEG_QUANT] * 64))
+    sof0 = seg(
+        0xC0,
+        b"\x08"
+        + struct.pack(">HHB", height, width, nc)
+        + b"".join(bytes([k, 0x11, 0]) for k in ids),
+    )
     dht = seg(
         0xC4,
         b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS)
         + b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS),
     )
-    sos = seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
+    sos = seg(
+        0xDA, bytes([nc]) + b"".join(bytes([k, 0]) for k in ids) + b"\x00\x3f\x00"
+    )
     return b"\xff\xd8" + dqt + sof0 + dht + sos + scan + b"\xff\xd9"
+
+
+def encode_jpeg_gray(width: int, height: int, pixels: bytes) -> bytes:
+    """A REAL baseline-DCT grayscale JPEG (:func:`_encode_jpeg`, one
+    component) from a row-major raster. Replaces the stub-scan
+    ``encode_jpeg`` wherever decoded pixels matter."""
+    import numpy as np
+
+    if len(pixels) != width * height:
+        raise ValueError(f"raster size {len(pixels)} != {width}x{height}")
+    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
+    return _encode_jpeg(width, height, [img])
+
+
+def _rgb_to_ycc(rgb, np):
+    """JFIF RGB -> YCbCr (float planes, clamped to [0, 255])."""
+    r = rgb[:, :, 0].astype(np.float64)
+    g = rgb[:, :, 1].astype(np.float64)
+    b = rgb[:, :, 2].astype(np.float64)
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+    return [np.clip(p, 0.0, 255.0) for p in (y, cb, cr)]
+
+
+def encode_jpeg_color(width: int, height: int, rgb: bytes) -> bytes:
+    """A REAL baseline-DCT 4:4:4 COLOR JPEG (:func:`_encode_jpeg`, JFIF
+    Y, Cb, Cr components) from row-major interleaved RGB."""
+    import numpy as np
+
+    if len(rgb) != 3 * width * height:
+        raise ValueError(f"raster size {len(rgb)} != 3*{width}x{height}")
+    img = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
+    return _encode_jpeg(width, height, _rgb_to_ycc(img, np))
 
 
 _HUFF_LUT_CACHE: dict[bytes, "object"] = {}
@@ -666,14 +760,28 @@ def _huff_lut(spec: bytes):
     return as_list
 
 
-def decode_jpeg_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
-    """REAL raster decode of a baseline-DCT grayscale JPEG: segment
-    walk (DQT/SOF0/DHT/SOS from the actual bytes — no assumption the
-    encoder was ours), canonical Huffman decode with byte unstuffing,
-    dequantize, float IDCT, level shift + clamp. Returns (width,
-    height, row-major pixels); None for null payloads; raises on
-    progressive/multi-component/stub-scan streams. This replaces the
-    r05 header-only JPEG guard with a true pixel path."""
+def decode_jpeg(payload: bytes | None) -> tuple[int, int, int, bytes] | None:
+    """REAL raster decode of a baseline-DCT JPEG with 1 (grayscale) or 3
+    (JFIF YCbCr, 4:4:4) components. Returns (width, height,
+    n_components, row-major interleaved pixels): gray for 1 component,
+    RGB for 3. None for null payloads; raises on progressive,
+    subsampled or stub-scan streams and on an SOS whose component count
+    differs from SOF0's.
+
+    1. Segment walk — DQT/SOF0/DHT/SOS from the actual bytes, no
+       assumption the encoder was ours.
+    2. SERIAL entropy parse over interleaved blocks (block ``bi`` is
+       component ``bi % nc``), a Huffman LUT pair (:func:`_huff_lut`)
+       and DC predictor per component: a buffered bit reader (``buf``
+       holds ``nbits`` pending bits), one 16-bit LUT peek per symbol,
+       coefficients into per-block zigzag lists of plain Python ints —
+       per-block numpy calls cost more than the math at 8x8.
+    3. ONE vectorized tail — broadcast dequantize, one de-zigzag
+       permutation, a single batched (n, nc, 8, 8) float IDCT (the same
+       ``c.T @ B @ c`` per 8x8 slice as a per-block loop, so rasters
+       are byte-identical to it — pinned by the corpus sweep in
+       tests/test_streaming_multimodal.py), then level shift + clamp,
+       through YCbCr -> RGB for color."""
     import numpy as np
 
     if payload is None:
@@ -683,11 +791,11 @@ def decode_jpeg_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
         raise ValueError("not a JPEG")
     i = 2
     qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], bytes] = {}
     w = h = None
-    comp_q = 0
+    comp_q: list[int] = []
+    scan_tabs: list[tuple[int, int]] = []
     scan_start = None
-    dc_id = ac_id = 0
     while i + 4 <= len(b):
         if b[i] != 0xFF:
             raise ValueError("bad JPEG segment alignment")
@@ -704,176 +812,186 @@ def decode_jpeg_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
                     raise ValueError("16-bit quant tables unsupported")
                 qt[tq] = list(data[j + 1 : j + 65])
                 j += 65
-        elif marker in (0xC1, 0xC2) or (marker in _JPEG_SOF and marker != 0xC0):
+        elif marker in _JPEG_SOF and marker != 0xC0:
             raise ValueError(f"non-baseline JPEG (SOF{marker - 0xC0})")
         elif marker == 0xC0:
-            if data[0] != 8 or data[5] != 1:
-                raise ValueError("only 8-bit single-component JPEG")
+            if data[0] != 8 or data[5] not in (1, 3):
+                raise ValueError("only 8-bit 1- or 3-component JPEG")
             h, w = struct.unpack(">HH", data[1:5])
-            if data[7] != 0x11:
+            if any(data[7 + 3 * k] != 0x11 for k in range(data[5])):
                 raise ValueError("subsampled JPEG unsupported")
-            comp_q = data[8]
+            comp_q = [data[8 + 3 * k] for k in range(data[5])]
         elif marker == 0xC4:
             j = 0
             while j < len(data):
                 tc, th = data[j] >> 4, data[j] & 0xF
-                bits = list(data[j + 1 : j + 17])
-                n = sum(bits)
+                n = sum(data[j + 1 : j + 17])
                 huff[(tc, th)] = bytes(data[j + 1 : j + 17 + n])
                 j += 17 + n
         elif marker == 0xDA:
-            if data[0] != 1:
-                raise ValueError("multi-component scan unsupported")
-            dc_id, ac_id = data[2] >> 4, data[2] & 0xF
+            if data[0] != len(comp_q):
+                raise ValueError("SOS component count differs from SOF0")
+            tabs = [data[2 + 2 * k] for k in range(data[0])]
+            scan_tabs = [(t >> 4, t & 0xF) for t in tabs]
             scan_start = i + 2 + seglen
             break
         i += 2 + seglen
     if w is None or scan_start is None:
         raise ValueError("JPEG missing SOF0 or SOS")
-    if comp_q not in qt or (0, dc_id) not in huff or (1, ac_id) not in huff:
+    if any(t not in qt for t in comp_q) or any(
+        (0, td) not in huff or (1, ta) not in huff for td, ta in scan_tabs
+    ):
         raise ValueError("JPEG missing quant/Huffman tables (stub scan?)")
-    q = np.array(qt[comp_q], dtype=np.float64)
-    dc_lut, ac_lut = _huff_lut(huff[(0, dc_id)]), _huff_lut(huff[(1, ac_id)])
+    qs = np.array([qt[t] for t in comp_q], dtype=np.float64)
+    luts = [(_huff_lut(huff[0, td]), _huff_lut(huff[1, ta])) for td, ta in scan_tabs]
     end = b.rfind(b"\xff\xd9")
     scan = b[scan_start : end if end > scan_start else len(b)]
-    # validate byte stuffing up front (vectorized), then destuff once —
-    # replaces the per-bit stuffing checks the old reader paid
+    # validate byte stuffing up front (vectorized), then destuff once
     sarr = np.frombuffer(scan, dtype=np.uint8)
     ff = np.nonzero(sarr == 0xFF)[0]
-    if len(ff):
-        if ff[-1] == len(sarr) - 1 or not np.all(sarr[ff + 1] == 0x00):
-            raise ValueError("unexpected marker in scan")
+    if len(ff) and (ff[-1] == len(sarr) - 1 or not np.all(sarr[ff + 1] == 0x00)):
+        raise ValueError("unexpected marker in scan")
     # zero-padded so the last block's 16-bit peeks never IndexError on
     # a well-formed stream; a genuinely truncated scan runs off the pad
     stream = scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00"
-    c = _dct_mat()
+    nc = len(comp_q)
     bw, bh = (w + 7) // 8, (h + 7) // 8
-    try:
-        return _jpeg_scan_decode(stream, (dc_lut, ac_lut), bw, bh, w, h, q, c, np)
-    except IndexError:
-        raise ValueError("JPEG scan truncated") from None
-
-
-def _jpeg_scan_decode(stream, lut_list, bw, bh, w, h, q, c, np):
-    """Hot loop of decode_jpeg_gray, two-phase (r16 — measured ~2x on
-    the pHash corpus over the r15 per-block form):
-
-    1. SERIAL entropy parse — buffered bit reader (`buf` holds `nbits`
-       pending bits) + one cached-LUT 16-bit peek per Huffman symbol
-       instead of a per-bit tree walk, emitting (block, zigzag-pos,
-       value) triples as plain Python ints. No numpy inside the
-       per-symbol loop: the r15 form paid ~6 small-array numpy calls
-       per 8x8 block (zero/scatter/2 matmuls/store), which dominated
-       once the bit reader was LUT-fast.
-    2. ONE vectorized tail — fancy-index scatter of all coefficients,
-       broadcast dequantize, one de-zigzag permutation, and a single
-       batched (n,8,8) IDCT. Identical float operations in identical
-       per-block order (elementwise zz*q then c.T @ B @ c per 8x8
-       slice), so decoded rasters are BYTE-IDENTICAL to the serial
-       form — pinned by the corpus sweep in
-       tests/test_streaming_multimodal.py."""
-    dc_lut, ac_lut = lut_list
+    n_blocks = bh * bw
+    allzz = [[0] * 64 for _ in range(n_blocks * nc)]
     buf = nbits = pos = 0
-    prev_dc = 0
-    nblocks = bw * bh
-    bidx: list = []
-    zpos: list = []
-    vals: list = []
-    for bi in range(nblocks):
-        # DC symbol
-        while nbits < 16:
-            buf = (buf << 8) | stream[pos]
-            pos += 1
-            nbits += 8
-        e = dc_lut[(buf >> (nbits - 16)) & 0xFFFF]
-        ln = e & 0xFF
-        if ln == 0:
-            raise ValueError("bad Huffman code in JPEG scan")
-        nbits -= ln
-        size = e >> 8
-        if size:
-            while nbits < size:
-                buf = (buf << 8) | stream[pos]
-                pos += 1
-                nbits += 8
-            amp = (buf >> (nbits - size)) & ((1 << size) - 1)
-            nbits -= size
-            prev_dc += (
-                amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
-            )
-        buf &= (1 << nbits) - 1
-        bidx.append(bi)
-        zpos.append(0)
-        vals.append(prev_dc)
-        z = 1
-        while z < 64:
+    prev_dc = [0] * nc
+    try:
+        for bi, zz in enumerate(allzz):
+            ci = bi % nc
+            dc_lut, ac_lut = luts[ci]
             while nbits < 16:
                 buf = (buf << 8) | stream[pos]
                 pos += 1
                 nbits += 8
-            e = ac_lut[(buf >> (nbits - 16)) & 0xFFFF]
+            e = dc_lut[(buf >> (nbits - 16)) & 0xFFFF]
             ln = e & 0xFF
             if ln == 0:
                 raise ValueError("bad Huffman code in JPEG scan")
             nbits -= ln
-            sym = e >> 8
-            if sym == 0x00:  # EOB
-                buf &= (1 << nbits) - 1
-                break
-            run, size = sym >> 4, sym & 0xF
-            if size == 0:
-                if run != 15:
-                    raise ValueError("bad AC symbol")
-                z += 16  # ZRL
-                buf &= (1 << nbits) - 1
-                continue
-            z += run
-            if z >= 64:
-                raise ValueError("AC run overflow")
-            while nbits < size:
-                buf = (buf << 8) | stream[pos]
-                pos += 1
-                nbits += 8
-            amp = (buf >> (nbits - size)) & ((1 << size) - 1)
-            nbits -= size
+            size = e >> 8
+            if size:
+                while nbits < size:
+                    buf = (buf << 8) | stream[pos]
+                    pos += 1
+                    nbits += 8
+                amp = (buf >> (nbits - size)) & ((1 << size) - 1)
+                nbits -= size
+                prev_dc[ci] += (
+                    amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
+                )
             buf &= (1 << nbits) - 1
-            bidx.append(bi)
-            zpos.append(z)
-            vals.append(
-                amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
-            )
-            z += 1
-    coefs = np.zeros((nblocks, 64), dtype=np.float64)
-    coefs[bidx, zpos] = vals
-    coefs *= q  # q is zigzag-ordered; same elementwise product as zz*q
-    nat = np.zeros((nblocks, 64), dtype=np.float64)
-    nat[:, _ZIGZAG] = coefs
-    blocks = nat.reshape(nblocks, 8, 8)
-    res = (c.T @ blocks) @ c  # batched per-slice dgemm
-    out = (
-        res.reshape(bh, bw, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(bh * 8, bw * 8)
+            zz[0] = prev_dc[ci]
+            z = 1
+            while z < 64:
+                while nbits < 16:
+                    buf = (buf << 8) | stream[pos]
+                    pos += 1
+                    nbits += 8
+                e = ac_lut[(buf >> (nbits - 16)) & 0xFFFF]
+                ln = e & 0xFF
+                if ln == 0:
+                    raise ValueError("bad Huffman code in JPEG scan")
+                nbits -= ln
+                sym = e >> 8
+                if sym == 0x00:  # EOB
+                    buf &= (1 << nbits) - 1
+                    break
+                run, size = sym >> 4, sym & 0xF
+                if size == 0:
+                    if run != 15:
+                        raise ValueError("bad AC symbol")
+                    z += 16  # ZRL
+                    buf &= (1 << nbits) - 1
+                    continue
+                z += run
+                if z >= 64:
+                    raise ValueError("AC run overflow")
+                while nbits < size:
+                    buf = (buf << 8) | stream[pos]
+                    pos += 1
+                    nbits += 8
+                amp = (buf >> (nbits - size)) & ((1 << size) - 1)
+                nbits -= size
+                buf &= (1 << nbits) - 1
+                zz[z] = amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
+                z += 1
+    except IndexError:
+        raise ValueError("JPEG scan truncated") from None
+    coefs = np.zeros((n_blocks, nc, 64), dtype=np.float64)
+    zz_arr = np.array(allzz, dtype=np.float64).reshape(n_blocks, nc, 64)
+    coefs[:, :, _ZIGZAG] = zz_arr * qs  # qs is zigzag-ordered
+    c = _dct_mat()
+    blocks = c.T @ coefs.reshape(n_blocks, nc, 8, 8) @ c
+    planes = (
+        blocks.reshape(bh, bw, nc, 8, 8)
+        .transpose(2, 0, 3, 1, 4)
+        .reshape(nc, bh * 8, bw * 8)[:, :h, :w]
     )
-    pix = np.clip(np.round(out[:h, :w] + 128.0), 0, 255).astype(np.uint8)
-    return w, h, pix.tobytes()
+    y = planes[0] + 128.0
+    if nc == 3:
+        cb, cr = planes[1], planes[2]
+        chans = (y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb)
+    else:
+        chans = (y,)
+    pix = np.stack(
+        [np.clip(np.round(p), 0, 255).astype(np.uint8) for p in chans], axis=-1
+    )
+    return w, h, nc, pix.tobytes()
 
 
-def decode_raster(payload: bytes | None) -> tuple[int, int, bytes] | None:
-    """Format-dispatching raster decode: PNG (lossless zlib/unfilter
-    path), baseline JPEG (DCT path), or GIF (LZW path) by signature.
-    The single entry point the pHash pipeline uses — JPEG corpora now
-    get true pixels instead of the r05 header-only guard."""
+def rgb_luma(rgb: bytes, np=None) -> bytes:
+    """ITU-R BT.601 luma with the standard integer approximation
+    ``(77 R + 150 G + 29 B + 128) >> 8`` — pure integer arithmetic so
+    an engine-independent oracle reproduces it bit-exact."""
+    if np is None:
+        import numpy as np
+    a = np.frombuffer(bytes(rgb), dtype=np.uint8).astype(np.int64)
+    y = (77 * a[0::3] + 150 * a[1::3] + 29 * a[2::3] + 128) >> 8
+    return y.astype(np.uint8).tobytes()
+
+
+def decode_raster_luma(
+    payload: bytes | None,
+) -> tuple[int, int, int, bytes] | None:
+    """The one format dispatch of the raster decoders, by signature:
+    PNG (:func:`decode_png`), baseline JPEG (:func:`decode_jpeg`) or
+    GIF (:func:`decode_gif_gray`). Color rasters fold to BT.601 integer
+    luma (:func:`rgb_luma`); gray pixels pass straight through. Returns
+    (width, height, n_channels, luma_pixels) — the entry point for
+    perceptual hashing over mixed gray/color corpora."""
     if payload is None:
         return None
     b = bytes(payload)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png_gray(b)
-    if b[:2] == b"\xff\xd8":
-        return decode_jpeg_gray(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif_gray(b)
-    raise ValueError("unsupported raster format (PNG/JPEG/GIF only)")
+    if b[:8] == _PNG_SIG:
+        w, h, nc, pix = decode_png(b)
+    elif b[:2] == b"\xff\xd8":
+        w, h, nc, pix = decode_jpeg(b)
+    elif b[:6] in (b"GIF87a", b"GIF89a"):
+        w, h, pix = decode_gif_gray(b)
+        nc = 1
+    else:
+        raise ValueError("unsupported raster format (PNG/JPEG/GIF only)")
+    return w, h, nc, (rgb_luma(pix) if nc == 3 else pix)
+
+
+def decode_raster(payload: bytes | None) -> tuple[int, int, bytes] | None:
+    """Grayscale raster decode for the one-layout kernels
+    (:func:`phash_batch`, :func:`resize_batch`,
+    ``decode_image_batch(codec="raster")``): the
+    :func:`decode_raster_luma` dispatch, refusing color payloads.
+    Returns (width, height, row-major pixels)."""
+    out = decode_raster_luma(payload)
+    if out is None:
+        return None
+    w, h, nc, pix = out
+    if nc != 1:
+        raise ValueError(f"{nc}-channel raster: decode_raster reads grayscale only")
+    return w, h, pix
 
 
 def encode_gif(width: int, height: int) -> bytes:
@@ -1262,8 +1380,9 @@ def decode_image_batch(df: DataFrame, *, codec: str = "stub") -> DataFrame:
     ``codec="headers"`` parses REAL PNG/JPEG/GIF container bytes
     (format + dimensions, see :func:`parse_image_header`) and returns
     ``HEADER_SCHEMA``; ``codec="raster"`` performs TRUE pixel decode
-    (grayscale PNG / baseline JPEG via :func:`decode_raster`) and
-    returns ``DECODED_SCHEMA`` with the md5 of the decoded raster;
+    of grayscale PNG / JPEG / GIF (:func:`decode_raster`; a color
+    payload fails the task) and returns ``DECODED_SCHEMA`` with the
+    md5 of the decoded raster;
     ``codec="stub"`` returns ``DECODED_SCHEMA`` with length-derived
     fake dims.
     """
@@ -1281,7 +1400,8 @@ def decode_image_batch(df: DataFrame, *, codec: str = "stub") -> DataFrame:
     if codec != "stub":
         raise NotImplementedError(
             f"codec {codec!r}: available codecs are 'raster' (true "
-            "grayscale PNG/baseline-JPEG pixel decode), 'headers' "
+            "grayscale pixel decode of PNG, baseline JPEG and GIF; "
+            "color payloads raise), 'headers' "
             "(PNG/JPEG/GIF header parse), and 'stub'; other formats "
             "need an image library not present in this container"
         )
@@ -1484,8 +1604,9 @@ PHASH_SCHEMA = T.StructType(
 
 def phash_batch(df: DataFrame) -> DataFrame:
     """media (media_id, payload) → perceptual hash via REAL pixel
-    decode, dispatched by signature (decode_raster): PNG zlib-inflate
-    + unfilter, or baseline-JPEG Huffman + IDCT. dHash the raster.
+    decode of grayscale rasters, dispatched by signature
+    (decode_raster): PNG zlib-inflate + unfilter, baseline-JPEG
+    Huffman + IDCT, or GIF LZW. dHash the raster.
     One row per payload through :func:`_payload_map` — the decode loop
     runs executor-side over columnar batches.
 
@@ -1675,451 +1796,9 @@ def phash_hamming_pairs(
 
 
 # --------------------------------------------------------------------------
-# truecolor rasters: RGB PNG + 4:4:4 color JPEG + ITU-R luma (VERDICT
-# r06 item 7 — real corpora are color JPEGs; the gray-only decoders
-# above stay untouched because their perf is plan-/bench-pinned)
+# truecolor rasters: color pHash over BT.601 luma and RGB channel stats,
+# both on the shared PNG/JPEG codecs above
 # --------------------------------------------------------------------------
-
-
-def encode_png_rgb(
-    width: int, height: int, rgb: bytes, *, filter_cycle: bool = False
-) -> bytes:
-    """A fully valid 8-bit TRUECOLOR PNG (color type 2, correct CRCs,
-    zlib IDAT) from row-major interleaved RGB. Filters operate bytewise
-    with bpp=3 ("left" is 3 bytes back, per the PNG spec);
-    ``filter_cycle=True`` rotates the five filter types across rows to
-    exercise every decoder path."""
-    if len(rgb) != 3 * width * height:
-        raise ValueError(f"raster size {len(rgb)} != 3*{width}x{height}")
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    stride = 3 * width
-    rows = []
-    prev = bytes(stride)
-    for y in range(height):
-        row = rgb[y * stride : (y + 1) * stride]
-        ft = (y % 5) if filter_cycle else 0
-        if ft == 0:
-            enc = row
-        elif ft == 1:  # Sub
-            enc = bytes(
-                (row[x] - (row[x - 3] if x >= 3 else 0)) % 256
-                for x in range(stride)
-            )
-        elif ft == 2:  # Up
-            enc = bytes((row[x] - prev[x]) % 256 for x in range(stride))
-        elif ft == 3:  # Average
-            enc = bytes(
-                (row[x] - ((row[x - 3] if x >= 3 else 0) + prev[x]) // 2) % 256
-                for x in range(stride)
-            )
-        else:  # Paeth
-            enc = bytes(
-                (
-                    row[x]
-                    - _paeth(
-                        (row[x - 3] if x >= 3 else 0),
-                        prev[x],
-                        (prev[x - 3] if x >= 3 else 0),
-                    )
-                )
-                % 256
-                for x in range(stride)
-            )
-        rows.append(bytes([ft]) + enc)
-        prev = row
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(b"".join(rows), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png_rgb(payload: bytes | None) -> tuple[int, int, bytes] | None:
-    """REAL raster decode of an 8-bit truecolor PNG (color type 2):
-    chunk walk, zlib inflate, bpp=3 unfiltering for all five filter
-    types. Returns (width, height, interleaved RGB); raises on
-    non-truecolor streams (decode_png_gray owns color type 0)."""
-    if payload is None:
-        return None
-    b = bytes(payload)
-    if b[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG")
-    i, w, h, idat = 8, None, None, []
-    while i + 8 <= len(b):
-        (length,) = struct.unpack(">I", b[i : i + 4])
-        tag = b[i + 4 : i + 8]
-        data = b[i + 8 : i + 8 + length]
-        if tag == b"IHDR":
-            w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", data)
-            if depth != 8 or ctype != 2 or interlace != 0:
-                raise ValueError(
-                    f"unsupported PNG (depth={depth}, color={ctype}, "
-                    f"interlace={interlace}): only non-interlaced truecolor-8"
-                )
-        elif tag == b"IDAT":
-            idat.append(data)
-        elif tag == b"IEND":
-            break
-        i += 12 + length
-    if w is None or not idat:
-        raise ValueError("PNG missing IHDR or IDAT")
-    raw = zlib.decompress(b"".join(idat))
-    stride = 3 * w
-    if len(raw) != (stride + 1) * h:
-        raise ValueError(f"IDAT inflates to {len(raw)}, want {(stride + 1) * h}")
-    out = bytearray(stride * h)
-    prev = bytes(stride)
-    for y in range(h):
-        ft = raw[y * (stride + 1)]
-        row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ft == 1:  # Sub
-            for x in range(3, stride):
-                row[x] = (row[x] + row[x - 3]) % 256
-        elif ft == 2:  # Up
-            for x in range(stride):
-                row[x] = (row[x] + prev[x]) % 256
-        elif ft == 3:  # Average
-            for x in range(stride):
-                left = row[x - 3] if x >= 3 else 0
-                row[x] = (row[x] + (left + prev[x]) // 2) % 256
-        elif ft == 4:  # Paeth
-            for x in range(stride):
-                left = row[x - 3] if x >= 3 else 0
-                ul = prev[x - 3] if x >= 3 else 0
-                row[x] = (row[x] + _paeth(left, prev[x], ul)) % 256
-        elif ft != 0:
-            raise ValueError(f"bad PNG filter type {ft}")
-        out[y * stride : (y + 1) * stride] = row
-        prev = row
-    return w, h, bytes(out)
-
-
-def _rgb_to_ycc(rgb, np):
-    """JFIF RGB -> YCbCr (float planes, clamped to [0, 255])."""
-    r = rgb[:, :, 0].astype(np.float64)
-    g = rgb[:, :, 1].astype(np.float64)
-    b = rgb[:, :, 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    return [np.clip(p, 0.0, 255.0) for p in (y, cb, cr)]
-
-
-def encode_jpeg_color(width: int, height: int, rgb: bytes) -> bytes:
-    """A REAL baseline-DCT COLOR JPEG (ITU T.81, JFIF YCbCr, 4:4:4 —
-    no chroma subsampling, so each MCU is one 8x8 block per component
-    interleaved Y,Cb,Cr): per-plane edge-replication padding, float
-    DCT-II, flat quantization, canonical Annex K Huffman with per-
-    component DC prediction. All three components legally share quant
-    table 0 and the luminance Huffman tables. Any standards-compliant
-    decoder reads the stream."""
-    import numpy as np
-
-    if len(rgb) != 3 * width * height:
-        raise ValueError(f"raster size {len(rgb)} != 3*{width}x{height}")
-    img = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
-    planes = _rgb_to_ycc(img, np)
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    padded = []
-    for p in planes:
-        pp = np.empty((bh * 8, bw * 8), dtype=np.float64)
-        pp[:height, :width] = p
-        pp[height:, :width] = p[-1:, :]
-        pp[:, width:] = pp[:, width - 1 : width]
-        padded.append(pp - 128.0)
-    c = _dct_mat()
-    # batched DCT + quantize + zigzag for every block of every plane up
-    # front (per-block numpy scalar indexing dominated the loop); the
-    # entropy stage is the vectorized emitter shared with the gray
-    # encoder — interleaved (by, bx, ci) block order, DC prediction
-    # chained PER COMPONENT, byte-equal to the sequential _BitWriter
-    # form (encoder equality test).
-    tiles = np.stack(
-        [
-            p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-            for p in padded
-        ],
-        axis=2,
-    )  # (bh, bw, 3, 8, 8)
-    qall = np.round((c @ tiles @ c.T) / _JPEG_QUANT).astype(np.int64)
-    zz_arr = qall.reshape(bh * bw * 3, 64)[:, _ZIGZAG]
-    dcs = zz_arr[:, 0].reshape(-1, 3)
-    deltas = np.diff(dcs, axis=0, prepend=np.zeros((1, 3), dtype=np.int64))
-    codes, lens = _entropy_symbols(zz_arr, deltas.reshape(-1), np)
-    scan = _pack_scan(codes, lens)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes(_JPEG_QUANT for _ in range(64)))
-    sof0 = seg(
-        0xC0,
-        b"\x08"
-        + struct.pack(">HH", height, width)
-        + b"\x03"
-        + b"\x01\x11\x00"
-        + b"\x02\x11\x00"
-        + b"\x03\x11\x00",
-    )
-    dht = seg(
-        0xC4,
-        b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS)
-        + b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS),
-    )
-    sos = seg(0xDA, b"\x03\x01\x00\x02\x00\x03\x00\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + sof0 + dht + sos + scan + b"\xff\xd9"
-
-
-def decode_jpeg_color(payload: bytes | None) -> tuple[int, int, bytes] | None:
-    """REAL raster decode of a baseline-DCT 4:4:4 COLOR JPEG: segment
-    walk (DQT/SOF0/DHT/SOS from the actual bytes), interleaved-MCU
-    Huffman decode with per-component DC prediction and the shared
-    16-bit LUT (_huff_lut), dequantize + float IDCT per plane, then
-    JFIF YCbCr -> RGB. Returns (width, height, interleaved RGB);
-    raises on progressive/subsampled/single-component streams
-    (decode_jpeg_gray owns those)."""
-    import numpy as np
-
-    if payload is None:
-        return None
-    b = bytes(payload)
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    i = 2
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], bytes] = {}
-    w = h = None
-    comp_q = [0, 0, 0]
-    scan_tabs = [(0, 0), (0, 0), (0, 0)]
-    scan_start = None
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            raise ValueError("bad JPEG segment alignment")
-        marker = b[i + 1]
-        if marker == 0xD9:
-            break
-        seglen = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        data = b[i + 4 : i + 2 + seglen]
-        if marker == 0xDB:
-            j = 0
-            while j < len(data):
-                pq, tq = data[j] >> 4, data[j] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qt[tq] = list(data[j + 1 : j + 65])
-                j += 65
-        elif marker in _JPEG_SOF and marker != 0xC0:
-            raise ValueError(f"non-baseline JPEG (SOF{marker - 0xC0})")
-        elif marker == 0xC0:
-            if data[0] != 8 or data[5] != 3:
-                raise ValueError("only 8-bit 3-component JPEG")
-            h, w = struct.unpack(">HH", data[1:5])
-            for ci in range(3):
-                if data[6 + 3 * ci + 1] != 0x11:
-                    raise ValueError("subsampled JPEG unsupported")
-                comp_q[ci] = data[6 + 3 * ci + 2]
-        elif marker == 0xC4:
-            j = 0
-            while j < len(data):
-                tc, th = data[j] >> 4, data[j] & 0xF
-                bits = list(data[j + 1 : j + 17])
-                n = sum(bits)
-                huff[(tc, th)] = bytes(data[j + 1 : j + 17 + n])
-                j += 17 + n
-        elif marker == 0xDA:
-            if data[0] != 3:
-                raise ValueError("expected 3-component scan")
-            for ci in range(3):
-                t = data[2 + 2 * ci]
-                scan_tabs[ci] = (t >> 4, t & 0xF)
-            scan_start = i + 2 + seglen
-            break
-        i += 2 + seglen
-    if w is None or scan_start is None:
-        raise ValueError("JPEG missing SOF0 or SOS")
-    for ci in range(3):
-        if comp_q[ci] not in qt:
-            raise ValueError("JPEG missing quant table")
-        if (0, scan_tabs[ci][0]) not in huff or (1, scan_tabs[ci][1]) not in huff:
-            raise ValueError("JPEG missing Huffman tables")
-    qs = [np.array(qt[comp_q[ci]], dtype=np.float64) for ci in range(3)]
-    luts = [
-        (_huff_lut(huff[(0, scan_tabs[ci][0])]), _huff_lut(huff[(1, scan_tabs[ci][1])]))
-        for ci in range(3)
-    ]
-    end = b.rfind(b"\xff\xd9")
-    scan = b[scan_start : end if end > scan_start else len(b)]
-    sarr = np.frombuffer(scan, dtype=np.uint8)
-    ff = np.nonzero(sarr == 0xFF)[0]
-    if len(ff):
-        if ff[-1] == len(sarr) - 1 or not np.all(sarr[ff + 1] == 0x00):
-            raise ValueError("unexpected marker in scan")
-    stream = scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00"
-    c = _dct_mat()
-    bw, bh = (w + 7) // 8, (h + 7) // 8
-    # pure-Python zigzag buffers in the bit loop; dequantize + IDCT run
-    # as ONE batched numpy pass afterwards (per-block numpy calls cost
-    # more than the math at 8x8)
-    n_blocks = bh * bw
-    allzz = [[0.0] * 64 for _ in range(n_blocks * 3)]
-    buf = nbits = pos = 0
-    prev_dc = [0, 0, 0]
-    bi = 0
-    try:
-        for _by in range(bh):
-            for _bx in range(bw):
-                for ci in range(3):
-                    dc_lut, ac_lut = luts[ci]
-                    zz = allzz[bi]
-                    bi += 1
-                    while nbits < 16:
-                        buf = (buf << 8) | stream[pos]
-                        pos += 1
-                        nbits += 8
-                    e = dc_lut[(buf >> (nbits - 16)) & 0xFFFF]
-                    ln = e & 0xFF
-                    if ln == 0:
-                        raise ValueError("bad Huffman code in JPEG scan")
-                    nbits -= ln
-                    size = e >> 8
-                    if size:
-                        while nbits < size:
-                            buf = (buf << 8) | stream[pos]
-                            pos += 1
-                            nbits += 8
-                        amp = (buf >> (nbits - size)) & ((1 << size) - 1)
-                        nbits -= size
-                        prev_dc[ci] += (
-                            amp
-                            if amp >= (1 << (size - 1))
-                            else amp - (1 << size) + 1
-                        )
-                    buf &= (1 << nbits) - 1
-                    zz[0] = prev_dc[ci]
-                    z = 1
-                    while z < 64:
-                        while nbits < 16:
-                            buf = (buf << 8) | stream[pos]
-                            pos += 1
-                            nbits += 8
-                        e = ac_lut[(buf >> (nbits - 16)) & 0xFFFF]
-                        ln = e & 0xFF
-                        if ln == 0:
-                            raise ValueError("bad Huffman code in JPEG scan")
-                        nbits -= ln
-                        sym = e >> 8
-                        if sym == 0x00:  # EOB
-                            buf &= (1 << nbits) - 1
-                            break
-                        run, size = sym >> 4, sym & 0xF
-                        if size == 0:
-                            if run != 15:
-                                raise ValueError("bad AC symbol")
-                            z += 16
-                            buf &= (1 << nbits) - 1
-                            continue
-                        z += run
-                        if z >= 64:
-                            raise ValueError("AC run overflow")
-                        while nbits < size:
-                            buf = (buf << 8) | stream[pos]
-                            pos += 1
-                            nbits += 8
-                        amp = (buf >> (nbits - size)) & ((1 << size) - 1)
-                        nbits -= size
-                        buf &= (1 << nbits) - 1
-                        zz[z] = (
-                            amp
-                            if amp >= (1 << (size - 1))
-                            else amp - (1 << size) + 1
-                        )
-                        z += 1
-    except IndexError:
-        raise ValueError("JPEG scan truncated") from None
-    # batched dequantize + IDCT: component ci occupies slots bi%3 == ci
-    zz_arr = np.array(allzz, dtype=np.float64).reshape(n_blocks, 3, 64)
-    qarr = np.stack(qs)  # (3, 64)
-    coefs = np.zeros((n_blocks, 3, 64), dtype=np.float64)
-    coefs[:, :, _ZIGZAG] = zz_arr * qarr[None, :, :]
-    blocks = c.T @ coefs.reshape(n_blocks, 3, 8, 8) @ c
-    planes = [np.empty((bh * 8, bw * 8), dtype=np.float64) for _ in range(3)]
-    for ci in range(3):
-        planes[ci] = (
-            blocks[:, ci]
-            .reshape(bh, bw, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(bh * 8, bw * 8)
-        )
-    y = planes[0][:h, :w] + 128.0
-    cb = planes[1][:h, :w]
-    cr = planes[2][:h, :w]
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    bch = y + 1.772 * cb
-    rgb = np.stack(
-        [np.clip(np.round(p), 0, 255).astype(np.uint8) for p in (r, g, bch)],
-        axis=-1,
-    )
-    return w, h, rgb.tobytes()
-
-
-def _jpeg_ncomp(b: bytes) -> int:
-    """Minimal marker walk to SOF0's component count."""
-    i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            raise ValueError("bad JPEG segment alignment")
-        marker = b[i + 1]
-        if marker in (0xD9, 0xDA):
-            break
-        seglen = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        if marker == 0xC0:
-            return b[i + 4 + 5]
-        i += 2 + seglen
-    raise ValueError("JPEG missing SOF0")
-
-
-def rgb_luma(rgb: bytes, np=None) -> bytes:
-    """ITU-R BT.601 luma with the standard integer approximation
-    ``(77 R + 150 G + 29 B + 128) >> 8`` — pure integer arithmetic so
-    an engine-independent oracle reproduces it bit-exact."""
-    if np is None:
-        import numpy as np
-    a = np.frombuffer(bytes(rgb), dtype=np.uint8).astype(np.int64)
-    y = (77 * a[0::3] + 150 * a[1::3] + 29 * a[2::3] + 128) >> 8
-    return y.astype(np.uint8).tobytes()
-
-
-def decode_raster_luma(
-    payload: bytes | None,
-) -> tuple[int, int, int, bytes] | None:
-    """Color-aware raster decode to LUMA: dispatch PNG/JPEG by
-    signature AND color layout (PNG IHDR color type; JPEG SOF0
-    component count), decode truecolor to RGB then fold to BT.601
-    integer luma, or pass grayscale pixels straight through. Returns
-    (width, height, n_channels, luma_pixels) — the single entry point
-    for perceptual hashing over mixed gray/color corpora."""
-    if payload is None:
-        return None
-    b = bytes(payload)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        ctype = b[25]  # IHDR data byte 9: 8 sig + 4 len + 4 tag + 9
-        if ctype == 2:
-            w, h, rgb = decode_png_rgb(b)
-            return w, h, 3, rgb_luma(rgb)
-        w, h, pix = decode_png_gray(b)
-        return w, h, 1, pix
-    if b[:2] == b"\xff\xd8":
-        if _jpeg_ncomp(b) == 3:
-            w, h, rgb = decode_jpeg_color(b)
-            return w, h, 3, rgb_luma(rgb)
-        w, h, pix = decode_jpeg_gray(b)
-        return w, h, 1, pix
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        w, h, pix = decode_gif_gray(b)
-        return w, h, 1, pix
-    raise ValueError("unsupported raster format (PNG/JPEG/GIF only)")
 
 
 RGB_PHASH_SCHEMA = T.StructType(
@@ -2326,13 +2005,16 @@ def rgb_stats_batch(df: DataFrame) -> DataFrame:
     exact integer channel sums, the BT.601 integer-luma sum, and the
     dominant channel (ties break r > g > b). All-integer so a
     lossless-codec corpus is bit-exact reproducible by an arithmetic
-    oracle — the end-to-end proof of the RGB PNG decode path.
+    oracle — the end-to-end proof of the RGB PNG decode path; a
+    grayscale PNG (or any non-PNG) payload raises.
     One row per payload through :func:`_payload_map`; numpy per
     payload, no per-pixel Python."""
     import numpy as np
 
     def fn(p: bytes) -> tuple:
-        w, h, rgb = decode_png_rgb(p)
+        w, h, nc, rgb = decode_png(p)
+        if nc != 3:
+            raise ValueError(f"{nc}-channel PNG: rgb_stats_batch reads truecolor only")
         a = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
         rs, gs, bs = int(a[0::3].sum()), int(a[1::3].sum()), int(a[2::3].sum())
         luma = sum(rgb_luma(rgb, np))

@@ -539,23 +539,21 @@ def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    spark: SparkSession, sf_dir: str, cache_into: list | None = None
-) -> DataFrame:
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per doc by TF-IDF with a RATIONAL idf (N/df, no log)
     so the score is integer-ratio arithmetic — bit-identical in any
     engine.
 
-    Tokenization runs ONCE: the per-doc tf aggregate is persisted and
-    both marginals (doc length, corpus df) derive from it — the old
-    shape re-tokenized for each of tf / len / df, and r06's spread()
-    made every one of those passes pay a full-text exchange (VERDICT
-    r06 item 4, the 1.25 → 1.87 s regression; spread is dropped here
-    because this tokenizer is cheaper than the repartition it rides
-    behind — measured 1.32 s vs 1.61 s at sf0.1). The tf frame is
-    O(distinct doc-term pairs) — far smaller than the exploded token
-    stream it replaces. n_docs arrives as a broadcast single-row
-    aggregate of the raw scan (no eager driver action, repo
+    Tokenization runs ONCE, in one lazy plan: both marginals are
+    windows over the per-doc tf aggregate — the corpus df a count over
+    ``partitionBy("term")``, the doc length a sum over
+    ``partitionBy("doc_id")`` — and the top-3 rank window reuses the
+    doc_id partitioning, so there is no self-join for AQE to miss and
+    no cache to own. The tf frame is O(distinct doc-term pairs) — far
+    smaller than the exploded token stream. No spread(): this tokenizer
+    is cheaper than the repartition it would ride behind (measured
+    1.32 s vs 1.61 s at sf0.1). n_docs arrives as a broadcast
+    single-row aggregate of the raw scan (no eager driver action, repo
     convention)."""
     d = t(spark, sf_dir, "documents")
     nd = t(spark, sf_dir, "documents").agg(
@@ -565,27 +563,15 @@ def tfidf_top_terms(
         "doc_id",
         F.explode(textfns.tokens(F.lower(F.col("text")))).alias("term"),
     )
-    tf = (
-        terms.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        # persist, not exchange-reuse: AQE does not dedupe this subtree
-        # across the three consumers (measured), so without the cache
-        # the tokenize stage runs 3x. ``cache_into`` hands the frame
-        # back so a long-lived caller can unpersist it.
-        .persist()
-    )
-    if cache_into is not None:
-        cache_into.append(tf)
-    doc_len = tf.groupBy("doc_id").agg(F.sum("tf").alias("len"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     score = (
         F.col("tf").cast("double")
         / F.col("len").cast("double")
         * (F.col("__n_docs") / F.col("df").cast("double"))
     )
     scored = (
-        tf.join(doc_len, "doc_id")
-        .join(F.broadcast(df_), "term")
+        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        .withColumn("len", F.sum("tf").over(Window.partitionBy("doc_id")))
         .crossJoin(F.broadcast(nd))
         .select("doc_id", "term", score.alias("tfidf"))
     )

@@ -1500,7 +1500,7 @@ def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     capability metadata parsing can't give: plant real PNG payloads
     (base images + perturbed near-copies, operators/multimodal.
     plant_phash_corpus), zlib-inflate and unfilter the actual rasters
-    executor-side (decode_png_gray inside phash_batch), dHash the
+    executor-side (decode_png inside phash_batch), dHash the
     pixels. The oracle recomputes every pixel and hash bit from the
     planting arithmetic, so one wrong pixel anywhere in the
     decode→sample→pack chain breaks the driver hash."""
@@ -3366,8 +3366,8 @@ def docs_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     # tokenize ONCE: corpus counts derive from the materialized per-doc
-    # tf aggregate (the tfidf_top_terms pattern — without it the
-    # explode stage runs once per marginal). localCheckpoint, not
+    # tf aggregate (without it the explode stage runs once per
+    # marginal). localCheckpoint, not
     # persist: no unpersist path after return (r9 advice)
     tf = (
         big.groupBy("doc_id", "w1", "w2")

@@ -17,13 +17,22 @@ def _chain_edges(spark, n):
     )
 
 
-def test_long_chain_converges_in_log_rounds(spark):
+def _distributed_cc(monkeypatch, edges, **kw):
+    """connected_components forced onto the DISTRIBUTED loop: a zero
+    edge budget for the driver fast path, which small graphs otherwise
+    take (the path choice is made inside the call)."""
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_DRIVER_CC_MAX_EDGES", 0)
+        return graph.connected_components(edges, **kw)
+
+
+def test_long_chain_converges_in_log_rounds(spark, monkeypatch):
     # neighbor-min alone would need ~200 rounds; pointer jumping must
-    # finish a 200-hop chain within 12. driver_max_edges=0 forces the
-    # DISTRIBUTED loop (r17: small graphs otherwise take the exact
-    # driver fast path, which this test is not about)
+    # finish a 200-hop chain within 12 on the DISTRIBUTED loop (small
+    # graphs otherwise take the exact driver fast path, which this
+    # test is not about)
     edges = _chain_edges(spark, CHAIN_N)
-    comp = graph.connected_components(edges, max_iter=12, driver_max_edges=0)
+    comp = _distributed_cc(monkeypatch, edges, max_iter=12)
     rows = comp.collect()
     assert len(rows) == CHAIN_N
     assert all(r["component"] == 0 for r in rows)
@@ -39,10 +48,10 @@ def test_long_chain_fast_path_matches(spark):
     assert all(r["component"] == 0 for r in rows)
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     edges = _chain_edges(spark, 50)
     with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components(edges, max_iter=2, driver_max_edges=0)
+        _distributed_cc(monkeypatch, edges, max_iter=2)
 
 
 def test_multiple_components_and_determinism(spark):
@@ -69,7 +78,7 @@ def test_multiple_components_and_determinism(spark):
     assert again == want
 
 
-def test_driver_fast_path_twin_random_graphs(spark):
+def test_driver_fast_path_twin_random_graphs(spark, monkeypatch):
     """r17 equivalence proof: the gated driver fast path and the
     distributed loop must return IDENTICAL (node, component) sets on
     random graphs — mixed degrees, self-loops, duplicate edges, both
@@ -91,19 +100,17 @@ def test_driver_fast_path_twin_random_graphs(spark):
         }
         dist = {
             (r["node"], r["component"])
-            for r in graph.connected_components(
-                df, driver_max_edges=0
-            ).collect()
+            for r in _distributed_cc(monkeypatch, df).collect()
         }
         assert fast == dist, f"seed {seed}: fast path diverged"
 
 
-def test_driver_fast_path_schema_matches_distributed(spark):
+def test_driver_fast_path_schema_matches_distributed(spark, monkeypatch):
     """The two paths must agree on column names AND types (the driver
     hashes query schemas)."""
     df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     fast = graph.connected_components(df)
-    dist = graph.connected_components(df, driver_max_edges=0)
+    dist = _distributed_cc(monkeypatch, df)
     assert [(f.name, f.dataType) for f in fast.schema.fields] == [
         (f.name, f.dataType) for f in dist.schema.fields
     ]
@@ -200,7 +207,7 @@ def test_cluster_keep_best_policy(spark):
     assert out[6].component == 5
 
 
-def test_cc_loop_scoped_not_session_global(spark):
+def test_cc_loop_scoped_not_session_global(spark, monkeypatch):
     """VERDICT r10 #6: the CC loop must size its exchanges via explicit
     repartition(loop_sp, key) — NEVER by flipping the session-global
     spark.sql.shuffle.partitions (a concurrent query on the same
@@ -221,12 +228,10 @@ def test_cc_loop_scoped_not_session_global(spark):
         return real_set(key, value)
 
     with mock.patch.object(spark.conf, "set", side_effect=spy):
-        # driver_max_edges=0 forces the DISTRIBUTED loop — this test
-        # pins ITS exchange scoping (r17: a 39-edge graph otherwise
-        # takes the driver fast path, which has no loop exchanges)
-        comp = graph.connected_components(
-            edges, max_iter=10, driver_max_edges=0
-        )
+        # the DISTRIBUTED loop — this test pins ITS exchange scoping
+        # (a 39-edge graph otherwise takes the driver fast path, which
+        # has no loop exchanges)
+        comp = _distributed_cc(monkeypatch, edges, max_iter=10)
         n_parts = comp.rdd.getNumPartitions()
         rows = comp.collect()
     assert not [c for c in calls if c[0] == "spark.sql.shuffle.partitions"], calls

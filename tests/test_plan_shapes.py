@@ -982,7 +982,7 @@ def test_cluster_split_call_graph_has_no_driver_collect():
     assert cc_src.index("n_edges = fwd.count()") < cc_src.index(
         "_driver_components("
     )
-    assert "n_edges <= limit" in cc_src
+    assert "n_edges <= _DRIVER_CC_MAX_EDGES" in cc_src
     assert graph._DRIVER_CC_MAX_EDGES <= 4_000_000  # pull stays ~tens of MB
 
 

@@ -566,7 +566,7 @@ def test_streaming_semdedup_ingest(spark, tmp_path):
 
 
 def test_png_raster_roundtrip_all_filters():
-    """decode_png_gray must recover the exact raster through every PNG
+    """decode_png must recover the exact gray raster through every PNG
     filter type (filter_cycle encodes row y with filter y % 5)."""
     import random
 
@@ -575,38 +575,45 @@ def test_png_raster_roundtrip_all_filters():
         raster = bytes(rng.randrange(256) for _ in range(w * h))
         for cyc in (False, True):
             png = multimodal.encode_png_gray(w, h, raster, filter_cycle=cyc)
-            assert multimodal.decode_png_gray(png) == (w, h, raster)
+            assert multimodal.decode_png(png) == (w, h, 1, raster)
     # legacy gradient encoder decodes to its formula
     w, h = 20, 10
-    _, _, pix = multimodal.decode_png_gray(multimodal.encode_png(w, h))
+    _, _, _, pix = multimodal.decode_png(multimodal.encode_png(w, h))
     assert pix == bytes(
         (x * 31 + y * 17) % 256 for y in range(h) for x in range(w)
     )
 
 
 def test_png_decode_rejects_unsupported():
+    import struct as _s
+    import zlib as _z
+
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="not a PNG"):
-        multimodal.decode_png_gray(b"GIF89a" + b"\x00" * 16)
-    with _pytest.raises(ValueError, match="unsupported PNG"):
-        # color type 2 (RGB) header
-        import struct as _s
-        import zlib as _z
-
-        ihdr = _s.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-        bad = (
+    def png_2x2(depth, ctype):
+        ihdr = _s.pack(">IIBBBBB", 2, 2, depth, ctype, 0, 0, 0)
+        return (
             b"\x89PNG\r\n\x1a\n"
             + multimodal._png_chunk(b"IHDR", ihdr)
             + multimodal._png_chunk(b"IDAT", _z.compress(b"\x00" * 14))
             + multimodal._png_chunk(b"IEND", b"")
         )
-        multimodal.decode_png_gray(bad)
-    assert multimodal.decode_png_gray(None) is None
+
+    with _pytest.raises(ValueError, match="not a PNG"):
+        multimodal.decode_png(b"GIF89a" + b"\x00" * 16)
+    # palette, gray+alpha, RGBA and 16-bit depth need an image library
+    for depth, ctype in ((8, 3), (8, 4), (8, 6), (16, 0), (16, 2)):
+        with _pytest.raises(ValueError, match="unsupported PNG"):
+            multimodal.decode_png(png_2x2(depth, ctype))
+    # color type 2 (RGB) decodes, but the gray-only dispatch refuses it
+    assert multimodal.decode_png(png_2x2(8, 2)) == (2, 2, 3, bytes(12))
+    with _pytest.raises(ValueError, match="grayscale only"):
+        multimodal.decode_raster(png_2x2(8, 2))
+    assert multimodal.decode_png(None) is None
 
 
 def test_jpeg_raster_roundtrip_near_lossless():
-    """encode_jpeg_gray -> decode_jpeg_gray must recover every pixel
+    """encode_jpeg_gray -> decode_jpeg must recover every pixel
     within the flat-quant rounding bound (|err| <= 2) at even, odd and
     degenerate dims — this is the pixel-exactness gate backing the
     recall-only driver oracle of image_phash_jpeg_near_dup."""
@@ -616,15 +623,15 @@ def test_jpeg_raster_roundtrip_near_lossless():
     for w, h in [(16, 16), (17, 13), (64, 48), (8, 8), (9, 23), (1, 5)]:
         raster = bytes(rng.randrange(256) for _ in range(w * h))
         jpg = multimodal.encode_jpeg_gray(w, h, raster)
-        w2, h2, dec = multimodal.decode_jpeg_gray(jpg)
-        assert (w2, h2) == (w, h)
+        w2, h2, nc, dec = multimodal.decode_jpeg(jpg)
+        assert (w2, h2, nc) == (w, h, 1)
         assert max(abs(a - b) for a, b in zip(raster, dec)) <= 2
     # pin one decoded raster checksum so a silent codec change is loud
     import hashlib
 
     w, h = 20, 12
     pix = multimodal._phash_raster(5, w, h, 0)
-    _, _, dec = multimodal.decode_jpeg_gray(multimodal.encode_jpeg_gray(w, h, pix))
+    _, _, _, dec = multimodal.decode_jpeg(multimodal.encode_jpeg_gray(w, h, pix))
     assert hashlib.md5(dec).hexdigest() == _JPEG_PIN
 
 
@@ -649,7 +656,7 @@ def test_jpeg_decoder_corpus_sweep_pinned():
             pay = multimodal.encode_jpeg_gray(
                 w, hh, multimodal._phash_raster(i, w, hh, nflip)
             )
-            _, _, dec = multimodal.decode_jpeg_gray(pay)
+            _, _, _, dec = multimodal.decode_jpeg(pay)
             h.update(dec)
     # pin verified three ways (r16 inherited-state check): the r15
     # serial per-block decoder at e4e403c, the pre-change tree at
@@ -663,10 +670,20 @@ def test_jpeg_decode_rejects_non_baseline_and_stub():
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="not a JPEG"):
-        multimodal.decode_jpeg_gray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
+        multimodal.decode_jpeg(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
     with _pytest.raises(ValueError, match="stub"):
-        multimodal.decode_jpeg_gray(multimodal.encode_jpeg(10, 10))
-    assert multimodal.decode_jpeg_gray(None) is None
+        multimodal.decode_jpeg(multimodal.encode_jpeg(10, 10))
+    gray = multimodal.encode_jpeg_gray(8, 8, bytes(range(64)))
+    color = multimodal.encode_jpeg_color(8, 8, bytes(range(192)))
+    for sof in (b"\xff\xc1", b"\xff\xc2"):
+        with _pytest.raises(ValueError, match="non-baseline"):
+            multimodal.decode_jpeg(gray.replace(b"\xff\xc0", sof, 1))
+    # an SOS whose component count disagrees with SOF0, both ways
+    g_sos, c_sos = gray.index(b"\xff\xda"), color.index(b"\xff\xda")
+    for bad in (gray[:g_sos] + color[c_sos:], color[:c_sos] + gray[g_sos:]):
+        with _pytest.raises(ValueError, match="SOS component count"):
+            multimodal.decode_jpeg(bad)
+    assert multimodal.decode_jpeg(None) is None
     # decode_raster dispatches by signature
     png = multimodal.encode_png(9, 7)
     assert multimodal.decode_raster(png)[0:2] == (9, 7)
@@ -687,8 +704,8 @@ def test_jpeg_phash_planted_pairs_recall():
         copy_jpg = multimodal.encode_jpeg_gray(
             w, h, multimodal._phash_raster(bid, w, h, bid % 3)
         )
-        _, _, pb = multimodal.decode_jpeg_gray(base_jpg)
-        _, _, pc = multimodal.decode_jpeg_gray(copy_jpg)
+        _, _, _, pb = multimodal.decode_jpeg(base_jpg)
+        _, _, _, pc = multimodal.decode_jpeg(copy_jpg)
         hb = multimodal.dhash64(pb, w, h)
         hc = multimodal.dhash64(pc, w, h)
         d = bin(hb[0] ^ hc[0]).count("1") + bin(hb[1] ^ hc[1]).count("1")
@@ -1207,8 +1224,8 @@ def test_streaming_ivm_ingest_matches_batch(spark, tmp_path):
 
 
 def test_png_rgb_roundtrip_all_filters():
-    """encode_png_rgb -> decode_png_rgb must recover the exact
-    interleaved RGB raster through every filter type (bpp=3 offsets)."""
+    """encode_png_rgb -> decode_png must recover the exact interleaved
+    RGB raster through every filter type (bpp=3 offsets)."""
     import random
 
     rng = random.Random(21)
@@ -1216,39 +1233,54 @@ def test_png_rgb_roundtrip_all_filters():
         raster = bytes(rng.randrange(256) for _ in range(3 * w * h))
         for cyc in (False, True):
             png = multimodal.encode_png_rgb(w, h, raster, filter_cycle=cyc)
-            assert multimodal.decode_png_rgb(png) == (w, h, raster)
-    # gray decoder refuses truecolor and vice versa
+            assert multimodal.decode_png(png) == (w, h, 3, raster)
+    # the channel count comes from the IHDR color type; the gray-only
+    # dispatch refuses truecolor (rgb_stats_batch refusing gray is
+    # test_one_layout_kernels_refuse_the_other)
     import pytest as _pytest
 
     rgb_png = multimodal.encode_png_rgb(4, 4, bytes(48))
-    with _pytest.raises(ValueError, match="unsupported PNG"):
-        multimodal.decode_png_gray(rgb_png)
-    gray_png = multimodal.encode_png(4, 4)
-    with _pytest.raises(ValueError, match="unsupported PNG"):
-        multimodal.decode_png_rgb(gray_png)
+    with _pytest.raises(ValueError, match="grayscale only"):
+        multimodal.decode_raster(rgb_png)
+    assert multimodal.decode_png(multimodal.encode_png(4, 4))[2] == 1
 
 
 def test_jpeg_color_roundtrip_bounded_error():
-    """encode_jpeg_color -> decode_jpeg_color must recover every RGB
-    pixel within the flat-quant + YCbCr-conversion rounding bound
-    (|err| <= 6 measured <= 5 on the planted corpus) at even/odd/
-    degenerate dims; the gray decoder must refuse the 3-component
-    stream and vice versa."""
+    """encode_jpeg_color -> decode_jpeg must recover every RGB pixel
+    within the flat-quant + YCbCr-conversion rounding bound (|err| <= 6
+    measured <= 5 on the planted corpus) at even/odd/degenerate dims;
+    the gray-only dispatch must refuse the 3-component stream."""
     import pytest as _pytest
 
     for bid in (0, 3, 7, 12):
         w, h = bid % 48 + 16, (bid * 7) % 32 + 16
         rgb = multimodal._rgb_plant_raster(bid, w, h, 0).tobytes()
         jpg = multimodal.encode_jpeg_color(w, h, rgb)
-        w2, h2, dec = multimodal.decode_jpeg_color(jpg)
-        assert (w2, h2) == (w, h)
+        w2, h2, nc, dec = multimodal.decode_jpeg(jpg)
+        assert (w2, h2, nc) == (w, h, 3)
         assert max(abs(a - b) for a, b in zip(rgb, dec)) <= 6
-    with _pytest.raises(ValueError, match="single-component"):
-        multimodal.decode_jpeg_gray(jpg)
+    with _pytest.raises(ValueError, match="grayscale only"):
+        multimodal.decode_raster(jpg)
     gray_jpg = multimodal.encode_jpeg_gray(8, 8, bytes(range(64)))
-    with _pytest.raises(ValueError, match="3-component"):
-        multimodal.decode_jpeg_color(gray_jpg)
-    assert multimodal.decode_jpeg_color(None) is None
+    assert multimodal.decode_jpeg(gray_jpg)[2] == 1
+
+
+def test_one_layout_kernels_refuse_the_other(spark):
+    """phash_batch reads gray rasters only and rgb_stats_batch truecolor
+    PNG only: a color JPEG fails the first and a gray PNG the second
+    (the task raises ValueError) rather than hashing or summing the
+    wrong layout."""
+    import pytest as _pytest
+
+    color_jpg = multimodal.encode_jpeg_color(8, 8, bytes(range(192)))
+    gray_png = multimodal.encode_png(8, 8)
+    for kernel, payload in (
+        (multimodal.phash_batch, color_jpg),
+        (multimodal.rgb_stats_batch, gray_png),
+    ):
+        df = spark.createDataFrame([(1, payload)], "media_id long, payload binary")
+        with _pytest.raises(Exception, match="ValueError"):
+            kernel(df).collect()
 
 
 def test_rgb_luma_and_dispatch():
@@ -2193,6 +2225,30 @@ def test_mapinpandas_only_in_payload_adapter():
                 sites[node.name] = n
     assert sites == {"_payload_map": 1, "video_frame_stats_batch": 1}
     assert src.count("mapInPandas(") == 2
+
+
+def test_one_dct_site_and_one_huffman_decoder():
+    """Structure lint: one JPEG encoder body and one decoder body read
+    ``_dct_mat()``, and one decoder builds ``_huff_lut`` tables, so a
+    DCT/IDCT or Huffman-decode change lands in exactly one place."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(multimodal)
+    callers: dict[str, set] = {"_dct_mat": set(), "_huff_lut": set()}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef):
+            for sub in ast.walk(node):
+                if (
+                    isinstance(sub, ast.Call)
+                    and isinstance(sub.func, ast.Name)
+                    and sub.func.id in callers
+                ):
+                    callers[sub.func.id].add(node.name)
+    assert callers == {
+        "_dct_mat": {"_encode_jpeg", "decode_jpeg"},
+        "_huff_lut": {"decode_jpeg"},
+    }
 
 
 def test_applyinpandas_not_in_multimodal():
