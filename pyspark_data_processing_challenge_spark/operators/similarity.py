@@ -48,7 +48,7 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            vectors.cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
+            vectors.cosine_cols("qvec", "cvec").alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -104,13 +104,46 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            vectors.cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
+            vectors.cosine_cols("qvec", "cvec").alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def centroid_cosines(
+    rows: DataFrame,
+    centroids: DataFrame,
+    *,
+    vec_col: str,
+    centroid_id: str,
+    centroid_vec: str,
+) -> DataFrame:
+    """``rows``' columns plus (cid, cv, cos): every row scored against
+    every centroid of a broadcast codebook — the scoring behind
+    :func:`ivf_assign` and every IVF probe rank.
+
+    Both sides are norm-staged (``vectors.stage``), so a (row,
+    centroid) pair costs one fold instead of three; the doubles equal
+    ``vectors.cosine``'s (``cv`` comes back as array<double>). The
+    codebook side is always the same subtree, so a query that assigns
+    its corpus and ranks its probes against one codebook broadcasts it
+    once: two different subtrees over the same small table broadcast
+    twice and the pass gains jobs."""
+    cols = rows.columns
+    cb = vectors.stage(
+        centroids, centroid_vec, f"{centroid_id} AS cid", vec="cv", norm="cn"
+    )
+    return (
+        vectors.stage(rows, vec_col, *[f"`{c}`" for c in cols], vec="__rv", norm="__rn")
+        .join(F.broadcast(cb))
+        .select(
+            *cols, "cid", "cv",
+            vectors.staged_cosine("__rv", "__rn", "cv", "cn").alias("cos"),
+        )
+    )
 
 
 def ivf_assign(
@@ -137,13 +170,14 @@ def ivf_assign(
     (each task reduces its |codebook|-way explosion locally before the
     exchange), where the window would shuffle AND sort the full
     corpus × codebook expansion.
+
+    Scoring is :func:`centroid_cosines`: one fold per (row, centroid)
+    pair over staged norms, same doubles as ``vectors.cosine``.
     """
     c = corpus.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("vec"))
-    cb = centroids.select(
-        F.col(centroid_id).alias("cid"), F.col(centroid_vec).alias("cv")
-    )
-    scored = c.join(F.broadcast(cb)).select(
-        "doc", "vec", "cid", vectors.cosine(F.col("vec"), F.col("cv")).alias("cos")
+    scored = centroid_cosines(
+        c, centroids, vec_col="vec",
+        centroid_id=centroid_id, centroid_vec=centroid_vec,
     )
     best = scored.groupBy("doc").agg(
         F.max_by(
@@ -155,6 +189,45 @@ def ivf_assign(
         "doc",
         F.col("__best.vec").alias("vec"),
         F.col("__best.cid").alias("centroid_id"),
+    )
+
+
+def _list_members(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    p: int,
+    centroid_id: str,
+    centroid_vec: str,
+) -> DataFrame:
+    """(centroid_id, __id, __vec): every vector in each of its top-p
+    IVF lists — the candidate lists of both kNN-graph twins."""
+    if p < 1:
+        raise ValueError(f"p must be >= 1, got {p}")
+    if p == 1:
+        return ivf_assign(
+            corpus, centroids,
+            id_col=id_col, vec_col=vec_col,
+            centroid_id=centroid_id, centroid_vec=centroid_vec,
+        ).select(
+            "centroid_id", F.col("doc").alias("__id"), F.col("vec").alias("__vec")
+        )
+    # top-p membership: score all |codebook| cosines per row (broadcast
+    # join), keep ranks 1..p per vector — the same membership window
+    # knn_graph_recall_eval's p-schemes use, and rank 1 is exactly
+    # ivf_assign's argmax (cos desc, cid asc tie-break).
+    sc = centroid_cosines(
+        corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")),
+        centroids, vec_col="__vec",
+        centroid_id=centroid_id, centroid_vec=centroid_vec,
+    )
+    wm = Window.partitionBy("__id").orderBy(F.col("cos").desc(), F.col("cid"))
+    return (
+        sc.withColumn("__rn", F.row_number().over(wm))
+        .filter(F.col("__rn") <= p)
+        .select(F.col("cid").alias("centroid_id"), "__id", "__vec")
     )
 
 
@@ -192,53 +265,12 @@ def knn_graph(
     Output: (vec_id, neighbor_id, cosine, rank), rank 1..k per node,
     deterministic tie-break on neighbor id; nodes in lists smaller
     than k+1 emit fewer edges."""
-    if p < 1:
-        raise ValueError(f"p must be >= 1, got {p}")
-    if p == 1:
-        assigned = ivf_assign(
-            corpus, centroids,
-            id_col=id_col, vec_col=vec_col,
-            centroid_id=centroid_id, centroid_vec=centroid_vec,
-        ).select(
-            "centroid_id", F.col("doc").alias("__id"), F.col("vec").alias("__vec")
-        )
-    else:
-        # top-p membership: score all |codebook| cosines per row
-        # (broadcast join), keep ranks 1..p per vector — the same
-        # membership window knn_graph_recall_eval's p-schemes use,
-        # and rank 1 is exactly ivf_assign's argmax (cos desc, cid
-        # asc tie-break).
-        cb = centroids.select(
-            F.col(centroid_id).alias("__cid"), F.col(centroid_vec).alias("__cv")
-        )
-        sc = corpus.select(
-            F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-        ).join(F.broadcast(cb)).select(
-            "__id",
-            "__vec",
-            "__cid",
-            vectors.cosine(F.col("__vec"), F.col("__cv")).alias("__mcos"),
-        )
-        wm = Window.partitionBy("__id").orderBy(
-            F.col("__mcos").desc(), F.col("__cid")
-        )
-        assigned = (
-            sc.withColumn("__rn", F.row_number().over(wm))
-            .filter(F.col("__rn") <= p)
-            .select(F.col("__cid").alias("centroid_id"), "__id", "__vec")
-        )
-    # Per-ROW norm staging: cosine(a, b) = dot/(|a||b|) re-folds
-    # dot(a,a) and dot(b,b) for EVERY pair if written as one
-    # expression — 3 HOF folds per pair instead of 1 (measured 9.5 s
-    # -> 2.6 s at sf0.1). |a| is a per-row quantity; compute it once
-    # on each side. Same doubles: sqrt(dot(v,v)) is deterministic, so
-    # the staged product equals the inline recompute bit-for-bit and
-    # the oracle is unchanged.
-    normed = assigned.select(
-        "centroid_id",
-        F.col("__id").alias("vec_id"),
-        vectors.as_double(F.col("__vec")).alias("__v"),
-    ).withColumn("__n", vectors.norm2(F.col("__v")))
+    assigned = _list_members(
+        corpus, centroids, id_col=id_col, vec_col=vec_col, p=p,
+        centroid_id=centroid_id, centroid_vec=centroid_vec,
+    )
+    # per-ROW norm staging (vectors.stage): one fold per pair
+    normed = vectors.stage(assigned, "__vec", "centroid_id", "__id AS vec_id")
     left = normed.select(
         "centroid_id", "vec_id", F.col("__v").alias("__va"),
         F.col("__n").alias("__na"),
@@ -265,10 +297,9 @@ def knn_graph(
         .select(
             "vec_id",
             "neighbor_id",
-            F.try_divide(
-                vectors.dot(F.col("__va"), F.col("__vb")),
-                F.col("__na") * F.col("__nb"),
-            ).alias("cosine"),
+            vectors.staged_cosine("__va", "__na", "__vb", "__nb").alias(
+                "cosine"
+            ),
         )
     )
     if p > 1:
@@ -340,41 +371,14 @@ def knn_graph_arrow(
     identical frames even on corpora with planted zero vectors
     (tests/test_extended_knn.py pins twin equality on such a
     corpus)."""
-    if p < 1:
-        raise ValueError(f"p must be >= 1, got {p}")
-    if p == 1:
-        assigned = ivf_assign(
-            corpus, centroids,
-            id_col=id_col, vec_col=vec_col,
-            centroid_id=centroid_id, centroid_vec=centroid_vec,
-        ).select(
-            "centroid_id", F.col("doc").alias("vec_id"),
-            vectors.as_double(F.col("vec")).alias("__v"),
-        )
-    else:
-        cb = centroids.select(
-            F.col(centroid_id).alias("__cid"), F.col(centroid_vec).alias("__cv")
-        )
-        sc = corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
-        ).join(F.broadcast(cb)).select(
-            "vec_id",
-            "__vec",
-            "__cid",
-            vectors.cosine(F.col("__vec"), F.col("__cv")).alias("__mcos"),
-        )
-        wm = Window.partitionBy("vec_id").orderBy(
-            F.col("__mcos").desc(), F.col("__cid")
-        )
-        assigned = (
-            sc.withColumn("__rn", F.row_number().over(wm))
-            .filter(F.col("__rn") <= p)
-            .select(
-                F.col("__cid").alias("centroid_id"),
-                "vec_id",
-                vectors.as_double(F.col("__vec")).alias("__v"),
-            )
-        )
+    assigned = _list_members(
+        corpus, centroids, id_col=id_col, vec_col=vec_col, p=p,
+        centroid_id=centroid_id, centroid_vec=centroid_vec,
+    ).select(
+        "centroid_id",
+        F.col("__id").alias("vec_id"),
+        vectors.as_double(F.col("__vec")).alias("__v"),
+    )
 
     import numpy as np
 
@@ -781,7 +785,6 @@ def incremental_semdedup_pairs_assigned(
     ).persist()
     if cache_into is not None:
         cache_into.append(nb)
-    cos = vectors.cosine
     # ONE broadcast join does both the within-batch and the
     # batch-vs-history pairing: the right side is (store ∪ batch), so
     # a within-batch pair (a, b) arrives twice — (n=a, h=b) and
@@ -812,7 +815,7 @@ def incremental_semdedup_pairs_assigned(
         .select(
             F.least(F.col("n.doc"), F.col("h.doc")).alias("id_a"),
             F.greatest(F.col("n.doc"), F.col("h.doc")).alias("id_b"),
-            cos(F.col("n.vec"), F.col("h.vec")).alias("cosine"),
+            vectors.cosine_cols("n.vec", "h.vec").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         # dedups the doubled within-batch pairs AND replayed ids
@@ -865,11 +868,10 @@ def ivf_topk(
         centroid_vec="cv",
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id", "qvec", "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
+    qscored = centroid_cosines(
+        q, cb, vec_col="qvec", centroid_id="cid", centroid_vec="cv"
     )
-    wq = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cid"))
+    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
     probes = (
         qscored.withColumn("__rn", F.row_number().over(wq))
         .filter(F.col("__rn") <= nprobe)
@@ -881,7 +883,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         F.col("doc").alias("neighbor_id"),
-        vectors.cosine(F.col("qvec"), F.col("vec")).alias("cosine"),
+        vectors.cosine_cols("qvec", "vec").alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -941,12 +943,8 @@ def ivf_filtered_topk(
         F.col(vec_col).alias("vec"),
         F.col(meta_col).alias("__meta"),
     )
-    scored = c.join(F.broadcast(cb)).select(
-        "doc",
-        "vec",
-        "__meta",
-        "cid",
-        vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
+    scored = centroid_cosines(
+        c, cb, vec_col="vec", centroid_id="cid", centroid_vec="cv"
     )
     # meta is functionally dependent on doc — adding it to the group
     # key keeps the argmax map-side combinable at unchanged key
@@ -967,15 +965,11 @@ def ivf_filtered_topk(
         F.col(vec_col).alias("qvec"),
         F.col(want_col).alias("__want"),
     )
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id",
-        "qvec",
-        "__want",
-        "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
+    qscored = centroid_cosines(
+        q, cb, vec_col="qvec", centroid_id="cid", centroid_vec="cv"
     )
     wq = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cid")
+        F.col("cos").desc(), F.col("cid")
     )
     probes = (
         qscored.withColumn("__rn", F.row_number().over(wq))
@@ -992,7 +986,7 @@ def ivf_filtered_topk(
     ranked = cand.select(
         "query_id",
         F.col("doc").alias("neighbor_id"),
-        vectors.cosine(F.col("qvec"), F.col("vec")).alias("cosine"),
+        vectors.cosine_cols("qvec", "vec").alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -1036,7 +1030,7 @@ def filtered_cosine_topk(
     scored = cand.select(
         "query_id",
         F.col("doc").alias("neighbor_id"),
-        vectors.cosine(F.col("qvec"), F.col("vec")).alias("cosine"),
+        vectors.cosine_cols("qvec", "vec").alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -1168,12 +1162,11 @@ def ivf_topk_curve(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id", "qvec", "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
+    qscored = centroid_cosines(
+        q, cb, vec_col="qvec", centroid_id="cid", centroid_vec="cv"
     )
     wq = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cid")
+        F.col("cos").desc(), F.col("cid")
     )
     probes = (
         qscored.withColumn("probe_rank", F.row_number().over(wq))
@@ -1190,7 +1183,7 @@ def ivf_topk_curve(
             "query_id",
             "probe_rank",
             F.col("doc").alias("neighbor_id"),
-            vectors.cosine(F.col("qvec"), F.col("vec")).alias("cosine"),
+            vectors.cosine_cols("qvec", "vec").alias("cosine"),
         )
         # |nprobes| consumers below — without the checkpoint the
         # corpus assignment + candidate join re-executes per depth
@@ -1239,6 +1232,9 @@ def semdedup_pairs(
 
     ``assigned``: (id, vec, centroid_id) from :func:`ivf_assign`.
     Output: (id_a, id_b) with id_a < id_b and cosine >= threshold.
+    The verify reads per-row norms staged after the repartition
+    (``vectors.stage``): one fold per candidate pair, and the shuffle
+    still carries the input vectors, not their double casts.
     """
     # Materialize the assignment ONCE: it feeds three consumers (the
     # size aggregate and BOTH self-join sides), and Spark performs no
@@ -1271,25 +1267,28 @@ def semdedup_pairs(
     # executor cores on a cluster); AQE never coalesces a
     # user-numbered repartition.
     n_parts = max(2, assigned.sparkSession.sparkContext.defaultParallelism)
-    keyed = keyed.repartition(n_parts, "centroid_id", "__sub")
+    keyed = vectors.stage(
+        keyed.repartition(n_parts, "centroid_id", "__sub"),
+        vec_col, "centroid_id", "__sub", id_col,
+    )
     l = keyed.select(
         "centroid_id",
         "__sub",
         F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
+        F.col("__v").alias("va"),
+        F.col("__n").alias("na"),
     )
     r = keyed.select(
         "centroid_id",
         "__sub",
         F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
+        F.col("__v").alias("vb"),
+        F.col("__n").alias("nb"),
     )
     return (
         l.join(r, ["centroid_id", "__sub"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            vectors.cosine(F.col("vec_a"), F.col("vec_b")) >= threshold
-        )
+        .filter(vectors.staged_cosine("va", "na", "vb", "nb") >= threshold)
         .select("id_a", "id_b")
     )
 
@@ -1379,7 +1378,7 @@ def embedding_near_duplicates(
             F.col("doc").alias("id_b"), F.col("vec").alias("vec_b"), "bucket"
         )
         pairs = l.join(r, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    cos = vectors.cosine(F.col("vec_a"), F.col("vec_b"))
+    cos = vectors.cosine_cols("vec_a", "vec_b")
     return pairs.select("id_a", "id_b", cos.alias("cosine")).filter(
         F.col("cosine") >= threshold
     )
@@ -1398,27 +1397,23 @@ def pq_subvectors(
     df: DataFrame, *, vec_col: str, id_col: str, m: int, dsub: int
 ) -> DataFrame:
     """(id, s, sv): subspace s's ``dsub``-dim slice of every vector.
-    Static inline of M struct literals — no UDF, no shuffle."""
-    parts = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.slice(F.col(vec_col), s * dsub + 1, dsub).alias("sv"),
-            )
-            for s in range(m)
-        ]
+    Static inline of M struct literals in one ``selectExpr`` — no UDF,
+    no shuffle, one JVM call to build."""
+    parts = ", ".join(
+        f"named_struct('s', {s}, 'sv', slice({vec_col}, {s * dsub + 1}, {dsub}))"
+        for s in range(m)
     )
-    return df.select(F.col(id_col).alias("id"), F.inline(parts))
+    return df.selectExpr(f"{id_col} AS id", f"inline(array({parts}))")
 
 
-def _sq_l2(a, b):
-    """Left-fold squared L2 over double-cast elements — the exact op
-    order the DuckDB oracle reproduces."""
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
+def _sq_l2(a: str, b: str) -> Column:
+    """Left-fold squared L2 over double-cast elements of two named
+    array columns — the exact op order the DuckDB oracle reproduces.
+    One SQL expression: one JVM call to build."""
+    diff = "(cast(x as double) - cast(y as double))"
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {diff} * {diff}), 0D, (acc, d) -> acc + d)"
     )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d)
 
 
 def pq_encode(
@@ -1444,16 +1439,15 @@ def pq_encode(
         "id",
         "s",
         "j",
-        _sq_l2(F.col("sv"), F.col("cv")).alias("dist"),
+        _sq_l2("sv", "cv").alias("dist"),
     )
     codes = scored.groupBy("id", "s").agg(
-        F.min_by("j", F.struct("dist", "j")).alias("code")
+        F.expr("min_by(j, struct(dist, j)) AS code")
     )
     return codes.groupBy("id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("s", "code"))),
-            lambda x: x["code"],
-        ).alias("codes")
+        F.expr(
+            "transform(array_sort(collect_list(struct(s, code))), x -> x.code) AS codes"
+        )
     )
 
 
@@ -1485,7 +1479,7 @@ def pq_lloyd_step(
     from ..queries._util import round_to
 
     scored = sub.join(F.broadcast(codebook), "s").select(
-        "id", "s", "sv", "j", _sq_l2(F.col("sv"), F.col("cv")).alias("dist")
+        "id", "s", "sv", "j", _sq_l2("sv", "cv").alias("dist")
     )
     assigned = scored.groupBy("id", "s").agg(
         F.min_by(F.struct("j", "sv"), F.struct("dist", "j")).alias("m")
@@ -1517,7 +1511,7 @@ def pq_adc_topk(
     table entries, folded in subspace order so the float sum is
     deterministic. Exact top-k by (distance, id)."""
     qtable = query_sub.join(F.broadcast(codebook), "s").select(
-        F.col("s").alias("qs"), "j", _sq_l2(F.col("qv"), F.col("cv")).alias("qd")
+        F.col("s").alias("qs"), "j", _sq_l2("qv", "cv").alias("qd")
     )
     exploded = codes.select(
         "id", F.posexplode("codes").alias("s", "code")
@@ -1527,14 +1521,10 @@ def pq_adc_topk(
         (F.col("s") == F.col("qs")) & (F.col("code") == F.col("j")),
     ).select("id", "s", "qd")
     adc = per_sub.groupBy("id").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("s", "qd"))),
-                lambda x: x["qd"],
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ).alias("adc_dist")
+        F.expr(
+            "aggregate(transform(array_sort(collect_list(struct(s, qd))), "
+            "x -> x.qd), 0D, (acc, d) -> acc + d) AS adc_dist"
+        )
     )
     return adc.orderBy("adc_dist", "id").limit(k)
 
@@ -1633,7 +1623,7 @@ def ivfpq_adc_topk(
             F.col("query_id").alias("qq"),
             F.col("centroid_id").alias("qc"),
             (F.col("s") * F.lit(65536) + F.col("j")).alias("key"),
-            _sq_l2(F.col("qv"), F.col("cv")).alias("value"),
+            _sq_l2("qv", "cv").alias("value"),
         )
         .groupBy("qq", "qc")
         .agg(
@@ -1801,7 +1791,7 @@ def hard_negatives(
         "anchor_label",
         "neighbor_id",
         "neighbor_label",
-        vectors.cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
+        vectors.cosine_cols("qvec", "cvec").alias("cosine"),
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")

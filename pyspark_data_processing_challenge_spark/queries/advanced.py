@@ -1728,12 +1728,14 @@ PQ_QID = 100  # ADC query vector
 PQ_TOPK = 10
 
 
-def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_codebook(emb: DataFrame) -> DataFrame:
     """Deterministic per-subspace codebook: subvector slices of the
     first PQ_NCODES embeddings (the IVF-codebook convention; a
     production index would Lloyd-train each subspace with the existing
-    kmeans operators — the encode/ADC path is unchanged)."""
-    emb = t(spark, sf_dir, "embeddings")
+    kmeans operators — the encode/ADC path is unchanged). ``emb`` is
+    the caller's embeddings read, before ``spread``: no exchange under
+    the codebook filter, and no second read (each read is a
+    schema-inference job at build time)."""
     cent = emb.filter(F.col("vec_id") < PQ_NCODES)
     return similarity.pq_subvectors(
         cent, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
@@ -1746,10 +1748,10 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     array is flattened to a comma-joined string per the catalog's
     atomic-output convention (raw arrays crash the driver's pandas
     canonicalizer — CORRECTNESS_r05)."""
-    emb = spread(t(spark, sf_dir, "embeddings"))
+    raw = t(spark, sf_dir, "embeddings")
     out = similarity.pq_encode(
-        emb,
-        _pq_codebook(spark, sf_dir),
+        spread(raw),
+        _pq_codebook(raw),
         vec_col="embedding",
         id_col="vec_id",
         m=PQ_M,
@@ -1764,8 +1766,9 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC top-10 for one query vector: distances come from the
     M x 16 query-to-centroid table, never the raw corpus vectors."""
-    emb = spread(t(spark, sf_dir, "embeddings"))
-    cb = _pq_codebook(spark, sf_dir)
+    raw = t(spark, sf_dir, "embeddings")
+    emb = spread(raw)
+    cb = _pq_codebook(raw)
     codes = similarity.pq_encode(
         emb, cb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
     )
@@ -1796,8 +1799,9 @@ def pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on a constant-size candidate set, so recall improves over
     raw ADC at negligible cost. The final window sorts a bounded
     {PQ_SHORTLIST}-row frame — never the corpus."""
-    emb = spread(t(spark, sf_dir, "embeddings"))
-    cb = _pq_codebook(spark, sf_dir)
+    raw = t(spark, sf_dir, "embeddings")
+    emb = spread(raw)
+    cb = _pq_codebook(raw)
     codes = similarity.pq_encode(
         emb, cb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
     )
@@ -1820,7 +1824,7 @@ def pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id",
             "adc_dist",
-            similarity._sq_l2(F.col("embedding"), F.col("qfull")).alias(
+            similarity._sq_l2("embedding", "qfull").alias(
                 "exact_raw"
             ),
         )
@@ -1849,11 +1853,12 @@ def pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     members before encode + ADC. This is the production index path the
     convention-codebook ``pq_topk`` approximates; the recall test
     (tests/test_pq.py) pins trained >= convention."""
-    emb = spread(t(spark, sf_dir, "embeddings"))
+    raw = t(spark, sf_dir, "embeddings")
+    emb = spread(raw)
     sub = similarity.pq_subvectors(
         emb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
     )
-    cb1 = similarity.pq_lloyd_step(sub, _pq_codebook(spark, sf_dir))
+    cb1 = similarity.pq_lloyd_step(sub, _pq_codebook(raw))
     codes = similarity.pq_encode(
         emb, cb1, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
     )
@@ -2044,11 +2049,18 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists by centroid cosine) to bound the candidate set, then PQ ADC
     ranking over only the candidates' codes — raw vectors touched
     exactly once at encode time, never at query time. Composes the
-    oracle-proven ivf_assign and pq_encode/pq_adc_topk pieces."""
-    from ..functions import vectors
+    oracle-proven ivf_assign and pq_encode/pq_adc_topk pieces.
+
+    Only the probed candidates are encoded: codes are per row, so
+    encoding ``emb ⋈ cand`` equals joining the corpus's codes with
+    ``cand``. The assignment and the probe rank score against one
+    staged codebook subtree (``similarity.centroid_cosines``), and the
+    PQ codebook is cut from the same read, so the plan broadcasts each
+    small side once and the build runs one schema-inference job."""
     from .extended import IVF_NCENTROIDS, IVF_NPROBE
 
-    emb = spread(t(spark, sf_dir, "embeddings"))
+    raw = t(spark, sf_dir, "embeddings")
+    emb = spread(raw)
     cent = emb.filter(F.col("vec_id") < IVF_NCENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
@@ -2057,28 +2069,26 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = emb.filter(F.col("vec_id") == PQ_QID)
     probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "cid",
-            vectors.cosine(F.col("embedding"), F.col("cv")).alias("qcos"),
+        similarity.centroid_cosines(
+            q, cent, vec_col="embedding", centroid_id="cid", centroid_vec="cv"
         )
-        .orderBy(F.desc("qcos"), "cid")
+        .orderBy(F.desc("cos"), "cid")
         .limit(IVF_NPROBE)
         .select(F.col("cid").alias("centroid_id"))
     )
+    # candidate set is bounded by the probed lists — broadcast it into
+    # the corpus scan (at petabyte scale with huge lists this becomes a
+    # shuffle-hash join on id; semantics unchanged)
     cand = (
         assign.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("doc") != PQ_QID)
-        .select(F.col("doc").alias("id"))
+        .select(F.col("doc").alias("vec_id"))
     )
-    cb = _pq_codebook(spark, sf_dir)
-    codes = similarity.pq_encode(
-        emb, cb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
+    cb = _pq_codebook(raw)
+    cand_codes = similarity.pq_encode(
+        emb.join(F.broadcast(cand), "vec_id"),
+        cb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB,
     )
-    # candidate set is bounded by the probed lists — broadcast it into
-    # the codes scan (at petabyte scale with huge lists this becomes a
-    # shuffle-hash join on id; semantics unchanged)
-    cand_codes = codes.join(F.broadcast(cand), "id")
     qsub = similarity.pq_subvectors(
         q, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
     ).select("s", F.col("sv").alias("qv"))
@@ -2153,7 +2163,6 @@ def _ivfpq_multi(
     list-independent tables routed through the same operator) — kept
     as the recall baseline the residual form must beat
     (tests/test_pq.py). Output: (query_id, vec_id, adc_dist, rank)."""
-    from ..functions import vectors
     from ..operators.similarity import ivf_residuals, ivfpq_adc_topk
     from .extended import (
         IVF_NCENTROIDS,
@@ -2162,7 +2171,8 @@ def _ivfpq_multi(
         IVF_QUERY_LO,
     )
 
-    emb = spread(t(spark, sf_dir, "embeddings"))
+    raw = t(spark, sf_dir, "embeddings")
+    emb = spread(raw)
     cent0 = emb.filter(F.col("vec_id") < IVF_NCENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
@@ -2205,22 +2215,17 @@ def _ivfpq_multi(
         assign = similarity.ivf_assign(
             emb, cent, centroid_id="cid", centroid_vec="cv"
         )
-        cb = _pq_codebook(spark, sf_dir)
+        cb = _pq_codebook(raw)
         codes = similarity.pq_encode(
             emb, cb, vec_col="embedding", id_col="vec_id", m=PQ_M, dsub=PQ_DSUB
         )
     q = emb.filter(
         (F.col("vec_id") >= IVF_QUERY_LO) & (F.col("vec_id") < IVF_QUERY_HI)
     ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("qcos"), "cid")
+    wq = Window.partitionBy("query_id").orderBy(F.desc("cos"), "cid")
     probes = (
-        q.join(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qe",
-            "cid",
-            "cv",
-            vectors.cosine(F.col("qe"), F.col("cv")).alias("qcos"),
+        similarity.centroid_cosines(
+            q, cent, vec_col="qe", centroid_id="cid", centroid_vec="cv"
         )
         .withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= IVF_NPROBE)
@@ -2484,7 +2489,7 @@ def _rerank_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "id",
         "adc_rank",
-        vectors.cosine(F.col("embedding"), F.col("qe")).alias("cos"),
+        vectors.cosine_cols("embedding", "qe").alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "id")
     return scored.withColumn("rank", F.row_number().over(w))

@@ -919,7 +919,7 @@ def ivf_filtered_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec",
             "__meta",
             "cid",
-            vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
+            vectors.cosine_cols("vec", "cv").alias("cos"),
         )
         assigned = scored.groupBy("doc", "__meta").agg(
             F.max_by(
@@ -939,7 +939,7 @@ def ivf_filtered_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "__want",
             "cid",
-            vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
+            vectors.cosine_cols("qvec", "cv").alias("qcos"),
         )
         wq = Window.partitionBy("query_id").orderBy(
             F.col("qcos").desc(), F.col("cid")
@@ -1431,7 +1431,7 @@ def knn_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "cid",
-        vectors.cosine(F.col("embedding"), F.col("cv")).alias("__cos"),
+        vectors.cosine_cols("embedding", "cv").alias("__cos"),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("__cos").desc(), F.col("cid")
@@ -1469,7 +1469,7 @@ def knn_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored_p = pairs.select(
             "vec_id",
             "neighbor_id",
-            vectors.cosine(F.col("__va"), F.col("__vb")).alias("__c"),
+            vectors.cosine_cols("__va", "__vb").alias("__c"),
         ).groupBy("vec_id", "neighbor_id").agg(F.max("__c").alias("__c"))
         wp = Window.partitionBy("vec_id").orderBy(
             F.col("__c").desc(), F.col("neighbor_id")
@@ -1621,7 +1621,7 @@ def snn_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(qsample), F.col("id_a") != F.col("id_b"))
         .filter(
-            vectors.cosine(F.col("__vq"), F.col("__vn")) >= SNNQ_TAU
+            vectors.cosine_cols("__vq", "__vn") >= SNNQ_TAU
         )
         # truth set = the id_a < id_b HALF-SPACE of the sampled
         # anchors' near-dup pairs (r14 advice corrected the earlier
@@ -1874,7 +1874,7 @@ def ivf_silhouette_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = c.join(F.broadcast(cent)).select(
         "doc",
         "cid",
-        vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
+        vectors.cosine_cols("vec", "cv").alias("cos"),
     )
     top2 = scored.groupBy("doc").agg(
         F.sort_array(
@@ -1967,7 +1967,7 @@ def ivf_staleness_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc",
             "centroid_id",
-            vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
+            vectors.cosine_cols("vec", "cv").alias("cos"),
         )
 
     a0 = assign_cos(cent0)

@@ -662,10 +662,11 @@ def pyds_docs_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_sources.py). Aggregates per language over the
     surviving range. Deliberately sf-independent: the connector is the
     surface under test, not the corpus; the oracle regenerates the
-    same rows arithmetically."""
+    same rows arithmetically. Pushdown is a session setting
+    (``session._DEFAULTS`` turns it on, and Spark refuses the reader
+    without it); the query never writes it."""
     from ..sources import pysource
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     pysource.register(spark)
     df = (
         spark.read.format("synthetic_docs")

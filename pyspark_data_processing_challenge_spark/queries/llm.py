@@ -1148,7 +1148,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         round_to(F.col("__s"), 9).alias("scale"),
         l1_q.alias("q_l1"),
-        round_to(vectors.cosine(F.col("__v"), F.col("__dq")), 6).alias("cos_recon"),
+        round_to(vectors.cosine_cols("__v", "__dq"), 6).alias("cos_recon"),
     )
 
 
@@ -4143,7 +4143,7 @@ def semdedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(qsample), F.col("id_a") != F.col("id_b"))
         .filter(
-            vectors.cosine(F.col("vec_q"), F.col("vec_n"))
+            vectors.cosine_cols("vec_q", "vec_n")
             >= SEMDEDUP_THRESHOLD
         )
         .select("id_a", "id_b")
@@ -4433,7 +4433,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     true_pairs = (
         corpus.join(F.broadcast(qsample), F.col("id_q") != F.col("id_n"))
         .filter(
-            vectors.cosine(F.col("vec_q"), F.col("vec_n")) >= EMB_ND_THRESHOLD
+            vectors.cosine_cols("vec_q", "vec_n") >= EMB_ND_THRESHOLD
         )
         .select("id_q", "id_n")
     )
@@ -4500,7 +4500,7 @@ def lsh_recall_banded_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     true_pairs = (
         corpus.join(F.broadcast(qsample), F.col("id_q") != F.col("id_n"))
         .filter(
-            vectors.cosine(F.col("vec_q"), F.col("vec_n")) >= EMB_ND_THRESHOLD
+            vectors.cosine_cols("vec_q", "vec_n") >= EMB_ND_THRESHOLD
         )
         .select("id_q", "id_n")
     )
@@ -5535,7 +5535,7 @@ def embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = corpus.crossJoin(F.broadcast(bench)).select(
         "vec_id",
         "bench_id",
-        vectors.cosine(F.col("cv"), F.col("bv")).alias("cos"),
+        vectors.cosine_cols("cv", "bv").alias("cos"),
     )
     w = W.partitionBy("vec_id").orderBy(
         F.col("cos").desc(), F.col("bench_id")
@@ -6228,7 +6228,7 @@ def hashed_embedding_planted_cosine(spark: SparkSession, sf_dir: str) -> DataFra
         ).alias("e"),
         "vb",
     ).select(F.col("e.k").alias("base_id"), F.col("e.is_pos").alias("is_pos"), "vb")
-    cos = vectors.cosine(F.col("va"), F.col("vb"))
+    cos = vectors.cosine_cols("va", "vb")
     return (
         a.join(b2, "base_id")
         .select("is_pos", cos.alias("__c"))

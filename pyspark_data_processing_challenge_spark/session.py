@@ -30,6 +30,10 @@ _DEFAULTS: dict[str, str] = {
     # Keep parquet scans pruned + pushed down (defaults, pinned explicitly
     # so a misconfigured cluster profile can't silently disable them).
     "spark.sql.parquet.filterPushdown": "true",
+    # Same for Python data sources (sources/pysource): off by default in
+    # Spark 4.1, and a reader implementing pushFilters() is refused
+    # unless it is on.
+    "spark.sql.python.filterPushdown.enabled": "true",
     # The synthetic events table stores TIMESTAMP(NANOS) parquet, which
     # Spark rejects by default; read as epoch-nanos long and convert
     # explicitly (see queries/_util.events_table).

@@ -109,4 +109,7 @@ class SyntheticDocsReader(DataSourceReader):
 
 
 def register(spark) -> None:
+    """Register ``synthetic_docs``. Its reader implements pushFilters(),
+    which Spark 4.1 refuses unless ``spark.sql.python.filterPushdown.enabled``
+    is on; the engine's session turns it on (``session._DEFAULTS``)."""
     spark.dataSource.register(SyntheticDocsDataSource)

@@ -96,6 +96,20 @@ def test_ivfpq_probes_subset_and_broadcasts(spark):
     assert plans.sort_merge_join_count(top) == 0
 
 
+def test_ivfpq_build_submits_one_job(spark):
+    """Constructing ivfpq_topk runs exactly one Spark job — the
+    embeddings schema inference. The PQ codebook is cut from the same
+    read, and nothing else may execute before the caller's action."""
+    sc = spark.sparkContext
+    group = "ivfpq-build-pin"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        advanced.ivfpq_topk(spark, SF01_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_kmeanspp_seeds_beat_convention_after_one_lloyd_step(spark):
     """VERDICT r09 item 6: k-means++ (maximin) seeding must improve the
     spherical-k-means objective (mean cosine to the assigned centroid)
@@ -175,7 +189,7 @@ def _exact_topk_ids_for(spark, qid):
     )
     exact = (
         emb.crossJoin(F.broadcast(q))
-        .select("vec_id", _sq_l2(F.col("embedding"), F.col("qe")).alias("d"))
+        .select("vec_id", _sq_l2("embedding", "qe").alias("d"))
         .orderBy("d", "vec_id")
         .limit(advanced.PQ_TOPK + 1)
         .collect()

@@ -290,13 +290,12 @@ def test_python_datasource_connector(spark):
     result is deterministic across reads."""
     from pyspark_data_processing_challenge_spark.sources import pysource
 
-    pysource.register(spark)
     # the reader implements pushFilters(), and Spark 4.1.2 REFUSES to
     # even initialize such a reader unless python filter pushdown is on
-    # — set it here so the test doesn't depend on an earlier test in
-    # the shared session having run pyds_docs_pushdown (which sets it
-    # at query time, the driver-facing path)
+    # — the engine's session turns it on (session._DEFAULTS); pin it
+    # here so the test doesn't depend on what an earlier test left set
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    pysource.register(spark)
     df = (
         spark.read.format("synthetic_docs")
         .option("rows", 97)
@@ -373,6 +372,21 @@ def test_orc_round_trip(spark, tmp_path):
     assert back.schema == src.schema
     assert back.exceptAll(src).count() == 0
     assert src.exceptAll(back).count() == 0
+
+
+def test_pyds_docs_pushdown_leaves_session_conf_alone(spark, sf_dir):
+    """Building and running the pushdown query writes no session conf:
+    python filter pushdown comes from the session (session._DEFAULTS),
+    and the query returns the same range as before."""
+    from pyspark_data_processing_challenge_spark.queries import extra
+
+    def conf():
+        return sorted(tuple(r) for r in spark.sql("SET").collect())
+
+    before = conf()
+    rows = extra.pyds_docs_pushdown(spark, sf_dir).collect()
+    assert conf() == before
+    assert sum(r[1] for r in rows) == 1000  # doc_id in [500, 1500)
 
 
 def test_python_datasource_filter_pushdown_prunes_partitions(spark):

@@ -1,11 +1,15 @@
-"""Profile one catalog query: wall time + per-job breakdown.
+"""Profile one catalog query: build and run time + per-job breakdown.
 
 Usage:
     python tools/profile_query.py <query> [reps]
 
-Times qs[name](spark, sf_dir) -> noop sink like bench.run_once, with a
-job-level report from the driver's AppStatusStore (job id, description,
-wall seconds) for the LAST rep, so the cost of a multi-job query
+Times qs[name](spark, sf_dir) -> noop sink like bench.run_once, split
+into two layers per rep: the BUILD (seconds and Spark jobs until the
+query returns its DataFrame — schema inference, eager checkpoints,
+driver-side collects) and the RUN (seconds and jobs of the noop
+write). Jobs are counted by job group. The LAST rep also prints a
+job-level report from the driver's AppStatusStore (job id, layer, wall
+seconds, description), so the cost of a multi-job query
 (localCheckpoints, iterative loops, collects) is attributable. Each
 rep starts from ``_util.reset(spark)`` like the bench.
 """
@@ -22,16 +26,16 @@ from pyspark_data_processing_challenge_spark.queries import _util  # noqa: E402
 from pyspark_data_processing_challenge_spark.session import get_session  # noqa: E402
 
 
-def job_report(spark, min_job_id: int) -> list[tuple[int, float, str]]:
-    """(job id, wall sec, description) for every completed job with
-    id >= min_job_id, from the driver's AppStatusStore (the same data
-    the UI's /api/v1/applications/.../jobs endpoint serves)."""
+def job_report(spark, job_ids) -> list[tuple[int, float, str]]:
+    """(job id, wall sec, description) for every completed job in
+    ``job_ids``, from the driver's AppStatusStore (the same data the
+    UI's /api/v1/applications/.../jobs endpoint serves)."""
     store = spark.sparkContext._jsc.sc().statusStore()
     out = []
     it = store.jobsList(None).iterator()
     while it.hasNext():
         j = it.next()
-        if j.jobId() < min_job_id:
+        if j.jobId() not in job_ids:
             continue
         sub = j.submissionTime()
         comp = j.completionTime()
@@ -59,20 +63,34 @@ def main() -> None:
         spark.read.parquet(f"{sf_dir}/{wt}.parquet").count()
     spark.range(10).write.format("noop").mode("overwrite").save()
 
-    statusTracker = sc.statusTracker()
+    tracker = sc.statusTracker()
     for r in range(reps):
         _util.reset(spark)
-        prior = statusTracker.getJobIdsForGroup(None) or []
-        first_new_job = (max(prior) + 1) if prior else 0
         t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        print(f"rep {r}: {wall:.3f} s")
+        # the group id alone: a group description would replace every
+        # job's own call-site name in the report
+        sc.setLocalProperty("spark.jobGroup.id", f"profile-build-{r}")
+        df = qs[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setLocalProperty("spark.jobGroup.id", f"profile-run-{r}")
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        layer = {
+            jid: kind
+            for kind in ("build", "run")
+            for jid in tracker.getJobIdsForGroup(f"profile-{kind}-{r}")
+        }
+        n_build = sum(1 for k in layer.values() if k == "build")
+        print(
+            f"rep {r}: {t2 - t0:.3f} s = build {t1 - t0:.3f} s ({n_build} jobs)"
+            f" + run {t2 - t1:.3f} s ({len(layer) - n_build} jobs)"
+        )
         if r == reps - 1:
-            jobs = job_report(spark, first_new_job)
+            jobs = job_report(spark, layer)
             print(f"  jobs this rep: {len(jobs)}")
             for jid, sec, desc in jobs:
-                print(f"    job {jid:4d}  {sec:7.3f} s  {desc}")
+                print(f"    job {jid:4d}  {layer[jid]:5s}  {sec:7.3f} s  {desc}")
     spark.stop()
 
 
